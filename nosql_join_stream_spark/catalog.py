@@ -87,7 +87,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None,
     # nondeterministic (the r11 tpch_q11 half-cent ROUND(SUM(double))
     # class) and would flake the driver's value hash.
     perturb = os.environ.get("SPARK_GRAFT_PERTURB")
-    cache_key = (path, perturb, bool(spread))
+    spread_env = os.environ.get("NSJS_CATALOG_SPREAD", "1")
+    cache_key = (path, perturb, bool(spread), spread_env)
     cache = getattr(spark, "_nsjs_table_cache", None)
     if cache is None:
         cache = {}
@@ -108,8 +109,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None,
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     if perturb:
         df = df.repartition(int(perturb))
-    elif (spread and name in _SPREAD_TABLES
-          and os.environ.get("NSJS_CATALOG_SPREAD", "1") != "0"):
+    elif spread and name in _SPREAD_TABLES and spread_env != "0":
         # NSJS_CATALOG_SPREAD=0 disables the spread — the A/B seam the
         # r15 verdict asked for (measure the session-wide default on a
         # fixed query sample before trusting it); production value is

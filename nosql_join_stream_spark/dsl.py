@@ -116,22 +116,6 @@ def q(name: str) -> Q:
     return Q(name)
 
 
-def and_(*qs) -> Column:
-    """Reference ``&&(qs*)`` (mongo/package.scala:101-110)."""
-    out = _to_column(qs[0])
-    for x in qs[1:]:
-        out = out & _to_column(x)
-    return out
-
-
-def or_(*qs) -> Column:
-    """Reference ``∥(qs*)`` (mongo/package.scala:112-120)."""
-    out = _to_column(qs[0])
-    for x in qs[1:]:
-        out = out | _to_column(x)
-    return out
-
-
 def _to_column(x) -> Column:
     if isinstance(x, Q):
         return x.column()

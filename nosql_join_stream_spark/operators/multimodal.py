@@ -98,12 +98,6 @@ def decode_image(payload: bytes) -> "object":
     return png_codec.decode_gray_auto(payload)
 
 
-def _fake_luma(payload: bytes) -> float:
-    """Deterministic stand-in for decoded-pixel statistics: mean byte
-    value of the payload (plays the role of mean luminance)."""
-    return float(sum(payload)) / len(payload) if payload else 0.0
-
-
 def extract_features(media: DataFrame, batch_decode: bool = False) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 

@@ -245,11 +245,6 @@ def _alaw_table() -> np.ndarray:
 ALAW_TABLE = _alaw_table()
 
 
-def alaw_decode(codes: np.ndarray) -> np.ndarray:
-    """Vectorized G.711 A-law expansion: uint8 codes -> int16."""
-    return ALAW_TABLE[np.asarray(codes, dtype=np.uint8)]
-
-
 _FMT_IMA_ADPCM = 0x11  # WAVE_FORMAT_IMA_ADPCM (DVI/Intel ADPCM)
 
 # IMA ADPCM public-spec tables (IMA Digital Audio Focus Group, 1992;

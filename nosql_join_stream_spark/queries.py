@@ -519,9 +519,6 @@ def concat_logs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming (SURVEY §2.7): unbounded log + event-time window
 # ---------------------------------------------------------------------------
 
-_STREAM_SEQ = [0]
-
-
 @register(
     "stream_windowed_counts",
     """
@@ -541,11 +538,8 @@ def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         read_log_stream, run_available_now, windowed_counts)
     from nosql_join_stream_spark.catalog import table_path
-    _STREAM_SEQ[0] += 1
-    name = f"stream_windowed_counts_{_STREAM_SEQ[0]}"
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
-    run_available_now(windowed_counts(stream), name)
-    return spark.table(name)
+    return run_available_now(windowed_counts(stream), "stream_windowed_counts")
 
 
 @register(
@@ -561,12 +555,9 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         dedup_stream, read_log_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    _STREAM_SEQ[0] += 1
-    name = f"stream_dedup_keys_{_STREAM_SEQ[0]}"
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
-    run_available_now(dedup_stream(stream, ["user_id", "event_type"]), name,
-                      output_mode="append")
-    return spark.table(name)
+    return run_available_now(dedup_stream(stream, ["user_id", "event_type"]),
+                             "stream_dedup_keys", output_mode="append")
 
 
 @register(
@@ -585,16 +576,13 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         enrich_stream, read_log_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path, load_table
-    _STREAM_SEQ[0] += 1
-    name = f"stream_enrich_{_STREAM_SEQ[0]}"
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
     cust = load_table(spark, "customer", sf_dir)
     joined = enrich_stream(
         stream, cust, on=stream["user_id"] == cust["c_custkey"],
         select_cols=["event_id", "user_id", "event_type", "value",
                      "c_name", "c_nationkey"])
-    run_available_now(joined, name, output_mode="append")
-    return spark.table(name)
+    return run_available_now(joined, "stream_enrich", output_mode="append")
 
 
 @register(
@@ -616,8 +604,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         interval_join_streams, read_log_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    _STREAM_SEQ[0] += 1
-    name = f"stream_ij_{_STREAM_SEQ[0]}"
     purchases = (read_log_stream(spark, table_path(sf_dir, "events"))
                  .filter("event_type = 'purchase'"))
     clicks = (read_log_stream(spark, table_path(sf_dir, "events"))
@@ -628,8 +614,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("r.event_id").alias("click_id"),
                         F.col("l.user_id").alias("user_id"),
                         F.col("l.value").alias("purchase_value"))
-    run_available_now(out, name, output_mode="append")
-    return spark.table(name)
+    return run_available_now(out, "stream_ij", output_mode="append")
 
 
 @register(
@@ -660,9 +645,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_interval_join_outer(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from nosql_join_stream_spark.streaming.log_stream import (
         interval_join_outer_flush_drain)
     from nosql_join_stream_spark.catalog import table_path
@@ -693,7 +675,8 @@ def stream_interval_join_outer(spark: SparkSession,
         "pass — click-less purchases AND purchase-less clicks, each "
         "NULL-emitted only once the watermark proves no partner can "
         "still arrive (left rows at their own timestamp, right rows "
-        "at ts + interval).  interval_join_full_flush_drain stages "
+        "at ts + interval).  interval_join_outer_flush_drain(how="
+        "'fullOuter') stages "
         "the log plus the per-side far-future flush sentinel and "
         "drains with AvailableNow, after which the parquet sink "
         "equals the batch FULL JOIN row for row, including BOTH "
@@ -704,16 +687,13 @@ def stream_interval_join_outer(spark: SparkSession,
 )
 def stream_interval_join_full(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from nosql_join_stream_spark.streaming.log_stream import (
-        interval_join_full_flush_drain)
+        interval_join_outer_flush_drain)
     from nosql_join_stream_spark.catalog import table_path
     tag = sf_tag(sf_dir)
     run_dir = artifact_dir("nsjs_ijf", tag)
-    df = interval_join_full_flush_drain(
-        spark, table_path(sf_dir, "events"), run_dir)
+    df = interval_join_outer_flush_drain(
+        spark, table_path(sf_dir, "events"), run_dir, how="fullOuter")
     return df.select(F.col("left_id").alias("purchase_id"),
                      F.col("right_id").alias("click_id"),
                      "user_id",
@@ -744,16 +724,15 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         read_log_stream, run_available_now, stateful_session_stats)
     from nosql_join_stream_spark.catalog import table_path
-    _STREAM_SEQ[0] += 1
-    name = f"stream_sessionize_{_STREAM_SEQ[0]}"
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
     # per-key Python state (applyInPandasWithState): keep 8 stores —
     # the r16 sweep shows this form WANTS the parallelism (1.97 s at 8
     # vs 2.43 at 4 vs 3.49 at 2), unlike the stateful-join/agg forms
-    run_available_now(stateful_session_stats(stream), name,
-                      output_mode="update", shuffle_partitions=8)
+    updates = run_available_now(stateful_session_stats(stream),
+                                "stream_sessionize", output_mode="update",
+                                shuffle_partitions=8)
     final = F.max(F.struct("n_events", "n_sessions", "sum_value")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(final)
+    return (updates.groupBy("user_id").agg(final)
             .select("user_id", F.col("s.n_sessions").alias("n_sessions"),
                     F.col("s.n_events").alias("n_events"),
                     F.col("s.sum_value").alias("sum_value")))
@@ -798,11 +777,8 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         read_log_stream, run_available_now, session_window_agg)
     from nosql_join_stream_spark.catalog import table_path
-    _STREAM_SEQ[0] += 1
-    name = f"stream_sesswin_{_STREAM_SEQ[0]}"
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
-    run_available_now(session_window_agg(stream), name)
-    return spark.table(name)
+    return run_available_now(session_window_agg(stream), "stream_sesswin")
 
 
 @register(

@@ -2493,16 +2493,12 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    _STREAM_SEQ[0] += 1
-    name = f"stream_qf_{_STREAM_SEQ[0]}"
     docs = read_table_stream(spark, table_path(sf_dir, "documents"),
                              DOCUMENTS_SCHEMA)
     out = (docs.select("doc_id",
                        text.quality_score(F.col("text")).alias("quality"))
                .filter(F.col("quality") >= 0.7))
-    run_available_now(out, name, output_mode="append")
-    return spark.table(name)
+    return run_available_now(out, "stream_qf", output_mode="append")
 
 
 @register(
@@ -2527,9 +2523,6 @@ def stream_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         EMBEDDINGS_SCHEMA, read_table_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    _STREAM_SEQ[0] += 1
-    name = f"stream_dim_{_STREAM_SEQ[0]}"
     emb = read_table_stream(spark, table_path(sf_dir, "embeddings"),
                             EMBEDDINGS_SCHEMA)
     ex = (emb.select(F.posexplode("embedding").alias("pos", "v"))
@@ -2543,8 +2536,7 @@ def stream_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.round("s", 4).alias("std"),
                      F.round("lo", 4).alias("vmin"),
                      F.round("hi", 4).alias("vmax"))
-    run_available_now(out, name, output_mode="complete")
-    return spark.table(name)
+    return run_available_now(out, "stream_dim", output_mode="complete")
 
 
 @register(
@@ -2802,12 +2794,11 @@ def dedup_index_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_minhash_dedup_ingest(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
     from nosql_join_stream_spark.streaming.log_stream import (
-        DOCUMENTS_SCHEMA, read_table_stream, stream_minhash_dedup)
+        DOCUMENTS_SCHEMA, next_run_id, read_table_stream,
+        stream_minhash_dedup)
 
     e = _engine(spark, sf_dir)
     docs = e.table("documents")
@@ -2822,8 +2813,7 @@ def stream_minhash_dedup_ingest(spark: SparkSession,
         dedup.minhash_pairs_between_bucketed(
             corpus, seed, "text", "doc_id", db=db, location=loc,
             rebuild=True).collect()
-    _STREAM_SEQ[0] += 1
-    run_dir = artifact_dir("nsjs_mhsd", str(_STREAM_SEQ[0]))
+    run_dir = artifact_dir("nsjs_mhsd", str(next_run_id()))
     batch_stream = (read_table_stream(spark, table_path(sf_dir, "documents"),
                                       DOCUMENTS_SCHEMA)
                     .filter(F.col("doc_id") % 10 == 9))
@@ -3295,9 +3285,6 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    _STREAM_SEQ[0] += 1
-    name = f"stream_decon_{_STREAM_SEQ[0]}"
     e = _engine(spark, sf_dir)
     bench_grams = (e.table("documents")
                    .filter(F.col("doc_id") % 25 == 0)
@@ -3316,8 +3303,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per doc and bench_grams is deduped, so a plain count equals the
     # distinct count (streaming forbids distinct aggregates)
     agg = hits.groupBy("id").agg(F.count("*").alias("n_shared"))
-    run_available_now(agg, name, output_mode="complete")
-    return spark.table(name)
+    return run_available_now(agg, "stream_decon", output_mode="complete")
 
 
 @register(
@@ -3367,11 +3353,10 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from nosql_join_stream_spark.streaming.log_stream import (
-        DOCUMENTS_SCHEMA, read_table_stream, stream_ppjoin_dedup)
+        DOCUMENTS_SCHEMA, next_run_id, read_table_stream,
+        stream_ppjoin_dedup)
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    _STREAM_SEQ[0] += 1
-    run_dir = artifact_dir("nsjs_sid", str(_STREAM_SEQ[0]))
+    run_dir = artifact_dir("nsjs_sid", str(next_run_id()))
     e = _engine(spark, sf_dir)
     corpus = e.table("documents").filter(F.col("doc_id") % 10 != 9)
     batch_stream = (read_table_stream(spark,
@@ -4187,12 +4172,10 @@ def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_ann_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
     from nosql_join_stream_spark.streaming.log_stream import (
-        EMBEDDINGS_SCHEMA, read_table_stream, stream_ann_probe)
+        EMBEDDINGS_SCHEMA, next_run_id, read_table_stream, stream_ann_probe)
 
     e = _engine(spark, sf_dir)
     emb = e.table("embeddings")
@@ -4205,8 +4188,7 @@ def stream_ann_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.ann_ivf_partitioned(queries, corpus, k=5, n_cells=16,
                                        nprobe=4, location=loc,
                                        rebuild=True).collect()
-    _STREAM_SEQ[0] += 1
-    run_dir = artifact_dir("nsjs_annprobe", str(_STREAM_SEQ[0]))
+    run_dir = artifact_dir("nsjs_annprobe", str(next_run_id()))
     qstream = (read_table_stream(spark, table_path(sf_dir, "embeddings"),
                                  EMBEDDINGS_SCHEMA)
                .filter(F.col("vec_id") < 10)
@@ -4260,13 +4242,10 @@ def stream_ann_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_quality_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.catalog import table_path
     from nosql_join_stream_spark.operators.sampling import order_hash
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
     from nosql_join_stream_spark.streaming.log_stream import (
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now,
         stateful_quality_ewma)
 
-    _STREAM_SEQ[0] += 1
-    name = f"stream_ewma_{_STREAM_SEQ[0]}"
     docs = read_table_stream(spark, table_path(sf_dir, "documents"),
                              DOCUMENTS_SCHEMA)
     enriched = docs.select(
@@ -4276,10 +4255,10 @@ def stream_quality_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stateful_quality_ewma(enriched, "source", "doc_id",
                                 "quality", "hh", alpha=0.2)
     # per-key Python state: keep 8 stores (see stream_sessionize_stateful)
-    run_available_now(out, name, output_mode="update",
-                      shuffle_partitions=8)
+    updates = run_available_now(out, "stream_ewma", output_mode="update",
+                                shuffle_partitions=8)
     final = F.max(F.struct("n_seen", "ewma")).alias("s")
-    return (spark.table(name).groupBy("source").agg(final)
+    return (updates.groupBy("source").agg(final)
             .select("source", F.col("s.n_seen").alias("n_seen"),
                     F.col("s.ewma").alias("ewma")))
 
@@ -4312,12 +4291,9 @@ def stream_quality_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.catalog import table_path
     from nosql_join_stream_spark.operators.sampling import order_hash
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
     from nosql_join_stream_spark.streaming.log_stream import (
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now,
         stateful_budget_admission)
-    _STREAM_SEQ[0] += 1
-    name = f"stream_budget_{_STREAM_SEQ[0]}"
     docs = read_table_stream(spark, table_path(sf_dir, "documents"),
                              DOCUMENTS_SCHEMA)
     enriched = docs.select(
@@ -4328,9 +4304,8 @@ def stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stateful_budget_admission(enriched, "source", "doc_id",
                                     "n_tokens", "hh", budget=600)
     # per-key Python state: keep 8 stores (see stream_sessionize_stateful)
-    run_available_now(out, name, output_mode="append",
-                      shuffle_partitions=8)
-    return spark.table(name)
+    return run_available_now(out, "stream_budget", output_mode="append",
+                             shuffle_partitions=8)
 
 
 @register(
@@ -4787,19 +4762,17 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from nosql_join_stream_spark import sinks
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
     from nosql_join_stream_spark.streaming.log_stream import (
-        EVENTS_SCHEMA, read_table_stream, stream_cdc_upsert as cdc_stream)
+        EVENTS_SCHEMA, next_run_id, read_table_stream,
+        stream_cdc_upsert as cdc_stream)
 
     e = _engine(spark, sf_dir)
     ev = e.table("events").select("user_id", "ts", "event_id",
                                   "event_type", "value")
-    _STREAM_SEQ[0] += 1
-    run_dir = artifact_dir("nsjs_scdc", str(_STREAM_SEQ[0]))
+    run_dir = artifact_dir("nsjs_scdc", str(next_run_id()))
     tbl = os.path.join(run_dir, "tbl")
     sinks.write_keyed(
         sinks.latest_per_key(ev.filter(F.col("event_id") % 3 != 0),
@@ -5404,19 +5377,17 @@ def pyds_roundtrip_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pyds_stream_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from nosql_join_stream_spark.streaming.log_stream import drain
 
     e = _engine(spark, sf_dir)
     src = _pyds_collection_dir(e, spark, sf_dir)
     tag = sf_tag(sf_dir)
     base = artifact_dir("nsjs_pydsr", tag)
     relay = os.path.join(base, "relay")
-    ckpt = os.path.join(base, "ckpt")
-    q = (spark.readStream.format("json_docs").option("path", src).load()
-         .writeStream.format("json_docs").option("path", relay)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(spark.readStream.format("json_docs").option("path", src).load()
+          .writeStream.format("json_docs").option("path", relay)
+          .option("checkpointLocation", os.path.join(base, "ckpt")))
     return e.load(relay, fmt="json_docs")
 
 
@@ -6093,9 +6064,6 @@ def sketch_token_heavy_hitters(spark: SparkSession,
 )
 def stream_sketch_quantiles_q(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from nosql_join_stream_spark.catalog import table_path
     from nosql_join_stream_spark.streaming.log_stream import (
         stream_sketch_quantiles)
@@ -6625,9 +6593,6 @@ def cdc_snapshot_time_travel(spark: SparkSession,
         "watermark would have silently lost.",
 )
 def stream_late_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from nosql_join_stream_spark.catalog import table_path
     from nosql_join_stream_spark.streaming.log_stream import (
         late_data_quarantine)
@@ -7114,12 +7079,10 @@ def stream_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nosql_join_stream_spark import sinks
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ, artifact_dir
     from nosql_join_stream_spark.streaming.log_stream import (
-        read_log_stream, stream_scd2_enrich)
+        next_run_id, read_log_stream, stream_scd2_enrich)
 
-    _STREAM_SEQ[0] += 1
-    run_dir = artifact_dir("nsjs_scd2pit", str(_STREAM_SEQ[0]))
+    run_dir = artifact_dir("nsjs_scd2pit", str(next_run_id()))
     e = _engine(spark, sf_dir)
     ev = e.table("events")
     dim = sinks.scd2_history(
@@ -8270,22 +8233,12 @@ def multimodal_decode_audio_multi(spark: SparkSession,
 )
 def stream_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    from nosql_join_stream_spark.streaming.log_stream import \
-        run_available_now
-    _STREAM_SEQ[0] += 1
-    name = f"stream_audio_decode_{_STREAM_SEQ[0]}"
-    import os as _os
+    from nosql_join_stream_spark.streaming.log_stream import (
+        read_table_stream, run_available_now)
     path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if _os.path.isfile(path):
-        # the file-stream source monitors a DIRECTORY; point it at the
-        # parent and glob-filter to the one file (read_log_stream's
-        # contract, log_stream.py)
-        reader = reader.option("pathGlobFilter", _os.path.basename(path))
-        path = _os.path.dirname(path)
-    stream = reader.load(path).select("doc_id")
+    stream = read_table_stream(spark, path,
+                               spark.read.parquet(path).schema
+                               ).select("doc_id")
     plant = _wav_plant_kernel()
 
     def decode(batches):
@@ -8311,8 +8264,7 @@ def stream_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "sample_rate long, n_samples long, min_s long, "
                         "max_s long, sum_s long, sum_abs long, "
                         "checksum long"))
-    run_available_now(dec, name, output_mode="append")
-    return spark.table(name)
+    return run_available_now(dec, "stream_audio_decode", output_mode="append")
 
 
 # --- r14: WebDataset tar shard export --------------------------------------
@@ -8702,26 +8654,18 @@ def mine_bitext_margin_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inside the stream, no batch re-crawl.",
 )
 def stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    from nosql_join_stream_spark.streaming.log_stream import \
-        run_available_now
-    _STREAM_SEQ[0] += 1
-    name = f"stream_html_extract_{_STREAM_SEQ[0]}"
+    from nosql_join_stream_spark.streaming.log_stream import (
+        read_table_stream, run_available_now)
     path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if _os.path.isfile(path):
-        reader = reader.option("pathGlobFilter", _os.path.basename(path))
-        path = _os.path.dirname(path)
-    stream = reader.load(path).select("doc_id", "text", "source")
+    stream = read_table_stream(spark, path,
+                               spark.read.parquet(path).schema
+                               ).select("doc_id", "text", "source")
     par = spark.sparkContext.defaultParallelism
     blocks = text.extract_html_text(
         _html_plant(stream.repartition(par)), "html", "doc_id")
-    run_available_now(blocks, name, output_mode="append")
-    return spark.table(name)
+    return run_available_now(blocks, "stream_html_extract",
+                             output_mode="append")
 
 
 # --- r14: WARC crawl ingest (stage zero of the web pipeline) ---------------
@@ -9449,9 +9393,6 @@ def stream_repetition_filter(spark: SparkSession,
     from nosql_join_stream_spark.streaming.log_stream import (
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    from nosql_join_stream_spark.queries import _STREAM_SEQ
-    _STREAM_SEQ[0] += 1
-    name = f"stream_rep_{_STREAM_SEQ[0]}"
     par = spark.sparkContext.defaultParallelism
     # one explicit repartition decouples the heavy HOF expression's
     # parallelism from the source FILE layout (file-stream batches
@@ -9485,8 +9426,7 @@ def stream_repetition_filter(spark: SparkSession,
              .otherwise(F.lit(""))).alias("text"))
     out = (text.repetition_report(planted, "text", "doc_id")
            .withColumnRenamed("id", "doc_id"))
-    run_available_now(out, name, output_mode="append")
-    return spark.table(name)
+    return run_available_now(out, "stream_rep", output_mode="append")
 
 
 _DHASH_ORACLE = """

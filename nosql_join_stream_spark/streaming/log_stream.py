@@ -15,16 +15,77 @@ deployment needs bounded state.
 
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
 import threading
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 #: serializes set/restore of the session-global shuffle-partitions conf
-#: across concurrent run_available_now drains in one session
+#: across concurrent drains in one session
 _SHUFFLE_CONF_LOCK = threading.Lock()
+
+#: Default state-store parallelism for AvailableNow drains.  Each
+#: shuffle partition owns a state store paying load/commit per
+#: micro-batch; r16 swept {32, 8, 4, 2} on the stream family at sf0.1:
+#: 4 beats 8 on every stateful-JOIN/AGG form (interval_join 2.69 ->
+#: 2.22 s, dedup_keys 1.12 -> 0.82, windowed_counts 0.90 -> 0.71) and
+#: 2 starts hurting the per-key Python forms badly (sessionize 1.97 ->
+#: 3.49 at 2).  Per-key applyInPandasWithState callers pass 8
+#: explicitly (their state work parallelizes; see callers).  On a real
+#: cluster size this to key cardinality x executors — env-overridable.
+_DEFAULT_STORES = int(os.environ.get("NSJS_STREAM_STORES", "4"))
+
+#: process-wide sequence behind every drain's unique query name and
+#: run-dir tag
+_RUN_SEQ = itertools.count(1)
+
+
+def next_run_id() -> int:
+    """A process-unique number for naming one drain (memory-sink query
+    name, checkpointed run dir)."""
+    return next(_RUN_SEQ)
+
+
+@contextmanager
+def _state_stores(spark: SparkSession, n: int):
+    """Hold the session's shuffle width at ``n`` while a stateful query
+    starts: each shuffle partition owns a state store that pays
+    load/commit per micro-batch, so a drain wants stores sized to key
+    cardinality × executors, not the batch shuffle default (locally:
+    32 stores cost ~5x more wall than 8 for the same data).  The value
+    is locked into the checkpoint at first start.
+
+    Set/restore runs under a process lock: two concurrent drains in one
+    session would otherwise race on the global and could restore the
+    wrong value.  Spark offers no per-query scope for this conf — it is
+    captured at ``.start()``, so the lock releases before the drain
+    finishes."""
+    with _SHUFFLE_CONF_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def drain(writer: DataStreamWriter, spark: SparkSession | None = None,
+          stores: int | None = None) -> None:
+    """Start ``writer`` with ``Trigger.AvailableNow`` and wait until it
+    has processed everything currently in its source and stopped —
+    the one start/await every drain in the package goes through.
+    ``stores`` (with the writer's ``spark`` session) sets the
+    state-store count for the start; None keeps the session setting."""
+    with _state_stores(spark, stores) if stores else nullcontext():
+        q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+
 
 def _events_schema(ts_dtype: str) -> T.StructType:
     """Stream-source schema for the events log, with ``ts`` declared as
@@ -61,16 +122,8 @@ def read_log_stream(spark: SparkSession, path: str, key=None, offset: int = 0,
     # declared stream schema matches, then normalize to TIMESTAMP once
     # (same contract as catalog.load_table)
     ts_dtype = dict(spark.read.parquet(path).dtypes).get("ts", "timestamp")
-    reader = spark.readStream.schema(_events_schema(ts_dtype)) \
-                  .format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if os.path.isfile(path):
-        # the file-stream source monitors a directory; point it at the
-        # parent and glob-filter to the one log file
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    df = reader.load(path)
+    df = read_table_stream(spark, path, _events_schema(ts_dtype),
+                           max_files_per_trigger)
     if ts_dtype == "bigint":
         # integer `div`: nanos exceed 2^53 (catalog.py note)
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -223,45 +276,37 @@ def enrich_stream(stream: DataFrame, dim: DataFrame, on,
 
 def interval_join_streams(left: DataFrame, right: DataFrame,
                           key: str, within: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Stream-stream inner join with an event-time interval bound:
-    pair each left event with right events of the same key whose
-    timestamp falls in ``[left.ts - within, left.ts]``.
+                          watermark: str = "2 hours",
+                          how: str = "inner") -> DataFrame:
+    """Stream-stream join with an event-time interval bound: pair each
+    left event with right events of the same key whose timestamp falls
+    in ``[left.ts - within, left.ts]``.  ``how`` is Spark's join type:
+
+    - ``inner``: matched pairs only;
+    - ``leftOuter``: plus each unmatched left row, NULL-padded — 'the
+      purchases and the clicks that preceded them, INCLUDING purchases
+      with no preceding click', the attribution query whose unmatched
+      side is the interesting one;
+    - ``fullOuter``: plus the unmatched rows of BOTH sides — click-less
+      purchases AND purchase-less clicks, both abandonment tails in
+      one pass.
 
     The time bound + watermarks are what make this feasible unbounded:
     they let Spark expire buffered rows from BOTH state stores once
     the watermark passes the interval, so state is
     O(events-per-watermark-window), not O(stream history).  Append
-    mode emits each matched pair exactly once → the drained result
-    equals the batch theta join (the oracle).
-    """
-    l = left.withWatermark("ts", watermark).alias("l")
-    r = right.withWatermark("ts", watermark).alias("r")
-    cond = ((F.col(f"l.{key}") == F.col(f"r.{key}"))
-            & (F.col("r.ts") >= F.col("l.ts") - F.expr(f"INTERVAL {within}"))
-            & (F.col("r.ts") <= F.col("l.ts")))
-    return l.join(r, cond, "inner")
+    mode emits each matched pair exactly once → the drained inner
+    result equals the batch theta join (the oracle).
 
-
-def interval_join_streams_outer(left: DataFrame, right: DataFrame,
-                                key: str, within: str = "1 hour",
-                                watermark: str = "2 hours") -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every left event is
-    emitted — paired rows as they match, and the unmatched left rows
-    with NULL right columns once the watermark proves no match can
-    still arrive (outer results are inherently watermark-delayed:
-    Spark must wait out the interval before declaring 'no match').
-    The streaming form of 'purchases and the clicks that preceded
-    them, INCLUDING purchases with no preceding click' — the
-    attribution query whose unmatched side is the interesting one.
-    Same bounded-state contract as the inner form; the drained result
-    equals the batch left join (the oracle) PROVIDED the watermark
-    passes every left timestamp + ``within`` —
-    :func:`interval_join_outer_flush_drain` arranges that
-    deterministically with a far-future flush sentinel.
+    Outer NULL rows are watermark-delayed: Spark emits one only once
+    the watermark proves no partner can still arrive (a left row at
+    its own timestamp, a right row at ``r.ts + within``).  The drained
+    outer result therefore equals the batch outer join only if the
+    watermark passes every timestamp + ``within`` —
+    :func:`interval_join_outer_flush_drain` arranges that.
 
     HAZARD (measured, Spark 4.1): do NOT add a post-join ``filter``
-    on the streaming result — even a left-side-only predicate
+    on an outer streaming result — even a left-side-only predicate
     suppresses the watermark-flush NULL emissions entirely (the
     synthetic pin in tests/test_streaming.py).  Apply result filters
     batch-side after the sink, as the flush drain does."""
@@ -270,7 +315,7 @@ def interval_join_streams_outer(left: DataFrame, right: DataFrame,
     cond = ((F.col(f"l.{key}") == F.col(f"r.{key}"))
             & (F.col("r.ts") >= F.col("l.ts") - F.expr(f"INTERVAL {within}"))
             & (F.col("r.ts") <= F.col("l.ts")))
-    return l.join(r, cond, "leftOuter")
+    return l.join(r, cond, how)
 
 
 def dedup_stream(stream: DataFrame, keys: list[str],
@@ -342,28 +387,46 @@ def stateful_session_stats(stream: DataFrame,
 
 
 def write_stream_files(df: DataFrame, path: str, checkpoint: str,
-                       fmt: str = "parquet",
-                       available_now: bool = True):
+                       fmt: str = "parquet") -> None:
     """Durable streaming sink: checkpointed file output (exactly-once
     via the sink's transaction log + source offsets — restarting over
-    a grown source processes only new data; asserted in tests).
-    ``available_now=True`` drains and stops (backfill mode); False
-    returns the running continuous query."""
-    q = (df.writeStream.format(fmt)
-         .option("path", path)
-         .option("checkpointLocation", checkpoint)
-         .outputMode("append"))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    a grown source processes only new data; asserted in tests),
+    drained and stopped (backfill mode)."""
+    drain(df.writeStream.format(fmt)
+          .option("path", path)
+          .option("checkpointLocation", checkpoint)
+          .outputMode("append"))
+
+
+def _overwrite_per_batch(stream: DataFrame, path: str, checkpoint: str,
+                         probe=None, partition_cols=(),
+                         output_mode: str = "append") -> None:
+    """Drain ``stream`` through ``foreachBatch``, writing each
+    micro-batch (or ``probe(batch)`` for non-empty batches) into its
+    own ``__batch_id=N/`` hive partition by dynamic partition
+    overwrite — the replay-idempotent write of
+    :func:`write_stream_idempotent`."""
+    part_cols = ["__batch_id", *partition_cols]
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if probe is not None:
+            if batch_df.isEmpty():
+                return
+            batch_df = probe(batch_df)
+        (batch_df.withColumn("__batch_id", F.lit(batch_id))
+                 .write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy(*part_cols)
+                 .parquet(path))
+
+    drain(stream.writeStream.foreachBatch(write_batch)
+          .outputMode(output_mode)
+          .option("checkpointLocation", checkpoint))
 
 
 def write_stream_idempotent(df: DataFrame, path: str, checkpoint: str,
                             extra_partition_cols: list[str] | None = None,
-                            available_now: bool = True,
-                            output_mode: str = "append"):
+                            output_mode: str = "append") -> None:
     """Exactly-once streaming file sink via idempotent batch REPLAY —
     the ``foreachBatch`` form production pipelines use when the target
     isn't Spark's own transactional file sink (plain parquet layouts,
@@ -384,26 +447,13 @@ def write_stream_idempotent(df: DataFrame, path: str, checkpoint: str,
     swap, readers see per-batch directories they can compact or
     retention-expire independently, and ``extra_partition_cols``
     (e.g. a time bucket) adds pruning for readers without weakening
-    the idempotency key.
+    the idempotency key.  ``output_mode="update"`` suits stateful
+    upstreams: each batch's partition then holds that batch's
+    emissions.
     """
-    part_cols = ["__batch_id", *(extra_partition_cols or [])]
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("__batch_id", F.lit(batch_id))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy(*part_cols)
-                 .parquet(path))
-
-    q = (df.writeStream.foreachBatch(write_batch)
-         .outputMode(output_mode)  # "update" for stateful upstreams:
-         #  each batch's partition then holds that batch's emissions
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    _overwrite_per_batch(df, path, checkpoint,
+                         partition_cols=extra_partition_cols or (),
+                         output_mode=output_mode)
 
 
 def stateful_quality_ewma(stream: DataFrame, group_col: str,
@@ -462,8 +512,7 @@ def stream_ann_probe(query_stream: DataFrame, index_location: str,
                      out_path: str, checkpoint: str,
                      k: int = 5, nprobe: int = 4,
                      query_id: str = "q_id", vec: str = "embedding",
-                     corpus_filter=None,
-                     available_now: bool = True):
+                     corpus_filter=None) -> None:
     """Online vector retrieval: a STREAM of query vectors probed
     against the standing IVF index, each micro-batch a pruned
     cell-scan probe — the query-service shape a deployed retrieval
@@ -483,25 +532,11 @@ def stream_ann_probe(query_stream: DataFrame, index_location: str,
     """
     from nosql_join_stream_spark.operators.similarity import ann_ivf_probe
 
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = ann_ivf_probe(batch_df, index_location, k=k, nprobe=nprobe,
-                            query_id=query_id, vec=vec,
-                            corpus_filter=corpus_filter)
-        (res.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(out_path))
-
-    q = (query_stream.writeStream.foreachBatch(probe_batch)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    _overwrite_per_batch(
+        query_stream, out_path, checkpoint,
+        probe=lambda b: ann_ivf_probe(b, index_location, k=k, nprobe=nprobe,
+                                      query_id=query_id, vec=vec,
+                                      corpus_filter=corpus_filter))
 
 
 def stream_minhash_dedup(doc_stream: DataFrame, out_path: str,
@@ -510,8 +545,7 @@ def stream_minhash_dedup(doc_stream: DataFrame, out_path: str,
                          id_col: str = "doc_id",
                          db: str = "nsjs_mh_index",
                          threshold: float = 0.6,
-                         min_band_matches: int = 2,
-                         available_now: bool = True):
+                         min_band_matches: int = 2) -> None:
     """Continuous banded dedup at ingest: each micro-batch of arriving
     docs probes the STANDING MinHash band index
     (``dedup.minhash_pairs_between_bucketed`` — batch band rows
@@ -532,34 +566,19 @@ def stream_minhash_dedup(doc_stream: DataFrame, out_path: str,
     from nosql_join_stream_spark.operators.dedup import (
         minhash_pairs_between_bucketed)
 
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pairs = minhash_pairs_between_bucketed(
-            batch_df, batch_df, content_col, id_col,
+    _overwrite_per_batch(
+        doc_stream, out_path, checkpoint,
+        probe=lambda b: minhash_pairs_between_bucketed(
+            b, b, content_col, id_col,
             threshold=threshold, min_band_matches=min_band_matches,
-            db=db, rebuild=False)  # corpus arg unused on probe path
-        (pairs.withColumn("__batch_id", F.lit(batch_id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("__batch_id")
-              .parquet(out_path))
-
-    q = (doc_stream.writeStream.foreachBatch(probe_batch)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+            db=db, rebuild=False))  # corpus arg unused on probe path
 
 
 def stream_ppjoin_dedup(doc_stream: DataFrame, corpus: DataFrame,
                         out_path: str, checkpoint: str,
                         content_col: str = "text",
                         id_col: str = "doc_id",
-                        threshold: float = 0.6,
-                        available_now: bool = True):
+                        threshold: float = 0.6) -> None:
     """EXACT-tier streaming incremental dedup: each micro-batch of
     arriving docs runs the cross-set PPJoin
     (``dedup.ngram_jaccard_pairs_between``) against the static corpus,
@@ -580,78 +599,42 @@ def stream_ppjoin_dedup(doc_stream: DataFrame, corpus: DataFrame,
     from nosql_join_stream_spark.operators.dedup import (
         ngram_jaccard_pairs_between)
 
-    def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pairs = ngram_jaccard_pairs_between(
-            corpus, batch_df, content_col, id_col, threshold=threshold)
-        (pairs.withColumn("__batch_id", F.lit(batch_id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("__batch_id")
-              .parquet(out_path))
-
-    q = (doc_stream.writeStream.foreachBatch(probe_batch)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    _overwrite_per_batch(
+        doc_stream, out_path, checkpoint,
+        probe=lambda b: ngram_jaccard_pairs_between(
+            corpus, b, content_col, id_col, threshold=threshold))
 
 
-#: Default state-store parallelism for AvailableNow drains.  Each
-#: shuffle partition owns a state store paying load/commit per
-#: micro-batch; r16 swept {32, 8, 4, 2} on the stream family at sf0.1:
-#: 4 beats 8 on every stateful-JOIN/AGG form (interval_join 2.69 ->
-#: 2.22 s, dedup_keys 1.12 -> 0.82, windowed_counts 0.90 -> 0.71) and
-#: 2 starts hurting the per-key Python forms badly (sessionize 1.97 ->
-#: 3.49 at 2).  Per-key applyInPandasWithState callers pass 8
-#: explicitly (their state work parallelizes; see callers).  On a real
-#: cluster size this to key cardinality x executors — env-overridable.
-_DEFAULT_STORES = int(os.environ.get("NSJS_STREAM_STORES", "4"))
-
-
-def run_available_now(agg: DataFrame, query_name: str,
+def run_available_now(df: DataFrame, prefix: str,
                       output_mode: str = "complete",
-                      shuffle_partitions: int | None = _DEFAULT_STORES
-                      ) -> None:
-    """Drain everything currently in the source and stop — the batch
-    test harness for streaming queries (Trigger.AvailableNow).
+                      shuffle_partitions: int = _DEFAULT_STORES
+                      ) -> DataFrame:
+    """Drain everything currently in the source into a memory sink
+    and stop — the batch harness for streaming queries
+    (Trigger.AvailableNow).  Returns the sink's table, named
+    ``{prefix}_{n}`` with ``n`` from :func:`next_run_id`, so every call
+    is a fresh query.
 
     Default ``complete`` mode: with a finite backfill, append mode
     withholds windows the watermark hasn't passed, so complete mode is
     the one whose final memory-sink contents equal the batch answer.
+    ``shuffle_partitions`` is the state-store count (see
+    :func:`_state_stores`).
 
-    ``shuffle_partitions`` sizes STATEFUL-operator parallelism: each
-    shuffle partition owns a state store that pays load/commit per
-    micro-batch, so a state-heavy query wants partitions sized to key
-    cardinality × executors, not the batch shuffle default (locally:
-    32 stores cost ~5x more wall than 8 for the same data).  The
-    value is locked into the checkpoint at first start — deliberate
-    here, since each drain uses a fresh query.  ``None`` keeps the
-    session setting.
-
-    The set/restore of the session conf is serialized under a process
-    lock: two concurrent drains in one session would otherwise race on
-    the global and could restore the wrong value (Spark offers no
-    per-query scope for this conf — it's captured at ``.start()``, so
-    the lock can release before the drain finishes).
-    """
-    spark = agg.sparkSession
-    with _SHUFFLE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(shuffle_partitions))
-        try:
-            q = (agg.writeStream.outputMode(output_mode)
-                 .format("memory").queryName(query_name)
-                 .trigger(availableNow=True).start())
-        finally:
-            if shuffle_partitions:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    When the session sets ``spark.sql.streaming.checkpointLocation``,
+    Spark keeps each query's checkpoint under it after the query
+    stops; the drain's own subdir is deleted here, since no later
+    query reuses it (the sink rows live in the driver, so the returned
+    table stays readable)."""
+    spark = df.sparkSession
+    name = f"{prefix}_{next_run_id()}"
+    drain(df.writeStream.outputMode(output_mode)
+          .format("memory").queryName(name),
+          spark, shuffle_partitions)
+    root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    if root and os.path.isdir(os.path.join(root, name)):
+        shutil.rmtree(os.path.join(root, name))
+    return spark.table(name)
 
 
 def _stage_flush_input(events_path: str, inp: str,
@@ -698,143 +681,54 @@ def _stage_flush_input(events_path: str, inp: str,
     }, schema=sch), os.path.join(inp, "zz_flush.parquet"))
 
 
-def interval_join_streams_full(left: DataFrame, right: DataFrame,
-                               key: str, within: str = "1 hour",
-                               watermark: str = "2 hours") -> DataFrame:
-    """FULL OUTER stream-stream interval join: matched pairs as they
-    arrive, PLUS each side's unmatched rows NULL-padded once the
-    watermark proves no partner can still arrive — left rows when it
-    passes their own timestamp (no later right can satisfy
-    ``r.ts <= l.ts``... it must wait out nothing), right rows when it
-    passes ``r.ts + within`` (the last left that could still match).
-    'Purchases and the clicks that preceded them, including
-    click-less purchases AND purchase-less clicks' — both
-    abandonment tails of the attribution query in one pass.  Same
-    bounded-state contract as the inner/left forms (watermark + the
-    two-sided time bound let Spark expire both state stores); the
-    drained result equals the batch FULL JOIN (the oracle) provided
-    the watermark passes every timestamp + ``within`` —
-    :func:`interval_join_full_flush_drain` arranges that with the
-    per-side far-future sentinel.  The no-post-join-filter hazard of
-    the LEFT form applies unchanged (filter batch-side, after the
-    sink)."""
-    l = left.withWatermark("ts", watermark).alias("l")
-    r = right.withWatermark("ts", watermark).alias("r")
-    cond = ((F.col(f"l.{key}") == F.col(f"r.{key}"))
-            & (F.col("r.ts") >= F.col("l.ts") - F.expr(f"INTERVAL {within}"))
-            & (F.col("r.ts") <= F.col("l.ts")))
-    return l.join(r, cond, "fullOuter")
-
-
-def interval_join_full_flush_drain(
+def interval_join_outer_flush_drain(
         spark: SparkSession, events_path: str, run_dir: str,
         left_type: str = "purchase", right_type: str = "click",
         key: str = "user_id", within: str = "1 hour",
-        watermark: str = "2 hours") -> DataFrame:
-    """Deterministically drain the FULL OUTER interval join to its
-    complete batch answer — the r7/r8 flush-drain technique
-    (:func:`interval_join_outer_flush_drain`) applied to the join
-    form with TWO NULL tails.  The staged input carries one
-    far-future sentinel per side, so the final AvailableNow batch
-    pushes the global watermark past every real row's flush point on
-    BOTH sides: every real row is then matched, or NULL-emitted from
-    whichever side it sat on → the parquet sink equals the batch
-    FULL JOIN row for row.  Sentinels carry negative user ids and
-    match nothing real; their own unmatched rows are never flushed
-    (nothing advances the watermark past the maximum timestamp), and
-    the batch-side ``coalesce(key) >= 0`` filter removes any that
-    ever were.  Re-drains of the same ``run_dir`` are checkpointed
-    no-ops."""
+        watermark: str = "2 hours", how: str = "leftOuter") -> DataFrame:
+    """Deterministically drain an outer interval join (``how`` =
+    ``leftOuter`` or ``fullOuter``, see :func:`interval_join_streams`)
+    to its complete batch answer — closing the 'tail emission is
+    batch-schedule-dependent' caveat the outer forms used to carry.
+
+    On a finite backfill the watermark (max event time − delay) never
+    passes the newest rows, so their NULL rows stay withheld forever.
+    The fix is a WATERMARK FLUSH SENTINEL: the source is staged into
+    ``run_dir/in`` with one far-future row per side
+    (:func:`_stage_flush_input`).  ``Trigger.AvailableNow`` then runs
+    the sentinel batch plus a final flush batch, after which every
+    real row is either matched or past-watermark on whichever side it
+    sat → the parquet-sink contents EQUAL the batch outer join, row
+    for row.  Sentinels match nothing real, and their own NULL rows
+    are never flushed because nothing advances the watermark past the
+    maximum timestamp.  The result is filtered to ``key >= 0`` on the
+    coalesced key BATCH-side after the sink, never as a streaming
+    post-join filter (the HAZARD of :func:`interval_join_streams`).
+
+    Output columns: ``left_id``, ``right_id``, ``key``,
+    ``left_value``, ``right_value``.  The checkpoint makes re-drains
+    of the same ``run_dir`` no-ops (zero new files → the reread
+    sink), so repeated calls are cheap and idempotent."""
     inp = os.path.join(run_dir, "in")
     out = os.path.join(run_dir, "out")
-    ckpt = os.path.join(run_dir, "ckpt")
     _stage_flush_input(events_path, inp, left_type, right_type)
     left = read_log_stream(spark, inp).filter(
         F.col("event_type") == left_type)
     right = read_log_stream(spark, inp).filter(
         F.col("event_type") == right_type)
-    j = interval_join_streams_full(left, right, key=key, within=within,
-                                   watermark=watermark)
+    j = interval_join_streams(left, right, key=key, within=within,
+                              watermark=watermark, how=how)
     raw = j.select(F.col("l.event_id").alias("left_id"),
                    F.col("r.event_id").alias("right_id"),
                    F.coalesce(F.col(f"l.{key}"),
                               F.col(f"r.{key}")).alias(key),
                    F.col("l.value").alias("left_value"),
                    F.col("r.value").alias("right_value"))
-    with _SHUFFLE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (raw.writeStream.format("parquet").option("path", out)
-                 .option("checkpointLocation", ckpt).outputMode("append")
-                 .trigger(availableNow=True).start())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.read.parquet(out).filter(F.col(key) >= 0)
-
-
-def interval_join_outer_flush_drain(
-        spark: SparkSession, events_path: str, run_dir: str,
-        left_type: str = "purchase", right_type: str = "click",
-        key: str = "user_id", within: str = "1 hour",
-        watermark: str = "2 hours") -> DataFrame:
-    """Deterministically drain the LEFT OUTER interval join to its
-    complete batch answer — closing the 'tail emission is batch-
-    schedule-dependent' caveat the outer form used to carry.
-
-    Outer NULL rows are watermark-delayed: Spark emits an unmatched
-    left row only once the watermark PROVES no right match can still
-    arrive, and on a finite backfill the watermark (max event time −
-    delay) never passes the newest rows, so the tail stays withheld
-    forever.  The fix is a WATERMARK FLUSH SENTINEL: the source is
-    staged into ``run_dir/in`` (symlinks — no data copied) plus one
-    extra parquet file carrying a far-future row PER SIDE (both event
-    types, at the same timestamp — the global watermark is the MIN
-    across both sides' nodes, so one side alone does not flush; the
-    first sf0.001 probe measured exactly that as 3 withheld rows).
-    ``Trigger.AvailableNow`` then runs the sentinel batch plus a
-    final flush batch, after which every real left row is either
-    matched or past-watermark → the parquet-sink contents EQUAL the
-    batch left join, row for row.
-
-    Sentinels are invisible by construction: they carry negative ids
-    and user ids (match nothing real, and the result is filtered to
-    ``user_id >= 0`` BATCH-side after the sink — never as a streaming
-    post-join filter, which measurably suppresses NULL emission; see
-    :func:`interval_join_streams_outer`), and their own NULL rows are
-    never flushed because nothing advances the watermark past the
-    maximum timestamp.
-
-    The checkpoint makes re-drains of the same ``run_dir`` no-ops
-    (zero new files → the reread sink), so repeated calls are cheap
-    and idempotent."""
-    inp = os.path.join(run_dir, "in")
-    out = os.path.join(run_dir, "out")
-    ckpt = os.path.join(run_dir, "ckpt")
-    _stage_flush_input(events_path, inp, left_type, right_type)
-    left = read_log_stream(spark, inp).filter(
-        F.col("event_type") == left_type)
-    right = read_log_stream(spark, inp).filter(
-        F.col("event_type") == right_type)
-    j = interval_join_streams_outer(left, right, key=key, within=within,
-                                    watermark=watermark)
-    raw = j.select(F.col("l.event_id").alias("left_id"),
-                   F.col("r.event_id").alias("right_id"),
-                   F.col(f"l.{key}").alias(key),
-                   F.col("l.value").alias("left_value"))
-    # stateful-parallelism sizing, same rationale + lock discipline as
-    # run_available_now (8 state stores, not the batch shuffle width)
-    with _SHUFFLE_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (raw.writeStream.format("parquet").option("path", out)
-                 .option("checkpointLocation", ckpt).outputMode("append")
-                 .trigger(availableNow=True).start())
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    # 8 state stores, not the batch shuffle width (_state_stores)
+    drain(raw.writeStream.format("parquet").option("path", out)
+          .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
+          .outputMode("append"),
+          spark, 8)
     return spark.read.parquet(out).filter(F.col(key) >= 0)
 
 
@@ -918,8 +812,7 @@ def stateful_budget_admission(stream: DataFrame, group_col: str,
 def stream_cdc_upsert(stream: DataFrame, path: str, checkpoint: str,
                       key_col: str, order_by: list[str],
                       num_buckets: int = 32,
-                      available_now: bool = True,
-                      delete_col: str | None = None):
+                      delete_col: str | None = None) -> None:
     """Streaming CDC materialization: every micro-batch MERGEs into
     the keyed standing table (``sinks.upsert_keyed``) instead of
     appending — the streaming half of the physical-merge story, and
@@ -967,22 +860,16 @@ def stream_cdc_upsert(stream: DataFrame, path: str, checkpoint: str,
                      .filter(~F.col("__del")).drop("__del"))
             write_keyed(first, path, key_col, num_buckets=num_buckets)
 
-    q = (stream.writeStream.foreachBatch(write_batch)
-         .outputMode("append")
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    drain(stream.writeStream.foreachBatch(write_batch)
+          .outputMode("append")
+          .option("checkpointLocation", checkpoint))
 
 
 def stream_cdc_upsert_snapshot(stream: DataFrame, path: str,
                                checkpoint: str, key_col: str,
                                order_by: list[str],
                                num_buckets: int = 32,
-                               available_now: bool = True,
-                               delete_col: str | None = None):
+                               delete_col: str | None = None) -> None:
     """Streaming CDC into the SNAPSHOT-ISOLATED table: every
     micro-batch merges via ``upsert_keyed_snapshot``, so concurrent
     readers of the continuously-updated serving table always resolve
@@ -1014,14 +901,9 @@ def stream_cdc_upsert_snapshot(stream: DataFrame, path: str,
             write_keyed_snapshot(first, path, key_col,
                                  num_buckets=num_buckets)
 
-    q = (stream.writeStream.foreachBatch(write_batch)
-         .outputMode("append")
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    drain(stream.writeStream.foreachBatch(write_batch)
+          .outputMode("append")
+          .option("checkpointLocation", checkpoint))
 
 
 def stream_sketch_quantiles(spark: SparkSession, events_path: str,
@@ -1084,11 +966,9 @@ def stream_sketch_quantiles(spark: SparkSession, events_path: str,
          .write.mode("overwrite")
          .parquet(os.path.join(sk_dir, f"batch_id={batch_id}")))
 
-    q = (stream.writeStream.foreachBatch(write_batch)
-         .outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(write_batch)
+          .outputMode("append")
+          .option("checkpointLocation", ckpt))
 
     sk = spark.read.parquet(sk_dir)
     merged = sk.agg(
@@ -1167,7 +1047,7 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
     ckpt = os.path.join(run_dir, "ckpt")
     ev = spark.read.parquet(events_path)
 
-    def drain(cutoff) -> None:
+    def drain_slice(cutoff) -> None:
         stream = read_log_stream(spark, inp)
 
         def route(batch_df: DataFrame, batch_id: int) -> None:
@@ -1183,11 +1063,9 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
              .write.mode("overwrite")
              .parquet(os.path.join(wm_dir, f"batch_id={batch_id}")))
 
-        q = (stream.writeStream.foreachBatch(route)
-             .outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(route)
+              .outputMode("append")
+              .option("checkpointLocation", ckpt))
 
     # Staging completeness is gated on an explicit _DONE marker written
     # AFTER drain 2 — not on wm_dir existing (r11 advisor): wm_dir is
@@ -1208,13 +1086,13 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
         os.makedirs(inp, exist_ok=True)
         ev.filter(F.col("event_id") % late_mod != 0) \
           .write.mode("overwrite").parquet(inp)
-        drain(cutoff=None)
+        drain_slice(cutoff=None)
         ev.filter(F.col("event_id") % late_mod == 0) \
           .write.mode("append").parquet(inp)
         from datetime import timedelta
         wm = spark.read.parquet(wm_dir).agg(
             F.max("max_ts").alias("m")).collect()[0]["m"]
-        drain(cutoff=wm - timedelta(seconds=delay_s))
+        drain_slice(cutoff=wm - timedelta(seconds=delay_s))
         with open(done_marker, "w") as f:
             f.write("staged\n")
     return spark.read.parquet(quar).drop("props")
@@ -1223,8 +1101,7 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
 def stream_scd2_enrich(fact_stream: DataFrame, dim: DataFrame,
                        out_path: str, checkpoint: str, on: str,
                        left_ts: str, right_ts: str,
-                       payload: list[str],
-                       available_now: bool = True):
+                       payload: list[str]) -> None:
     """Streaming point-in-time dimension enrichment: each micro-batch
     of fact events picks up the dimension attribute valid AT its
     timestamp from a standing SCD2 history (sinks.scd2_history) — the
@@ -1245,22 +1122,8 @@ def stream_scd2_enrich(fact_stream: DataFrame, dim: DataFrame,
     """
     from nosql_join_stream_spark.operators.join import asof_join
 
-    def enrich_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = asof_join(batch_df, dim, on=on, left_ts=left_ts,
-                        right_ts=right_ts, payload=payload,
-                        direction="backward")
-        (out.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(out_path))
-
-    q = (fact_stream.writeStream.foreachBatch(enrich_batch)
-         .option("checkpointLocation", checkpoint))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return None
-    return q.start()
+    _overwrite_per_batch(
+        fact_stream, out_path, checkpoint,
+        probe=lambda b: asof_join(b, dim, on=on, left_ts=left_ts,
+                                  right_ts=right_ts, payload=payload,
+                                  direction="backward"))

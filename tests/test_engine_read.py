@@ -302,3 +302,16 @@ def test_perturb_seam_reshards_catalog_scans(spark, sf_dir):
     # perturbed loads, and values are identical under any sharding
     after = load_table(spark, "orders", sf_dir)
     assert after.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
+
+
+def test_catalog_spread_env_keys_the_cache(spark, sf_dir, monkeypatch):
+    """Toggling NSJS_CATALOG_SPREAD inside one process must not hand
+    back the other arm's cached DataFrame."""
+    from nosql_join_stream_spark.catalog import load_table
+
+    monkeypatch.setenv("NSJS_CATALOG_SPREAD", "1")
+    spread = load_table(spark, "documents", sf_dir)
+    monkeypatch.setenv("NSJS_CATALOG_SPREAD", "0")
+    plain = load_table(spark, "documents", sf_dir)
+    assert plain is not spread
+    assert load_table(spark, "documents", sf_dir) is plain

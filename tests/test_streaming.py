@@ -4,6 +4,8 @@ AvailableNow must reproduce the batch answer."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,9 +27,12 @@ def test_stream_scan_offset_matches_batch(spark, engine, sf_dir):
 
 def test_windowed_counts_match_batch(spark, engine, sf_dir):
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
-    run_available_now(windowed_counts(stream), "t_win")
+    sink = run_available_now(windowed_counts(stream), "t_win")
+    # the drain's checkpoint subdir is gone; the sink rows stay readable
+    ckpt_root = spark.conf.get("spark.sql.streaming.checkpointLocation")
+    assert not [d for d in os.listdir(ckpt_root) if d.startswith("t_win_")]
     got = {(r.w_start, r.event_type): (r.n_events, r.sum_value)
-           for r in spark.table("t_win").collect()}
+           for r in sink.collect()}
     batch = (engine.table("events")
              .groupBy(F.window("ts", "1 hour"), "event_type")
              .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("s"))
@@ -39,25 +44,25 @@ def test_windowed_counts_match_batch(spark, engine, sf_dir):
 def test_stream_dedup_matches_batch_distinct(spark, engine, sf_dir):
     from nosql_join_stream_spark.streaming.log_stream import dedup_stream
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
-    run_available_now(dedup_stream(stream, ["user_id", "event_type"]),
-                      "t_dedup", output_mode="append")
-    got = {(r.user_id, r.event_type) for r in spark.table("t_dedup").collect()}
+    sink = run_available_now(dedup_stream(stream, ["user_id", "event_type"]),
+                             "t_dedup", output_mode="append")
+    got = {(r.user_id, r.event_type) for r in sink.collect()}
     want = {(r.user_id, r.event_type)
             for r in engine.table("events")
                            .select("user_id", "event_type").distinct().collect()}
     assert got == want
     # append-mode emits each key exactly once
-    assert spark.table("t_dedup").count() == len(want)
+    assert sink.count() == len(want)
 
 
 def test_stateful_sessionize_matches_batch(spark, engine, sf_dir):
     from nosql_join_stream_spark.streaming.log_stream import stateful_session_stats
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
-    run_available_now(stateful_session_stats(stream), "t_sess",
-                      output_mode="update")
+    sink = run_available_now(stateful_session_stats(stream), "t_sess",
+                             output_mode="update")
     final = F.max(F.struct("n_events", "n_sessions", "sum_value")).alias("s")
     got = {r.user_id: (r["s"].n_sessions, r["s"].n_events, r["s"].sum_value)
-           for r in spark.table("t_sess").groupBy("user_id").agg(final).collect()}
+           for r in sink.groupBy("user_id").agg(final).collect()}
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w))
@@ -82,8 +87,8 @@ def test_stream_static_enrich_matches_batch_join(spark, engine, sf_dir):
     joined = enrich_stream(
         stream, cust, on=stream["user_id"] == cust["c_custkey"],
         select_cols=["event_id", "c_name"])
-    run_available_now(joined, "t_enrich", output_mode="append")
-    got = {(r.event_id, r.c_name) for r in spark.table("t_enrich").collect()}
+    sink = run_available_now(joined, "t_enrich", output_mode="append")
+    got = {(r.event_id, r.c_name) for r in sink.collect()}
     want = {(r.event_id, r.c_name)
             for r in engine.table("events")
                            .join(cust, F.col("user_id") == F.col("c_custkey"))
@@ -100,8 +105,8 @@ def test_stream_interval_join_matches_batch(spark, engine, sf_dir):
     out = (interval_join_streams(p, c, key="user_id", within="1 hour")
            .select(F.col("l.event_id").alias("pid"),
                    F.col("r.event_id").alias("cid")))
-    run_available_now(out, "t_ij", output_mode="append")
-    got = {(r.pid, r.cid) for r in spark.table("t_ij").collect()}
+    sink = run_available_now(out, "t_ij", output_mode="append")
+    got = {(r.pid, r.cid) for r in sink.collect()}
     ev = engine.table("events")
     pb = ev.filter("event_type = 'purchase'").alias("p")
     cb = ev.filter("event_type = 'click'").alias("c")
@@ -431,10 +436,9 @@ def test_stream_source_pathless_passthrough(spark):
                                 numPartitions="2")
     assert stream.isStreaming
     assert [f.name for f in stream.schema.fields] == ["timestamp", "value"]
-    run_available_now(stream.selectExpr("value"), "rate_passthrough",
-                      output_mode="append")
-    vals = [r.value for r in spark.sql(
-        "SELECT value FROM rate_passthrough").collect()]
+    sink = run_available_now(stream.selectExpr("value"), "rate_passthrough",
+                             output_mode="append")
+    vals = [r.value for r in sink.collect()]
     assert vals == sorted(vals)  # drained at least zero rows, ordered ids
 
 
@@ -449,8 +453,8 @@ def test_stream_source_file_format_roundtrip(spark, tmp_path):
     stream = read_stream_source(spark, fmt="parquet", path=str(src),
                                 schema="id long, v string")
     assert stream.isStreaming
-    run_available_now(stream, "stream_source_rt", output_mode="append")
-    rows = spark.sql("SELECT * FROM stream_source_rt").collect()
+    rows = run_available_now(stream, "stream_source_rt",
+                             output_mode="append").collect()
     assert sorted((r.id, r.v) for r in rows) == [(1, "a"), (2, "b")]
 
 
@@ -717,20 +721,21 @@ def test_stream_interval_join_outer_contract(spark, engine, sf_dir):
     construction (outer results wait out the interval), so the tail is
     NOT asserted — that is the documented semantic, not a bug."""
     from nosql_join_stream_spark.streaming.log_stream import (
-        interval_join_streams_outer, read_log_stream, run_available_now)
+        interval_join_streams, read_log_stream, run_available_now)
     import datetime
 
     p = (read_log_stream(spark, table_path(sf_dir, "events"))
          .filter("event_type = 'purchase'"))
     c = (read_log_stream(spark, table_path(sf_dir, "events"))
          .filter("event_type = 'click'"))
-    j = interval_join_streams_outer(p, c, key="user_id", within="1 hour")
-    run_available_now(
+    j = interval_join_streams(p, c, key="user_id", within="1 hour",
+                              how="leftOuter")
+    sink = run_available_now(
         j.select(F.col("l.event_id").alias("pid"),
                  F.col("r.event_id").alias("cid"),
                  F.col("l.ts").alias("pts")),
         "t_oj_contract", output_mode="append")
-    got = {(r.pid, r.cid) for r in spark.table("t_oj_contract").collect()}
+    got = {(r.pid, r.cid) for r in sink.collect()}
 
     ev = engine.table("events")
     pb = ev.filter("event_type = 'purchase'").alias("p")
@@ -770,7 +775,7 @@ def test_interval_join_outer_flush_drain_equals_batch(spark, engine,
 
     run_dir = str(tmp_path / "ijo")
     got_df = interval_join_outer_flush_drain(
-        spark, table_path(sf_dir, "events"), run_dir)
+        spark, table_path(sf_dir, "events"), run_dir, how="leftOuter")
     got = sorted((r.left_id, r.right_id) for r in got_df.collect())
 
     ev = engine.table("events")
@@ -787,21 +792,21 @@ def test_interval_join_outer_flush_drain_equals_batch(spark, engine,
     assert any(cid is None for _, cid in got)  # the tail actually flushed
     # idempotent re-drain: checkpoint sees zero new files
     again = interval_join_outer_flush_drain(
-        spark, table_path(sf_dir, "events"), run_dir)
+        spark, table_path(sf_dir, "events"), run_dir, how="leftOuter")
     assert sorted((r.left_id, r.right_id) for r in again.collect()) == exp
 
 
-def test_interval_join_full_flush_drain_equals_batch(spark, engine,
-                                                     sf_dir, tmp_path):
+def test_interval_join_flush_drain_full_outer_equals_batch(spark, engine,
+                                                           sf_dir, tmp_path):
     """FULL OUTER form (r9): the drained sink equals the batch FULL
     JOIN row for row — BOTH NULL tails present (click-less purchases
     with NULL right, purchase-less clicks with NULL left)."""
     from nosql_join_stream_spark.streaming.log_stream import (
-        interval_join_full_flush_drain)
+        interval_join_outer_flush_drain)
 
     run_dir = str(tmp_path / "ijf")
-    got_df = interval_join_full_flush_drain(
-        spark, table_path(sf_dir, "events"), run_dir)
+    got_df = interval_join_outer_flush_drain(
+        spark, table_path(sf_dir, "events"), run_dir, how="fullOuter")
     got = sorted(((r.left_id, r.right_id) for r in got_df.collect()),
                  key=lambda t: (t[0] is None, t[0] or 0,
                                 t[1] is None, t[1] or 0))
@@ -837,7 +842,7 @@ def test_interval_join_outer_postjoin_filter_suppresses_nulls(
     import pyarrow.parquet as pq
 
     from nosql_join_stream_spark.streaming.log_stream import (
-        interval_join_streams_outer, read_log_stream)
+        interval_join_streams, read_log_stream)
 
     inp = str(tmp_path / "in")
     import os
@@ -862,8 +867,8 @@ def test_interval_join_outer_postjoin_filter_suppresses_nulls(
     def drain(postfilter: bool, name: str):
         p = read_log_stream(spark, inp).filter("event_type = 'purchase'")
         c = read_log_stream(spark, inp).filter("event_type = 'click'")
-        j = interval_join_streams_outer(p, c, key="user_id",
-                                        within="1 hour")
+        j = interval_join_streams(p, c, key="user_id", within="1 hour",
+                                  how="leftOuter")
         sel = j.select(F.col("l.event_id").alias("pid"),
                        F.col("r.event_id").alias("cid"),
                        F.col("l.user_id").alias("user_id"))

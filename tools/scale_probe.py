@@ -994,10 +994,9 @@ def main() -> None:
                       .filter("event_type = 'click'"))
             joined = interval_join_streams(purchases, clicks,
                                            key="user_id", within="1 hour")
-            run_available_now(joined.select("l.event_id"),
-                              f"probe_ij_{factor}", output_mode="append")
-            results["streamij_rows"] = spark.table(
-                f"probe_ij_{factor}").count()
+            results["streamij_rows"] = run_available_now(
+                joined.select("l.event_id"), f"probe_ij_{factor}",
+                output_mode="append").count()
             results["streamij_s"] = round(time.perf_counter() - t0, 2)
 
         if "semdedup" in OPS:
@@ -1046,15 +1045,14 @@ def main() -> None:
             results["pyds_sel_files"] = (
                 f"{sel.rdd.getNumPartitions()}/{n_files}")
             results["pyds_sel_s"] = round(time.perf_counter() - t0, 2)
+            from nosql_join_stream_spark.streaming.log_stream import drain
             t0 = time.perf_counter()
             stream = (spark.readStream.format("json_docs")
                       .option("path", pdir).load())
             qn = f"probe_pyds_{factor}"
-            q = (stream.groupBy("lang").count()
-                 .writeStream.format("memory").queryName(qn)
-                 .outputMode("complete")
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
+            drain(stream.groupBy("lang").count()
+                  .writeStream.format("memory").queryName(qn)
+                  .outputMode("complete"))
             results["pyds_stream_rows"] = int(
                 spark.table(qn).agg(F.sum("count")).first()[0])
             results["pyds_stream_s"] = round(time.perf_counter() - t0, 2)
