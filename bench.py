@@ -22,9 +22,11 @@ numbers leaking into the headline read as an 8× phantom regression):
 
 The headline ``queries``/``value`` report steady state =
 min(warm, loaded).  ``standing_build`` is its own line item: for the
-queries with a build-once-per-process artifact gate, cold − warm is
-exactly that one-time materialization (plus that query's share of
-codegen warm-up — labeled, not hidden in a per-query number).
+queries whose cold run built a standing artifact — the ones that
+appended to ``sinks.STANDING_BUILT`` through ``sinks.standing`` —
+cold − warm is exactly that one-time materialization (plus that
+query's share of codegen warm-up — labeled, not hidden in a
+per-query number).  The set is measured, not hand-kept.
 
 The driver keeps only a ~2000-char tail of stdout, so the full
 207-query dicts can never ride the final line (BENCH_r{1,2,3}.json
@@ -55,39 +57,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # into the filename instead of clobbering the committed closing
 # artifact (r15: the driver's c8 run overwrote it in the working tree).
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-_CANONICAL = (os.path.normpath(SF_DIR).endswith("sf0.1") and _CPUS == "32")
+_CANONICAL = (os.path.basename(os.path.normpath(SF_DIR)) == "sf0.1"
+              and _CPUS.strip().isdigit() and int(_CPUS) == 32)
 _SUFFIX = "" if _CANONICAL else \
     f"_{os.path.basename(os.path.normpath(SF_DIR))}_c{_CPUS}"
 FULL_ARTIFACT = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              f"BENCH_full{_SUFFIX}.json")
 
-# Queries with a build-once-per-process standing artifact (tableExists /
-# isdir / snapshot-exists gate inside the query fn): their COLD run
-# materializes the artifact, every later run is the pure daily-job cost.
-STANDING_BUILD = {
-    "dedup_index_delete_probe",      # standing MinHash band index
-    "stream_minhash_dedup_ingest",   # standing MinHash band index
-    "dedup_incremental_bucketed",    # standing bucketed PPJoin index (r15)
-    "dedup_incremental_minhash",     # standing bucketed band index (r15)
-    "ann_ivf_partitioned",           # standing cell-partitioned IVF
-    "ann_ivf_append_probe",          # standing IVF + append log
-    "ann_ivf_filtered",              # standing IVF with metadata
-    "mine_bitext_margin_ivf",        # standing IVF for margin kNN (r15)
-    "stream_ann_probe",              # standing IVF, streaming probe
-    "multimodal_incremental_chunks",  # standing media chunk index
-    "dedup_resolve_incremental",     # standing CC label table
-    "cdc_upsert_snapshot",           # initial keyed snapshot version
-    "drift_psi_standing",            # standing PSI baseline (r15)
-    "text_quality_ppl_standing",     # standing unigram word-cost table (r15)
-    "export_shard_written",          # one-time sharded corpus export
-    "cdc_snapshot_time_travel",      # v1 load + v2 merge, once
-    "stream_late_quarantine",        # two-drain staging + routing, once
-    "sink_bucketed_join",            # one-time bucketed-table layout
-    "sink_zorder_scan",              # one-time z-ordered re-layout
-}
-
 
 def main():
+    from nosql_join_stream_spark import sinks
     from nosql_join_stream_spark.session import get_session
     from nosql_join_stream_spark.queries import REGISTRY
 
@@ -98,10 +77,14 @@ def main():
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}
+    standing: set[str] = set()
     for name, qd in REGISTRY.items():
+        n_built = len(sinks.STANDING_BUILT)
         t0 = time.perf_counter()
         qd.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         cold[name] = round(time.perf_counter() - t0, 4)
+        if len(sinks.STANDING_BUILT) > n_built:
+            standing.add(name)
         t0 = time.perf_counter()
         qd.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         warm[name] = round(time.perf_counter() - t0, 4)
@@ -120,7 +103,7 @@ def main():
 
     timings = {n: round(min(warm[n], loaded[n]), 4) for n in cold}
     standing_build = {n: round(max(cold[n] - warm[n], 0.0), 4)
-                      for n in sorted(STANDING_BUILD) if n in cold}
+                      for n in sorted(standing)}
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None

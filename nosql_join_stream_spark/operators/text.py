@@ -871,6 +871,12 @@ def extract_html_text(df, html_col: str, id_col: str,
     stop = frozenset(STOPWORDS["en"])
     pt = tuple(passthrough)
     dtypes = dict(df.dtypes)
+    # pandas reads an integer column holding a NULL as float64 NaN,
+    # which rounds values past 2**53: integer passthroughs cross the
+    # kernel as decimal strings and leave as Python ints (or None), so
+    # the declared Spark type drives the conversion back
+    as_str = {c for c in pt
+              if dtypes[c] in ("tinyint", "smallint", "int", "bigint")}
     pt_schema = "".join(f"{c} {dtypes[c]}, " for c in pt)
     schema = f"{id_col} long, {pt_schema}block_seq int, text string, " \
              "is_boilerplate boolean"
@@ -898,13 +904,18 @@ def extract_html_text(df, html_col: str, id_col: str,
                         extras[i].append(v)
             out = {id_col: pd.Series(ids, dtype="int64")}
             for i, c in enumerate(pt):
-                out[c] = pd.Series(extras[i], dtype=pdf[c].dtype)
+                out[c] = (pd.Series([None if v is None else int(v)
+                                     for v in extras[i]], dtype=object)
+                          if c in as_str else
+                          pd.Series(extras[i], dtype=pdf[c].dtype))
             out["block_seq"] = pd.Series(seqs, dtype="int32")
             out["text"] = texts
             out["is_boilerplate"] = pd.Series(flags, dtype="bool")
             yield pd.DataFrame(out)
 
-    return df.select(id_col, html_col, *pt).mapInPandas(op, schema=schema)
+    return df.select(id_col, html_col,
+                     *[F.col(c).cast("string").alias(c) if c in as_str
+                       else c for c in pt]).mapInPandas(op, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -20,9 +20,10 @@ layout decisions that matter at 100 TB:
 from __future__ import annotations
 
 import math
+import os
 import re
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -74,6 +75,40 @@ def write_observed(df: DataFrame, path: str,
     write_table(observed, path, fmt=fmt, mode=mode,
                 partition_by=partition_by, sort_by=sort_by)
     return obs.get
+
+
+# Every artifact dir ``standing`` built in this process, in build order.
+STANDING_BUILT: list[str] = []
+
+
+def standing(loc: str, build: Callable[[], object]) -> bool:
+    """Build-once gate for a STANDING artifact in the local dir ``loc``
+    (an index, label table, keyed snapshot or export that later calls
+    reuse instead of rebuilding).
+
+    - ``loc/_STANDING`` exists: the artifact is complete; return False
+      without calling ``build`` (the reused case).
+    - ``loc`` holds files but no marker: a build that never finished
+      left them; raise ``RuntimeError`` naming ``loc``.  Nothing is
+      deleted, and a partial write is never served.
+    - otherwise: call ``build()``, then write the marker, record
+      ``loc`` in ``STANDING_BUILT`` and return True.  A ``build`` that
+      raises leaves no marker, so the next call raises as above.
+
+    The marker's leading underscore keeps it out of parquet listings,
+    so ``loc`` may itself be the parquet dir ``build`` writes."""
+    marker = os.path.join(loc, "_STANDING")
+    if os.path.exists(marker):
+        return False
+    if os.path.isdir(loc) and os.listdir(loc):
+        raise RuntimeError(
+            f"{loc} holds a half-written standing artifact (files but "
+            "no _STANDING marker); point at a fresh directory")
+    build()
+    os.makedirs(loc, exist_ok=True)
+    open(marker, "w").close()
+    STANDING_BUILT.append(loc)
+    return True
 
 
 def compact(spark: SparkSession, path: str,
@@ -398,10 +433,10 @@ def write_keyed(df: DataFrame, path: str, key_col: str,
     The bucket layout is recorded in a ``_nsjs_meta`` sidecar INSIDE
     the table dir (leading underscore → invisible to parquet scans),
     written LAST so it doubles as the bootstrap-commit marker: a
-    crash mid-write leaves no meta, and both ``upsert_keyed`` and
-    ``keyed_table_exists`` treat the table as absent.  Reading it
-    through Spark (not ``os.path``) keeps every check valid on
-    HDFS/S3 paths, not just the local filesystem."""
+    crash mid-write leaves no meta, and ``upsert_keyed`` treats the
+    table as absent.  Reading it through Spark (not ``os.path``) keeps
+    every check valid on HDFS/S3 paths, not just the local
+    filesystem."""
     (df.withColumn(_KB, _key_bucket(key_col, num_buckets))
        .repartition(_KB)
        .sortWithinPartitions(key_col)
@@ -442,13 +477,6 @@ def _read_meta(spark: SparkSession, path: str):
                 .json(path + "/_nsjs_meta").first())
     except AnalysisException:
         return None
-
-
-def keyed_table_exists(spark: SparkSession, path: str) -> bool:
-    """True iff a COMPLETELY-written keyed table lives at ``path``
-    (the meta sidecar is written last — partial bootstrap leaves
-    none).  Filesystem-agnostic: goes through Spark's readers."""
-    return _read_meta(spark, path) is not None
 
 
 def read_keyed(spark: SparkSession, path: str) -> DataFrame:

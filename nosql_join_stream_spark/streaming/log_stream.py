@@ -611,9 +611,15 @@ def run_available_now(df: DataFrame, prefix: str,
                       ) -> DataFrame:
     """Drain everything currently in the source into a memory sink
     and stop — the batch harness for streaming queries
-    (Trigger.AvailableNow).  Returns the sink's table, named
-    ``{prefix}_{n}`` with ``n`` from :func:`next_run_id`, so every call
-    is a fresh query.
+    (Trigger.AvailableNow).  The query is named ``{prefix}_{n}`` with
+    ``n`` from :func:`next_run_id`, so every call is a fresh query.
+
+    Returns a DataFrame over the sink's rows, and drops the sink's
+    temp view before returning: the name ``{prefix}_{n}`` no longer
+    resolves (``AnalysisException``), so a long run does not pile up
+    one catalog table per drain.  The returned DataFrame keeps the
+    rows: it still collects, filters and aggregates after the drop,
+    and the rows are freed once it is no longer referenced.
 
     Default ``complete`` mode: with a finite backfill, append mode
     withholds windows the watermark hasn't passed, so complete mode is
@@ -625,7 +631,7 @@ def run_available_now(df: DataFrame, prefix: str,
     Spark keeps each query's checkpoint under it after the query
     stops; the drain's own subdir is deleted here, since no later
     query reuses it (the sink rows live in the driver, so the returned
-    table stays readable)."""
+    DataFrame stays readable)."""
     spark = df.sparkSession
     name = f"{prefix}_{next_run_id()}"
     drain(df.writeStream.outputMode(output_mode)
@@ -634,7 +640,9 @@ def run_available_now(df: DataFrame, prefix: str,
     root = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
     if root and os.path.isdir(os.path.join(root, name)):
         shutil.rmtree(os.path.join(root, name))
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _stage_flush_input(events_path: str, inp: str,
@@ -1040,6 +1048,8 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
     quarantine table (the rows a bare watermark would have silently
     dropped).
     """
+    from nosql_join_stream_spark.sinks import standing
+
     inp = os.path.join(run_dir, "in")
     main = os.path.join(run_dir, "main")
     quar = os.path.join(run_dir, "quarantine")
@@ -1067,23 +1077,7 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
               .outputMode("append")
               .option("checkpointLocation", ckpt))
 
-    # Staging completeness is gated on an explicit _DONE marker written
-    # AFTER drain 2 — not on wm_dir existing (r11 advisor): wm_dir is
-    # created by drain 1's first batch, so a crash between the drains
-    # would make every later call skip staging and hand back a
-    # quarantine missing all stragglers.  A partially-staged run_dir
-    # (wm state present, no marker) fails loudly instead: the
-    # checkpoint/input state mid-crash is ambiguous, so the honest
-    # recovery is a fresh run_dir, not a silent half-resume.
-    done_marker = os.path.join(run_dir, "_DONE")
-    if not os.path.exists(done_marker):
-        if os.path.isdir(wm_dir):
-            raise RuntimeError(
-                f"late_data_quarantine: {run_dir} is partially staged "
-                f"(watermark state exists but no _DONE marker) — a "
-                f"prior run crashed mid-staging; point at a fresh "
-                f"run_dir")
-        os.makedirs(inp, exist_ok=True)
+    def stage() -> None:
         ev.filter(F.col("event_id") % late_mod != 0) \
           .write.mode("overwrite").parquet(inp)
         drain_slice(cutoff=None)
@@ -1093,8 +1087,13 @@ def late_data_quarantine(spark: SparkSession, events_path: str,
         wm = spark.read.parquet(wm_dir).agg(
             F.max("max_ts").alias("m")).collect()[0]["m"]
         drain_slice(cutoff=wm - timedelta(seconds=delay_s))
-        with open(done_marker, "w") as f:
-            f.write("staged\n")
+
+    # Staging is complete only once BOTH drains ran: wm_dir exists
+    # after drain 1's first batch, so a crash between the drains must
+    # not read as done.  A partially-staged run_dir raises instead of
+    # resuming: the checkpoint/input state mid-crash is ambiguous, so
+    # the honest recovery is a fresh run_dir.
+    standing(run_dir, stage)
     return spark.read.parquet(quar).drop("props")
 
 

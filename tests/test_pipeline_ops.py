@@ -2152,6 +2152,23 @@ def test_extract_html_text_passthrough(spark):
                                 r.is_boilerplate) for r in rows}
 
 
+def test_extract_html_text_passthrough_nulls(spark):
+    # a NULL passthrough value stays NULL, and the other rows keep
+    # their exact int values and types: pandas reads an int column
+    # holding a NULL as float64 NaN, which cannot hold 2**53 + 1
+    big = 2 ** 53 + 1
+    df = spark.createDataFrame(
+        [(1, "<p>alpha beta</p><p>gamma</p>", 200, big),
+         (2, "<p>delta</p>", None, None)],
+        "id long, html string, http_status int, n long")
+    out = text.extract_html_text(df.coalesce(1), "html", "id",
+                                 passthrough=("http_status", "n"))
+    assert dict(out.dtypes)["http_status"] == "int"
+    assert sorted((r.id, r.block_seq, r.http_status, r.n)
+                  for r in out.collect()) == [
+        (1, 0, 200, big), (1, 1, 200, big), (2, 0, None, None)]
+
+
 def test_unigram_viterbi_hand_cases():
     V = text.UNIGRAM_VOCAB_EN_DEMO
     assert text._viterbi_encode_word("the", V) == (1, 380)

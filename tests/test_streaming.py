@@ -28,9 +28,12 @@ def test_stream_scan_offset_matches_batch(spark, engine, sf_dir):
 def test_windowed_counts_match_batch(spark, engine, sf_dir):
     stream = read_log_stream(spark, table_path(sf_dir, "events"))
     sink = run_available_now(windowed_counts(stream), "t_win")
-    # the drain's checkpoint subdir is gone; the sink rows stay readable
+    # the drain's checkpoint subdir and the sink's temp view are gone;
+    # the returned DataFrame still reads the sink rows
     ckpt_root = spark.conf.get("spark.sql.streaming.checkpointLocation")
     assert not [d for d in os.listdir(ckpt_root) if d.startswith("t_win_")]
+    assert not [t for t in spark.catalog.listTables()
+                if t.name.startswith("t_win_")]
     got = {(r.w_start, r.event_type): (r.n_events, r.sum_value)
            for r in sink.collect()}
     batch = (engine.table("events")
