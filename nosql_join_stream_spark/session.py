@@ -120,6 +120,10 @@ def get_session(app_name: str = "nosql_join_stream_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # events.ts may ship as TIMESTAMP(NANOS), which Spark rejects
+        # unless read as int64; catalog.load_table restores TIMESTAMP.
+        # Set here, once, so no read path mutates session conf mid-run.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
@@ -141,6 +145,7 @@ def get_session(app_name: str = "nosql_join_stream_spark",
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
                 str(max(n_cpus * 8, 64)),
             "spark.sql.streaming.checkpointLocation": _stream_ckpt_root(),
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
             **{k: str(v) for k, v in (extra_conf or {}).items()},
         }
         stale = []

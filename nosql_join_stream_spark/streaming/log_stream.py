@@ -117,7 +117,6 @@ def read_log_stream(spark: SparkSession, path: str, key=None, offset: int = 0,
     backpressure (Rx request(n) pages of 8, Akka buffers 32/64 —
     BASELINE.md) becomes declarative trigger pacing.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # footer-only batch peek: learn the physical ts encoding so the
     # declared stream schema matches, then normalize to TIMESTAMP once
     # (same contract as catalog.load_table)

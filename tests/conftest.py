@@ -30,6 +30,5 @@ def engine(spark, sf_dir):
 
 @pytest.fixture(scope="session")
 def orders_cached(engine):
-    df = engine.table("orders").cache()
-    df.count()
-    return df
+    # catalog.load_table already pins broadcast-sized tables in memory
+    return engine.table("orders")

@@ -90,32 +90,51 @@ def test_lint_rejects_r3_failure_shapes(sql, spark_t):
 
 def test_bench_compact_line_fits_driver_tail():
     """The driver keeps only ~2000 chars of bench stdout; the compact
-    final line must fit with margin even if the 10 slowest queries
-    are the 10 LONGEST-named ones (BENCH_r{1,2,3} were lost to an
-    overflowing tail — this guard keeps the regression dead)."""
+    final line must fit with margin even if the slowest queries are
+    the LONGEST-named ones and the anchor carries every anchor
+    and pipeline query (BENCH_r{1,2,3} were lost to an overflowing
+    tail — this guard keeps the regression dead).  The line is built
+    by bench.py's own ``compact_summary`` from a worst-case full dict."""
     import json
 
+    from bench import SLOWEST_N, compact_summary
     from nosql_join_stream_spark.queries import REGISTRY
+    from tools.bench_anchor import ANCHOR_QUERIES, PIPELINE_ANCHOR_QUERIES
 
-    names = sorted(REGISTRY, key=len, reverse=True)[:10]
-    slowest = {n: 9999.9999 for n in names}
-    compact = {
+    # longest names get the largest walls, so they are the slowest
+    timings = {n: round(9999.9999 - i, 4) for i, n in
+               enumerate(sorted(REGISTRY, key=len, reverse=True))}
+    per = {n: {"spark_s": 9999.9999, "duck_s": 9999.9999,
+               "ratio": 9999.999, "ok": False} for n in ANCHOR_QUERIES}
+    pipe = {n: {"spark_s": 9999.9999, "duck_s": 9999.9999, "duck_reps": 3,
+                "ratio": 9999.999, "ok": False, "note": note}
+            for n, note in PIPELINE_ANCHOR_QUERIES.items()}
+    out = {
         "metric": "registry_total_wall",
         "value": 99999.9999,
         "unit": "sec",
-        "queries": slowest,
-        "queries_truncated_to_slowest": 10,
-        "queries_cold": dict(slowest),
-        "queries_loaded": dict(slowest),
+        "queries": timings,
+        "queries_cold": dict(timings),
+        "queries_warm": dict(timings),
+        "queries_loaded": dict(timings),
+        "standing_build": dict(timings),
         "standing_build_total": 9999.9999,
-        "full_artifact": "BENCH_full.json",
-        "sf": 0.1,
+        "sf": 0.001,
         "cold_total": 99999.9999,
         "loaded_total": 99999.9999,
         "groups": {g: 9999.9999 for g in
                    ("sketch", "stream", "dedup", "text", "embedding",
                     "multimodal", "relational")},
         "n_queries": len(REGISTRY),
+        "anchor": {"queries": per, "median_ratio": 9999.999,
+                   "max_ratio": 9999.999, "ok": False, "reps": 7,
+                   "target": 2.0, "pipeline": pipe,
+                   "pipeline_median_ratio": 9999.999,
+                   "pipeline_max_ratio": 9999.999},
     }
+    compact = compact_summary(out, "BENCH_full_sf0.001_c32.json")
+    assert compact["queries"] == {n: timings[n] for n in
+                                  sorted(REGISTRY, key=len, reverse=True)[:SLOWEST_N]}
+    assert compact["anchor"]["pipeline_max_ratio"] == 9999.999
     line = json.dumps(compact)
     assert len(line) < 1900, len(line)

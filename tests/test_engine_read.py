@@ -315,3 +315,47 @@ def test_catalog_spread_env_keys_the_cache(spark, sf_dir, monkeypatch):
     plain = load_table(spark, "documents", sf_dir)
     assert plain is not spread
     assert load_table(spark, "documents", sf_dir) is plain
+
+
+def test_log_from_reads_one_key_without_range_exchange(engine):
+    """One key's log is one ordered stream: the sort runs in a single
+    partition, so the executed plan has no range exchange (and no
+    sampling job), and the rows come back strictly ascending with the
+    filtered count."""
+    from pyspark.sql import functions as F
+
+    df = engine.log_from("events", key=7, offset=100)
+    ids = [r.event_id for r in df.collect()]
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan, plan
+    assert ids and all(a < b for a, b in zip(ids, ids[1:]))
+    events = engine.table("events")
+    assert len(ids) == events.filter((F.col("user_id") == 7)
+                                     & (F.col("event_id") >= 100)).count()
+
+
+def test_load_table_pins_broadcast_sized_tables(spark, sf_dir, tmp_path):
+    """A table within spark.sql.autoBroadcastJoinThreshold is pinned in
+    Spark's columnar cache; with the threshold disabled (-1) the same
+    table, copied to a fresh sf dir, is scanned from parquet."""
+    import shutil
+
+    from nosql_join_stream_spark.catalog import load_table
+
+    def scans_memory(df):
+        plan = df.filter("n_nationkey >= 0")._jdf.queryExecution() \
+            .executedPlan().toString()
+        return "InMemoryTableScan" in plan
+
+    pinned = load_table(spark, "nation", sf_dir)
+    assert pinned.is_cached and scans_memory(pinned)
+
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plain = load_table(spark, "nation", str(tmp_path))
+    finally:
+        spark.conf.set(key, old)
+    assert not plain.is_cached and not scans_memory(plain)
