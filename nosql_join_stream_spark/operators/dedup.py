@@ -1032,6 +1032,12 @@ def edit_distance_pairs(df: DataFrame, content_col: str, id_col: str,
                     .select("id1", "id2", "distance"))
 
 
+def _table_location(spark, table: str) -> str:
+    """A catalog table's storage location."""
+    return spark.sql(f"DESC EXTENDED {table}") \
+        .where("col_name = 'Location'").head()["data_type"]
+
+
 def dedup_index_compact(spark, db: str, tables_buckets=None,
                         num_buckets: int = 16) -> dict[str, int]:
     """Compact a standing dedup index's bucketed tables — the file-
@@ -1079,8 +1085,14 @@ def dedup_index_compact(spark, db: str, tables_buckets=None,
         # file per (task × bucket-touched), so without this a rewrite
         # read by many tasks can emit MORE files than it compacts —
         # aligned murmur3 hash partitioning puts each bucket's rows in
-        # exactly one task, capping output at num_buckets files/table
-        compacted = (_retract(spark.table(full), tombs, db)
+        # exactly one task, capping output at num_buckets files/table.
+        # The files are read by PATH, without the bucket spec: through
+        # the catalog the planner drops this repartition as redundant
+        # with the bucketed scan, then disables that scan as unneeded
+        # (no join/agg above it), so the write inherits the file-split
+        # tasks and wrote as many files as it read (18 in, 18 out).
+        location = _table_location(spark, full)
+        compacted = (_retract(spark.read.parquet(location), tombs, db)
                      .repartition(num_buckets, *bucket_cols))
         write_bucketed(compacted, f"{full}_compacting",
                        bucket_cols, num_buckets=num_buckets,
@@ -1095,14 +1107,9 @@ def dedup_index_compact(spark, db: str, tables_buckets=None,
         # refreshTable drops the relation cache entry, but the
         # SESSION-SHARED FileStatusCache is keyed by directory PATH —
         # and the managed-table renames above move directories, so the
-        # swapped-in table's path can still carry the PRE-swap listing
-        # (observed as a rare full-suite flake: post-compaction
-        # inputFiles() == the pre-compaction count).  refreshByPath is
-        # the API that purges that cache layer.
-        loc = spark.sql(f"DESC EXTENDED {full}") \
-            .where("col_name = 'Location'").head()
-        if loc is not None:
-            spark.catalog.refreshByPath(loc["data_type"])
+        # swapped-in table's path can still carry the PRE-swap listing.
+        # refreshByPath is the API that purges that cache layer.
+        spark.catalog.refreshByPath(_table_location(spark, full))
         out[t] = len(spark.table(full).inputFiles())
     if tombs is not None:
         _drop_tombstones(spark, db)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nosql_join_stream_spark.queries import (_engine, artifact_dir, register,
@@ -4559,6 +4559,47 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "span_start", "span_end", "span_tokens")
 
 
+def _user_snapshot(ev: DataFrame, path: str) -> int:
+    """Bootstrap the keyed snapshot table of the CDC queries: the
+    latest ``ev`` row per user, 16 buckets on ``user_id``."""
+    return sinks.write_keyed_snapshot(
+        sinks.latest_per_key(ev, "user_id", ["ts", "event_id"]),
+        path, "user_id", num_buckets=16)
+
+
+def _last_event(table: DataFrame) -> DataFrame:
+    """The CDC queries' output row: a user's latest event."""
+    return table.select("user_id",
+                        F.col("event_id").alias("last_event_id"),
+                        F.col("event_type").alias("last_type"),
+                        F.col("value").alias("last_value"))
+
+
+def _cdc_merge(spark: SparkSession, sf_dir: str, prefix: str,
+               delete: Column | None = None) -> DataFrame:
+    """The batch CDC MERGE the ``cdc_upsert_*`` queries share: a
+    standing keyed snapshot table (under ``artifact_dir(prefix)``)
+    bootstraps from the events with ``event_id % 3 != 0``, the rest
+    merge in as one batch, and the latest snapshot is read back.
+    Batch rows where ``delete`` holds are CDC delete ops.  Every run
+    publishes one more manifest version: keep-latest and
+    delete-if-latest are idempotent, so a rerun's snapshot holds the
+    same rows."""
+    ev = _engine(spark, sf_dir).table("events").select(
+        "user_id", "ts", "event_id", "event_type", "value")
+    path = artifact_dir(prefix, sf_tag(sf_dir))
+    batch = ev.filter(F.col("event_id") % 3 == 0)
+    delete_col = None
+    if delete is not None:
+        delete_col = "is_delete"
+        batch = batch.withColumn(delete_col, delete)
+    sinks.standing(path, lambda: _user_snapshot(
+        ev.filter(F.col("event_id") % 3 != 0), path))
+    sinks.upsert_keyed_snapshot(spark, path, batch, "user_id",
+                                ["ts", "event_id"], delete_col=delete_col)
+    return _last_event(sinks.read_keyed_snapshot(spark, path))
+
+
 @register(
     "cdc_upsert_latest",
     """
@@ -4571,39 +4612,20 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type AS last_type, value AS last_value
     FROM r WHERE rn = 1
     """,
-    doc="Physical CDC MERGE (sinks.upsert_keyed): the standing keyed "
-        "table is built from 2/3 of the event log, the remaining "
+    doc="Physical CDC MERGE (sinks.upsert_keyed_snapshot): the standing "
+        "keyed table is built from 2/3 of the event log, the remaining "
         "third upserts in as a batch, and the materialized table must "
         "equal the logical latest_event_per_user VIEW over the full "
         "log — physical merge == logical compaction is the check. "
-        "Batch localCheckpointed once (read-once-source safe); "
-        "touched-bucket list (bounded by num_buckets) prunes the "
-        "standing scan via PartitionFilters; dynamic partition "
-        "overwrite rewrites only touched __kb=N/ dirs, untouched "
-        "buckets byte-identical. Cost tracks batch locality, never "
-        "table size — the MERGE a 100 TB lake runs nightly without "
-        "a table format.",
+        "Batch localCheckpointed once (read-once-source safe); the "
+        "touched-bucket list (bounded by the 16 buckets) limits the "
+        "standing read to those __kb=N/ dirs, and the merge writes "
+        "them under a fresh version dir while untouched buckets stay "
+        "where the manifest points. Cost tracks batch locality, never "
+        "table size — the MERGE a 100 TB lake runs nightly.",
 )
 def cdc_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    ev = e.table("events").select("user_id", "ts", "event_id",
-                                  "event_type", "value")
-    tag = sf_tag(sf_dir)
-    path = artifact_dir("nsjs_cdc", tag)
-    initial = ev.filter(F.col("event_id") % 3 != 0)
-    batch = ev.filter(F.col("event_id") % 3 == 0)
-    sinks.standing(path, lambda: sinks.write_keyed(
-        sinks.latest_per_key(initial, "user_id", ["ts", "event_id"]),
-        path, "user_id", num_buckets=16))
-    # re-running in-process re-upserts the same batch: keep-latest
-    # MERGE is idempotent, so the standing table converges
-    sinks.upsert_keyed(spark, path, batch, "user_id",
-                       ["ts", "event_id"], num_buckets=16)
-    return (sinks.read_keyed(spark, path)
-            .select("user_id",
-                    F.col("event_id").alias("last_event_id"),
-                    F.col("event_type").alias("last_type"),
-                    F.col("value").alias("last_value")))
+    return _cdc_merge(spark, sf_dir, "nsjs_cdc")
 
 
 @register(
@@ -4618,33 +4640,27 @@ def cdc_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
            event_type AS last_type, value AS last_value
     FROM r WHERE rn = 1 AND user_id IN (1, 5, 7, 11, 13)
     """,
-    doc="POINT LOOKUPS on the keyed standing table "
-        "(sinks.keyed_lookup) — the distributed answer to the "
+    doc="POINT LOOKUPS on the keyed snapshot table "
+        "(sinks.keyed_snapshot_lookup) — the distributed answer to the "
         "reference's per-key N+1 find() (storage.scala:390-391): "
-        "each requested key hashes to exactly one __kb=N/ bucket "
-        "dir, the scan's PartitionFilters prune to the touched "
-        "buckets at planning time (plan-asserted in "
-        "tests/test_sinks_salted.py), the key equality pushes into "
-        "the parquet scan, and write-time sortWithinPartitions "
-        "means row-group stats skip within the bucket — a GET "
-        "costs O(|keys| x bucket size), never a table scan.  "
-        "Values equal the logical latest-per-key view restricted "
-        "to the requested keys.",
+        "each requested key hashes to exactly one __kb=N/ bucket, "
+        "and only those buckets' dirs in the latest manifest are "
+        "read (tests/test_sinks_salted.py checks every input file "
+        "sits under the probed key's bucket); the key equality "
+        "pushes into the parquet scan, and write-time "
+        "sortWithinPartitions means row-group stats skip within the "
+        "bucket — a GET costs O(|keys| x bucket size), never a table "
+        "scan.  Values equal the logical latest-per-key view "
+        "restricted to the requested keys.",
 )
 def cdc_keyed_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
     ev = e.table("events").select("user_id", "ts", "event_id",
                                   "event_type", "value")
-    tag = sf_tag(sf_dir)
-    path = artifact_dir("nsjs_cdclk", tag)
-    sinks.standing(path, lambda: sinks.write_keyed(
-        sinks.latest_per_key(ev, "user_id", ["ts", "event_id"]),
-        path, "user_id", num_buckets=16))
-    return (sinks.keyed_lookup(spark, path, [1, 5, 7, 11, 13])
-            .select("user_id",
-                    F.col("event_id").alias("last_event_id"),
-                    F.col("event_type").alias("last_type"),
-                    F.col("value").alias("last_value")))
+    path = artifact_dir("nsjs_cdclk", sf_tag(sf_dir))
+    sinks.standing(path, lambda: _user_snapshot(ev, path))
+    return _last_event(
+        sinks.keyed_snapshot_lookup(spark, path, [1, 5, 7, 11, 13]))
 
 
 @register(
@@ -4726,12 +4742,13 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn = 1
     """,
     doc="STREAMING CDC materialization (streaming/log_stream.py "
-        "stream_cdc_upsert): the keyed standing table bootstraps from "
-        "2/3 of the log in batch mode, the remaining third drains in "
-        "as a change STREAM whose every micro-batch MERGEs via "
-        "foreachBatch -> sinks.upsert_keyed — and the final table "
-        "must equal the logical latest-per-key view over the whole "
-        "log. Exactly-once without __batch_id partitions: keep-latest "
+        "stream_cdc_upsert_snapshot): the keyed snapshot table "
+        "bootstraps from 2/3 of the log in batch mode, the remaining "
+        "third drains in as a change STREAM whose every micro-batch "
+        "MERGEs via foreachBatch -> sinks.upsert_keyed_snapshot and "
+        "publishes one manifest version — and the final table must "
+        "equal the logical latest-per-key view over the whole log. "
+        "Exactly-once without __batch_id partitions: keep-latest "
         "MERGE is replay-idempotent (commit-record-deletion restart "
         "test). Per-batch cost = touched buckets, never table size.",
 )
@@ -4740,29 +4757,23 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nosql_join_stream_spark.catalog import table_path
     from nosql_join_stream_spark.streaming.log_stream import (
-        EVENTS_SCHEMA, next_run_id, read_table_stream,
-        stream_cdc_upsert as cdc_stream)
+        next_run_id, read_log_stream, stream_cdc_upsert_snapshot)
 
     e = _engine(spark, sf_dir)
     ev = e.table("events").select("user_id", "ts", "event_id",
                                   "event_type", "value")
     run_dir = artifact_dir("nsjs_scdc", str(next_run_id()))
     tbl = os.path.join(run_dir, "tbl")
-    sinks.write_keyed(
-        sinks.latest_per_key(ev.filter(F.col("event_id") % 3 != 0),
-                             "user_id", ["ts", "event_id"]),
-        tbl, "user_id", num_buckets=16)
-    stream = (read_table_stream(spark, table_path(sf_dir, "events"),
-                                EVENTS_SCHEMA)
+    _user_snapshot(ev.filter(F.col("event_id") % 3 != 0), tbl)
+    # read_log_stream normalizes ts to TIMESTAMP as the catalog does:
+    # the merge's schema check rejects a retyped column
+    stream = (read_log_stream(spark, table_path(sf_dir, "events"))
               .filter(F.col("event_id") % 3 == 0)
               .select("user_id", "ts", "event_id", "event_type", "value"))
-    cdc_stream(stream, tbl, os.path.join(run_dir, "ckpt"),
-               "user_id", ["ts", "event_id"], num_buckets=16)
-    return (sinks.read_keyed(spark, tbl)
-            .select("user_id",
-                    F.col("event_id").alias("last_event_id"),
-                    F.col("event_type").alias("last_type"),
-                    F.col("value").alias("last_value")))
+    stream_cdc_upsert_snapshot(stream, tbl, os.path.join(run_dir, "ckpt"),
+                               "user_id", ["ts", "event_id"],
+                               num_buckets=16)
+    return _last_event(sinks.read_keyed_snapshot(spark, tbl))
 
 
 @register(
@@ -5733,29 +5744,11 @@ def corpus_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "becomes visible only at the atomic manifest publish, so "
         "readers mid-flight keep their resolved snapshot, a crash "
         "before publish leaves v<N-1> intact, and rollback deletes "
-        "one file. Same oracle as the in-place form: versioned "
+        "one file. Same oracle as cdc_upsert_latest: versioned "
         "physical merge == the logical latest-per-key view.",
 )
 def cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    ev = e.table("events").select("user_id", "ts", "event_id",
-                                  "event_type", "value")
-    tag = sf_tag(sf_dir)
-    path = artifact_dir("nsjs_cdcv", tag)
-    initial = ev.filter(F.col("event_id") % 3 != 0)
-    batch = ev.filter(F.col("event_id") % 3 == 0)
-    sinks.standing(path, lambda: sinks.write_keyed_snapshot(
-        sinks.latest_per_key(initial, "user_id", ["ts", "event_id"]),
-        path, "user_id", num_buckets=16))
-    # replays converge: keep-latest is idempotent, each rerun just
-    # publishes another (identical-content) version
-    sinks.upsert_keyed_snapshot(spark, path, batch, "user_id",
-                                ["ts", "event_id"])
-    return (sinks.read_keyed_snapshot(spark, path)
-            .select("user_id",
-                    F.col("event_id").alias("last_event_id"),
-                    F.col("event_type").alias("last_type"),
-                    F.col("value").alias("last_value")))
+    return _cdc_merge(spark, sf_dir, "nsjs_cdcv")
 
 
 @register(
@@ -5786,27 +5779,8 @@ def cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "window that orders upserts.",
 )
 def cdc_upsert_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    ev = e.table("events").select("user_id", "ts", "event_id",
-                                  "event_type", "value")
-    tag = sf_tag(sf_dir)
-    path = artifact_dir("nsjs_cdcdel", tag)
-    initial = ev.filter(F.col("event_id") % 3 != 0)
-    batch = (ev.filter(F.col("event_id") % 3 == 0)
-               .withColumn("is_delete", F.col("event_type") == "click"))
-    sinks.standing(path, lambda: sinks.write_keyed_snapshot(
-        sinks.latest_per_key(initial, "user_id", ["ts", "event_id"]),
-        path, "user_id", num_buckets=16))
-    # replay-idempotent: keep-latest + delete-if-latest converge on
-    # the same table every rerun
-    sinks.upsert_keyed_snapshot(spark, path, batch, "user_id",
-                                ["ts", "event_id"],
-                                delete_col="is_delete")
-    return (sinks.read_keyed_snapshot(spark, path)
-            .select("user_id",
-                    F.col("event_id").alias("last_event_id"),
-                    F.col("event_type").alias("last_type"),
-                    F.col("value").alias("last_value")))
+    return _cdc_merge(spark, sf_dir, "nsjs_cdcdel",
+                      delete=F.col("event_type") == "click")
 
 
 @register(
@@ -6469,10 +6443,7 @@ def cdc_snapshot_time_travel(spark: SparkSession,
     path = artifact_dir("nsjs_cdctt", tag)
 
     def build():
-        sinks.write_keyed_snapshot(
-            sinks.latest_per_key(ev.filter(F.col("event_id") % 3 != 0),
-                                 "user_id", ["ts", "event_id"]),
-            path, "user_id", num_buckets=16)
+        _user_snapshot(ev.filter(F.col("event_id") % 3 != 0), path)
         sinks.upsert_keyed_snapshot(
             spark, path, ev.filter(F.col("event_id") % 3 == 0),
             "user_id", ["ts", "event_id"])

@@ -264,10 +264,10 @@ def write_log_rolled(df: DataFrame, path: str, order_col: str,
 
 
 # ---------------------------------------------------------------------------
-# Keyed standing table with partition-level MERGE (CDC upsert)
+# CDC folds: SCD2 history, keep-latest compaction, delete markers
 # ---------------------------------------------------------------------------
 
-_KB = "__kb"
+_KB = "__kb"  # hive bucket column of the keyed snapshot table
 
 
 def scd2_history(df: DataFrame, key_col: str,
@@ -421,301 +421,6 @@ def latest_per_key(df: DataFrame, key_col: str,
               .filter(F.col("__rn") == 1).drop("__rn"))
 
 
-def write_keyed(df: DataFrame, path: str, key_col: str,
-                num_buckets: int = 32) -> None:
-    """Materialize a keyed standing table: hive partitions on
-    ``__kb = hash(key) mod num_buckets``.  The bucket directory is the
-    MERGE unit — ``upsert_keyed`` rewrites only the buckets a batch
-    touches, so ``num_buckets`` should scale with table size until one
-    bucket is a comfortable rewrite quantum (e.g. a few GB).  ``df``
-    must already be one-row-per-key (use :func:`latest_per_key`).
-
-    The bucket layout is recorded in a ``_nsjs_meta`` sidecar INSIDE
-    the table dir (leading underscore → invisible to parquet scans),
-    written LAST so it doubles as the bootstrap-commit marker: a
-    crash mid-write leaves no meta, and ``upsert_keyed`` treats the
-    table as absent.  Reading it through Spark (not ``os.path``) keeps
-    every check valid on HDFS/S3 paths, not just the local
-    filesystem."""
-    (df.withColumn(_KB, _key_bucket(key_col, num_buckets))
-       .repartition(_KB)
-       .sortWithinPartitions(key_col)
-       .write.mode("overwrite").partitionBy(_KB).parquet(path))
-    _write_meta(df.sparkSession, path, key_col, num_buckets,
-                schema=_schema_fields(df))
-
-
-def _write_meta(spark: SparkSession, path: str, key_col: str,
-                num_buckets: int, schema: list[dict] | None = None) -> None:
-    """One JSON line via the Hadoop FileSystem API — filesystem-
-    agnostic like a Spark write, but with NO job (a 1-row
-    createDataFrame→write.json costs seconds of session round-trips
-    for 50 bytes of metadata)."""
-    import json
-
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path + "/_nsjs_meta/meta.json")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    doc = {"key_col": key_col, "num_buckets": num_buckets}
-    if schema is not None:
-        doc["schema"] = schema
-    out.write(bytearray(json.dumps(doc).encode()))
-    out.close()
-
-
-def _read_meta(spark: SparkSession, path: str):
-    """The table's layout row, or None if the table was never
-    completely written (no meta == no table).  Explicit schema — a
-    schema-inference pass would double the (per-micro-batch) cost."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return (spark.read.schema(
-                    "key_col string, num_buckets int, "
-                    "schema array<struct<name:string,type:string>>")
-                .json(path + "/_nsjs_meta").first())
-    except AnalysisException:
-        return None
-
-
-def read_keyed(spark: SparkSession, path: str) -> DataFrame:
-    """Read a keyed standing table, hiding the bucket column.  A
-    table whose every key was CDC-deleted has no data files left —
-    it reads back EMPTY with the schema the meta sidecar recorded."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path).drop(_KB)
-    except AnalysisException:
-        meta = _read_meta(spark, path)
-        if meta is None or meta["schema"] is None:
-            raise
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in meta["schema"])
-        return spark.createDataFrame([], ddl)
-
-
-def keyed_lookup(spark: SparkSession, path: str, keys) -> DataFrame:
-    """POINT LOOKUPS on a keyed standing table — the distributed
-    answer to the reference's per-key GET (the N+1 ``find(key)``
-    pattern, storage.scala:390-391), served from the bucket layout
-    without a table scan: each requested key hashes to exactly one
-    ``__kb=N/`` dir, so the scan carries a PartitionFilters entry on
-    the bucket column and READS ONLY the touched buckets — cost is
-    O(|keys| x bucket size), never O(table).  The key equality
-    predicate additionally pushes into the parquet scan
-    (PushedFilters), and bucket dirs are ``sortWithinPartitions`` on
-    the key at write time, so row-group stats skip within the bucket
-    too.
-
-    ``keys``: a Python sequence of key values (bounded by contract —
-    point lookups, not a join; for a large probe side use a proper
-    join against :func:`read_keyed`).  Returns matching rows, bucket
-    column hidden."""
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"no keyed table at {path}")
-    key_col, nb = meta["key_col"], int(meta["num_buckets"])
-    key_vals = list(keys)
-    if not key_vals:
-        return read_keyed(spark, path).limit(0)
-    # bucket ids via the SAME Spark expression that wrote the layout
-    # (a Python reimplementation of xxhash64 would drift); one tiny
-    # local job over |keys| rows
-    ktype = next((f["type"] for f in (meta["schema"] or [])
-                  if f["name"] == key_col), "bigint")
-    kdf = spark.createDataFrame([(k,) for k in key_vals],
-                                f"`{key_col}` {ktype}")
-    kbs = sorted({r.b for r in kdf.select(
-        _key_bucket(key_col, nb).alias("b")).distinct().collect()})
-    return (read_keyed_buckets(spark, path, kbs)
-            .filter(F.col(key_col).isin(key_vals)))
-
-
-def read_keyed_buckets(spark: SparkSession, path: str,
-                       kbs: Sequence[int]) -> DataFrame:
-    """Scan restricted to the given bucket ids — the partition-pruned
-    read :func:`keyed_lookup` and :func:`upsert_keyed` build on.  The
-    filter is on the hive partition column, so pruning happens at
-    planning time (PartitionFilters), not per-row."""
-    return (spark.read.parquet(path)
-            .filter(F.col(_KB).isin([int(b) for b in kbs]))
-            .drop(_KB))
-
-
-def keyed_snapshot_lookup(spark: SparkSession, path: str, keys,
-                          version: int | None = None) -> DataFrame:
-    """Point lookups with SNAPSHOT ISOLATION / time travel: resolve
-    the manifest (latest or ``version``), hash each key to its
-    bucket, and read ONLY those buckets' immutable ``v<N>/__kb=<b>``
-    dirs — a GET against the table exactly as it was at that version,
-    at touched-bucket cost.  Buckets absent from the manifest (all
-    their keys deleted by then) contribute nothing, so a lookup of a
-    deleted key correctly returns no row."""
-    man = _read_manifest(spark, path, version)
-    if man is None:
-        raise ValueError(f"no committed snapshot at {path}")
-    _, key_col, nb, buckets, schema = man
-    key_vals = list(keys)
-    if not key_vals:
-        return read_keyed_snapshot(spark, path, version).limit(0)
-    ktype = next((f["type"] for f in (schema or [])
-                  if f["name"] == key_col), "bigint")
-    kdf = spark.createDataFrame([(k,) for k in key_vals],
-                                f"`{key_col}` {ktype}")
-    kbs = sorted({r.b for r in kdf.select(
-        _key_bucket(key_col, int(nb)).alias("b")).distinct().collect()})
-    dirs = [(kb, buckets[kb]) for kb in kbs if kb in buckets]
-    if not dirs:
-        return read_keyed_snapshot(spark, path, version).limit(0)
-    by_ver: dict[str, list[int]] = {}
-    for kb, ver in dirs:
-        by_ver.setdefault(ver, []).append(kb)
-    parts = []
-    for ver, ver_kbs in sorted(by_ver.items()):
-        base = f"{path}/{ver}"
-        parts.append(spark.read.option("basePath", base).parquet(
-            *[f"{base}/{_KB}={kb}" for kb in sorted(ver_kbs)]))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    out = out.drop(_KB).filter(F.col(key_col).isin(key_vals))
-    if schema is not None:
-        have = set(out.columns)
-        for f in schema:
-            if f["name"] not in have:
-                out = out.withColumn(f["name"],
-                                     F.lit(None).cast(f["type"]))
-        out = out.select(*[f["name"] for f in schema])
-    return out
-
-
-def upsert_keyed(spark: SparkSession, path: str, batch: DataFrame,
-                 key_col: str, order_by: Sequence[str],
-                 num_buckets: int | None = None,
-                 count_rows: bool = True,
-                 delete_col: str | None = None) -> dict:
-    """Partition-level CDC MERGE without a table format: upsert
-    ``batch`` into the standing table at ``path``, keeping per key the
-    row with the greatest ``order_by`` (sequence/event-time ordering;
-    ties prefer the incoming batch).  The physical counterpart of the
-    ``latest_event_per_user`` upsert VIEW — compaction moves from
-    every read to each write.
-
-    Scale shape: the batch is localCheckpointed ONCE (safe for
-    read-once ingest sources — kafka-fed batches are never scanned
-    twice); its touched bucket list (bounded by ``num_buckets``, never
-    rows) prunes the standing-table scan to exactly those hive
-    partitions (PartitionFilters); one keep-latest window shuffles
-    only touched-buckets + batch; a dynamic partition overwrite
-    rewrites exactly the touched ``__kb=N/`` directories — untouched
-    buckets keep their files byte-identical.  Cost tracks batch
-    locality, not table size: a 100 TB table with 4096 buckets absorbs
-    a skewed daily batch by rewriting only the buckets it lands in.
-
-    **SINGLE-WRITER by contract**: bucket dirs are rewritten in place
-    (dynamic partition overwrite), so two concurrent upserts can
-    interleave half-written buckets with no detection point.  Run it
-    from one scheduler slot, or use :func:`upsert_keyed_snapshot`,
-    whose atomic manifest commit detects the race and rebases.
-    Batches must also carry the table's exact column set — schema
-    evolution belongs to the snapshot form, where immutable version
-    dirs keep per-file schemas consistent.
-
-    ``delete_col``: a boolean column marking CDC DELETE rows — a key
-    whose latest (by ``order_by``) op is a delete is REMOVED from the
-    table (full CDC, not just upserts); the marker column never lands
-    in the table, and buckets emptied by deletions have their dirs
-    dropped.  Delete ordering is STATEMENT-LEVEL, the contract of
-    public table formats' MERGE: within one merge, a delete competes
-    with upserts by ``order_by`` (stale deletes lose), but once
-    applied the table keeps no deleted-version memory — an upsert
-    arriving in a LATER batch with an OLDER version resurrects the
-    key.  Apply batches in change-log order (what every CDC source
-    emits); pinned by the sequential-fold property test.
-
-    Returns ``{"buckets_touched": k, "rows_written": n}``.
-    """
-    from pyspark.sql import Window
-
-    if not order_by:
-        raise ValueError("upsert_keyed needs >= 1 order_by column")
-    meta = _read_meta(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"no completely-written keyed table at {path} "
-            "(write_keyed it first — its meta sidecar is the marker)")
-    if meta.key_col != key_col:
-        raise ValueError(
-            f"keyed table at {path} is keyed on {meta.key_col!r}, "
-            f"not {key_col!r}")
-    # the STORED layout wins: hashing a batch with a different bucket
-    # count than the table was built with would strand a key's old row
-    # in a bucket the merge never reads — silent duplicate keys
-    if num_buckets is not None and num_buckets != meta.num_buckets:
-        raise ValueError(
-            f"keyed table at {path} has {meta.num_buckets} buckets; "
-            f"upsert requested {num_buckets}")
-    num_buckets = int(meta.num_buckets)
-    batch = _mark_deletes(batch, delete_col)
-    b = (batch.withColumn(_KB, _key_bucket(key_col, num_buckets))
-              .withColumn("__src", F.lit(1))
-              .localCheckpoint(eager=False))  # the collect materializes
-    touched = [r[_KB] for r in b.select(_KB).distinct().collect()]
-    if not touched:
-        return {"buckets_touched": 0, "rows_written": 0}
-    from pyspark.errors import AnalysisException
-
-    try:
-        existing_raw = spark.read.parquet(path)
-    except AnalysisException:
-        # a previous merge CDC-deleted every key: no data files left,
-        # only the meta sidecar — merge against the empty table with
-        # its recorded schema
-        if meta["schema"] is None:
-            raise
-        ddl = ", ".join(f"`{f['name']}` {f['type']}"
-                        for f in meta["schema"])
-        existing_raw = spark.createDataFrame([], f"{ddl}, `{_KB}` int")
-    existing = (existing_raw
-                .filter(F.col(_KB).isin(touched))
-                .withColumn("__src", F.lit(0))
-                .withColumn("__del", F.lit(False)))
-    w = Window.partitionBy(key_col).orderBy(
-        *[F.col(c).desc() for c in order_by], F.col("__src").desc())
-    # localCheckpoint: the plan reads `path` and the write overwrites
-    # it — materialize survivors first (the compact()/ann_ivf_compact
-    # pattern), bounded by touched buckets only.  A key whose WINNING
-    # row is a delete marker drops out of the table entirely.
-    latest = (existing.unionByName(b)
-              .withColumn("__rn", F.row_number().over(w))
-              .filter((F.col("__rn") == 1) & ~F.col("__del"))
-              .drop("__rn", "__src", "__del")
-              .localCheckpoint())
-    (latest.repartition(_KB)
-           .sortWithinPartitions(key_col)
-           .write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy(_KB).parquet(path))
-    if delete_col is not None:
-        # dynamic partition overwrite only rewrites partitions that
-        # appear in the OUTPUT — a touched bucket whose keys were all
-        # deleted produces no rows and would silently keep its old
-        # files; drop those dirs explicitly
-        survived = {r[_KB] for r in latest.select(_KB).distinct().collect()}
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-            spark._jsc.hadoopConfiguration())
-        for kb in touched:
-            if kb not in survived:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/{_KB}={kb}"), True)
-    # rows_written scans the checkpointed merge result (cheap, no
-    # recompute); per-micro-batch callers skip even that one job
-    return {"buckets_touched": len(touched),
-            "rows_written": latest.count() if count_rows else -1}
-
-
 def _mark_deletes(batch: DataFrame, delete_col: str | None) -> DataFrame:
     """Normalize the CDC op marker: ``__del`` true for rows that are
     DELETIONS of their key (NULL marker = not a delete), the marker
@@ -761,23 +466,19 @@ def retention_expire(spark: SparkSession, path: str, partition_col: str,
 
 
 # ---------------------------------------------------------------------------
-# Versioned keyed table: snapshot-isolated MERGE via immutable manifests
+# Keyed standing table: snapshot-isolated MERGE via immutable manifests
 # ---------------------------------------------------------------------------
 #
-# upsert_keyed rewrites bucket dirs IN PLACE (dynamic partition
-# overwrite) — correct for a single writer, but a reader scanning
-# mid-merge can see a mix of old and new buckets.  The versioned form
-# is the poor-man's table format that fixes it the way Iceberg/Delta
-# do: data files are IMMUTABLE (each merge writes its buckets under a
-# fresh v<N>/ dir), and a tiny numbered manifest maps each bucket to
-# the version that last wrote it.  Readers resolve the highest
-# manifest ONCE and read only dirs it references — a merge landing
-# mid-query changes nothing they hold; publishing is one atomic
-# rename of a new manifest file; rollback is deleting it.  GC drops
-# version dirs no longer referenced.
-
-_MANIFEST_SCHEMA = ("key_col string, num_buckets int, version int, "
-                    "buckets array<struct<kb:int,v:string>>")
+# The table is hive-partitioned on __kb = hash(key) mod num_buckets,
+# and the bucket dir is the MERGE unit: a merge rewrites only the
+# buckets its batch touches.  It does so the way Iceberg/Delta do: data
+# files are IMMUTABLE (each merge writes its buckets under a fresh
+# v<N>/ dir), and a tiny numbered manifest maps each bucket to the
+# version that last wrote it.  Readers resolve the highest manifest
+# ONCE and read only dirs it references — a merge landing mid-query
+# changes nothing they hold; publishing is one atomic rename of a new
+# manifest file; rollback is deleting it.  GC drops version dirs no
+# longer referenced.
 
 
 def _schema_fields(df: DataFrame) -> list[dict]:
@@ -916,7 +617,9 @@ def write_keyed_snapshot(df: DataFrame, path: str, key_col: str,
     the source is scanned exactly once — a read-once or
     non-deterministic upstream (kafka batch, ``.sample()``) cannot
     diverge between the data written and the buckets the manifest
-    claims (the same contract as :func:`upsert_keyed`)."""
+    claims.  ``num_buckets`` is fixed for the table's life; it should
+    scale with table size until one bucket is a comfortable rewrite
+    quantum (e.g. a few GB)."""
     spark = df.sparkSession
     stamped = (df.withColumn(_KB, _key_bucket(key_col, num_buckets))
                  .localCheckpoint(eager=False))  # write materializes
@@ -927,6 +630,36 @@ def write_keyed_snapshot(df: DataFrame, path: str, key_col: str,
     _write_manifest(spark, path, 1, key_col, num_buckets,
                     {kb: "v1" for kb in kbs}, schema=_schema_fields(df))
     return 1
+
+
+def _read_buckets(spark: SparkSession, path: str, buckets: dict,
+                  kbs, schema: list[dict] | None) -> DataFrame | None:
+    """The rows of the buckets ``kbs`` as the manifest map ``buckets``
+    ({kb: version dir}) places them: one parquet scan per version dir,
+    reading only those ``__kb=<b>`` dirs, unioned by name.  Buckets
+    absent from the map (all their keys deleted) contribute nothing;
+    None when no listed bucket is in it.  Columns follow the manifest
+    ``schema`` (``__kb`` last): buckets written before a
+    schema-evolving merge lack its added columns, and a column can
+    live in NO part file read here yet belong to the schema — both
+    read back as typed NULLs."""
+    by_ver: dict[str, list[int]] = {}
+    for kb in kbs:
+        if kb in buckets:
+            by_ver.setdefault(buckets[kb], []).append(kb)
+    out = None
+    for ver, ver_kbs in sorted(by_ver.items()):
+        base = f"{path}/{ver}"
+        part = spark.read.option("basePath", base).parquet(
+            *[f"{base}/{_KB}={kb}" for kb in sorted(ver_kbs)])
+        out = (part if out is None
+               else out.unionByName(part, allowMissingColumns=True))
+    if out is None or schema is None:
+        return out
+    have = set(out.columns)
+    return out.select(*[F.col(f["name"]) if f["name"] in have
+                        else F.lit(None).cast(f["type"]).alias(f["name"])
+                        for f in schema], _KB)
 
 
 def read_keyed_snapshot(spark: SparkSession, path: str,
@@ -941,56 +674,75 @@ def read_keyed_snapshot(spark: SparkSession, path: str,
     if man is None:
         raise ValueError(f"no committed snapshot at {path}")
     _, _, _, buckets, schema = man
-    by_ver: dict[str, list[int]] = {}
-    for kb, ver in buckets.items():
-        by_ver.setdefault(ver, []).append(kb)
-    parts = []
-    for ver, kbs in sorted(by_ver.items()):
-        base = f"{path}/{ver}"
-        dirs = [f"{base}/{_KB}={kb}" for kb in sorted(kbs)]
-        parts.append(spark.read.option("basePath", base).parquet(*dirs))
-    if not parts:
-        # every key deleted: an EMPTY snapshot is still a snapshot —
-        # reconstruct the frame from the manifest's recorded schema
-        if schema is None:
-            raise ValueError(
-                f"snapshot at {path} is empty and predates schema "
-                "recording; nothing to read")
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in schema)
-        return spark.createDataFrame([], ddl)
-    # buckets written before a schema-evolving merge lack its added
-    # columns — allowMissingColumns fills them with typed NULLs, and
-    # the manifest's recorded column order keeps the result stable
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    out = out.drop(_KB)
-    if schema is not None:
-        # a column added by a schema-evolving merge can live in NO
-        # surviving part file (its buckets since emptied by deletes)
-        # yet still belong to the manifest schema — materialize it as
-        # typed NULLs instead of letting the select raise
-        have = set(out.columns)
-        for f in schema:
-            if f["name"] not in have:
-                out = out.withColumn(
-                    f["name"], F.lit(None).cast(f["type"]))
-        out = out.select(*[f["name"] for f in schema])
-    return out
+    out = _read_buckets(spark, path, buckets, buckets.keys(), schema)
+    if out is not None:
+        return out.drop(_KB)
+    # every key deleted: an EMPTY snapshot is still a snapshot —
+    # reconstruct the frame from the manifest's recorded schema
+    if schema is None:
+        raise ValueError(
+            f"snapshot at {path} is empty and predates schema "
+            "recording; nothing to read")
+    ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in schema)
+    return spark.createDataFrame([], ddl)
+
+
+def keyed_snapshot_lookup(spark: SparkSession, path: str, keys,
+                          version: int | None = None) -> DataFrame:
+    """POINT LOOKUPS — the distributed answer to the reference's
+    per-key GET (the N+1 ``find(key)`` pattern, storage.scala:390-391)
+    with snapshot isolation and time travel: resolve the manifest
+    (latest or ``version``), hash each key to its bucket with the SAME
+    Spark expression that wrote the layout (one tiny local job over
+    |keys| rows), and read ONLY those buckets' immutable
+    ``v<N>/__kb=<b>`` dirs — cost O(|keys| x bucket size), never a
+    table scan.  Bucket dirs are sorted on the key at write time, so
+    the pushed key filter's row-group stats skip within the bucket
+    too.  A deleted or never-written key returns no row.
+
+    ``keys``: a Python sequence of key values (bounded by contract —
+    point lookups, not a join; for a large probe side join against
+    :func:`read_keyed_snapshot`)."""
+    man = _read_manifest(spark, path, version)
+    if man is None:
+        raise ValueError(f"no committed snapshot at {path}")
+    _, key_col, nb, buckets, schema = man
+    key_vals = list(keys)
+    kbs = []
+    if key_vals:
+        ktype = next((f["type"] for f in (schema or [])
+                      if f["name"] == key_col), "bigint")
+        kdf = spark.createDataFrame([(k,) for k in key_vals],
+                                    f"`{key_col}` {ktype}")
+        kbs = sorted({r.b for r in kdf.select(
+            _key_bucket(key_col, int(nb)).alias("b")).distinct().collect()})
+    out = _read_buckets(spark, path, buckets, kbs, schema)
+    if out is None:
+        return read_keyed_snapshot(spark, path, version).limit(0)
+    return out.drop(_KB).filter(F.col(key_col).isin(key_vals))
 
 
 def upsert_keyed_snapshot(spark: SparkSession, path: str, batch: DataFrame,
                           key_col: str, order_by: Sequence[str],
                           max_retries: int = 3,
                           delete_col: str | None = None) -> dict:
-    """Snapshot-isolated MERGE: keep-latest semantics of
-    :func:`upsert_keyed`, but touched buckets are written under a NEW
-    immutable ``v<N>/`` dir and the merge becomes visible only at the
-    atomic manifest publish — readers mid-flight keep their resolved
-    snapshot, a crash before publish leaves the table exactly at
-    v<N-1> (the orphan dir is GC'd), and rollback is deleting one
-    manifest file.  Cost is identical to the in-place form: touched
-    buckets only.
+    """Snapshot-isolated CDC MERGE: upsert ``batch`` into the table at
+    ``path``, keeping per key the row with the greatest ``order_by``
+    (sequence/event-time ordering; ties prefer the incoming batch) —
+    the physical counterpart of the ``latest_event_per_user`` upsert
+    VIEW, compaction moved from every read to each write.
+
+    Scale shape: the batch is localCheckpointed ONCE (safe for
+    read-once ingest sources); its touched bucket list (bounded by the
+    table's bucket count, never rows) limits the standing read to exactly
+    those bucket dirs; one keep-latest window shuffles only
+    touched-buckets + batch, and the result is written under a NEW
+    immutable ``v<N>-<uuid>/`` dir.  Untouched buckets stay where the
+    manifest already points.  Cost tracks batch locality, not table
+    size.  The merge becomes visible only at the atomic manifest
+    publish — readers mid-flight keep their resolved snapshot, a
+    crash before publish leaves the table exactly at v<N-1> (the
+    orphan dir is GC'd), and rollback is deleting one manifest file.
 
     **Concurrent writers** are handled with optimistic concurrency,
     the public-table-format commit loop: the manifest rename is the
@@ -1000,8 +752,7 @@ def upsert_keyed_snapshot(spark: SparkSession, path: str, batch: DataFrame,
     and attempts the next version — up to ``max_retries`` times
     before raising :class:`SnapshotConflict` with the table
     uncorrupted (its orphan data dirs are invisible to readers and
-    swept by GC).  Contrast :func:`upsert_keyed`, which rewrites
-    bucket dirs in place and is SINGLE-WRITER by contract.
+    swept by GC).
 
     **Schema evolution**: a batch may add columns (old rows read back
     as typed NULLs, old snapshots time-travel unchanged) or omit
@@ -1011,22 +762,25 @@ def upsert_keyed_snapshot(spark: SparkSession, path: str, batch: DataFrame,
     **Deletes**: ``delete_col`` marks CDC DELETE rows — a key whose
     latest (by ``order_by``) op is a delete is removed; a bucket
     emptied by deletions simply leaves the new manifest (older
-    snapshots still time-travel to it).  Statement-level ordering,
-    as in :func:`upsert_keyed`: apply batches in change-log order —
-    an out-of-order older upsert in a LATER merge resurrects a
-    deleted key (no deleted-version memory is kept).
-    """
-    from pyspark.sql import Window
+    snapshots still time-travel to it).  Delete ordering is
+    STATEMENT-LEVEL, the contract of public table formats' MERGE:
+    within one merge a delete competes with upserts by ``order_by``
+    (stale deletes lose), but the table keeps no deleted-version
+    memory — an out-of-order older upsert in a LATER merge resurrects
+    the key.  Apply batches in change-log order (what every CDC
+    source emits); pinned by the sequential-fold property test.
 
-    if _read_manifest(spark, path) is None:
-        raise ValueError(
-            f"no committed snapshot at {path}; write_keyed_snapshot first")
+    Returns ``{"version": v, "buckets_touched": k}``.
+    """
     batch = _mark_deletes(batch, delete_col)
     b = None
     last_err: SnapshotConflict | None = None
     for _ in range(max_retries + 1):
-        version, m_key, num_buckets, buckets, m_schema = \
-            _read_manifest(spark, path)
+        man = _read_manifest(spark, path)
+        if man is None:
+            raise ValueError(f"no committed snapshot at {path}; "
+                             "write_keyed_snapshot first")
+        version, m_key, num_buckets, buckets, m_schema = man
         if m_key != key_col:
             raise ValueError(f"table keyed on {m_key!r}, not {key_col!r}")
         schema = _check_schema_compat(m_schema, batch, path)
@@ -1037,21 +791,13 @@ def upsert_keyed_snapshot(spark: SparkSession, path: str, batch: DataFrame,
             touched = [r[_KB] for r in b.select(_KB).distinct().collect()]
             if not touched:
                 return {"version": version, "buckets_touched": 0}
-        by_ver: dict[str, list[int]] = {}
-        for kb in touched:
-            if kb in buckets:
-                by_ver.setdefault(buckets[kb], []).append(kb)
-        existing_parts = []
-        for ver, kbs in sorted(by_ver.items()):
-            base = f"{path}/{ver}"
-            dirs = [f"{base}/{_KB}={kb}" for kb in sorted(kbs)]
-            existing_parts.append(
-                spark.read.option("basePath", base).parquet(*dirs))
+        existing = _read_buckets(spark, path, buckets, touched, m_schema)
         merged = b
-        for p in existing_parts:
-            merged = merged.unionByName(p.withColumn("__src", F.lit(0))
-                                         .withColumn("__del", F.lit(False)),
-                                        allowMissingColumns=True)
+        if existing is not None:
+            merged = merged.unionByName(
+                existing.withColumn("__src", F.lit(0))
+                        .withColumn("__del", F.lit(False)),
+                allowMissingColumns=True)
         w = Window.partitionBy(key_col).orderBy(
             *[F.col(c).desc() for c in order_by], F.col("__src").desc())
         latest = (merged.withColumn("__rn", F.row_number().over(w))
@@ -1120,8 +866,6 @@ def gc_keyed_snapshots(spark: SparkSession, path: str,
     guard a scheduled GC landing in the gap would delete the new
     version's files and the subsequent publish would commit a
     snapshot pointing at deleted data."""
-    import json
-
     versions = _list_manifests(spark, path)
     if not versions:
         return 0
@@ -1132,13 +876,7 @@ def gc_keyed_snapshots(spark: SparkSession, path: str,
         spark._jsc.hadoopConfiguration())
     referenced = set()
     for v in keep:
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{_manifest_dir(path)}/manifest-v{v}.json")
-        stream = fs.open(p)
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        stream.close()
-        referenced |= {b["v"]
-                       for b in json.loads(bytes(data).decode())["buckets"]}
+        referenced |= set(_read_manifest(spark, path, v)[3].values())
     removed = 0
     for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
         name = st.getPath().getName()

@@ -816,79 +816,31 @@ def stateful_budget_admission(stream: DataFrame, group_col: str,
                                     "append", GroupStateTimeout.NoTimeout))
 
 
-def stream_cdc_upsert(stream: DataFrame, path: str, checkpoint: str,
-                      key_col: str, order_by: list[str],
-                      num_buckets: int = 32,
-                      delete_col: str | None = None) -> None:
-    """Streaming CDC materialization: every micro-batch MERGEs into
-    the keyed standing table (``sinks.upsert_keyed``) instead of
-    appending — the streaming half of the physical-merge story, and
-    the pattern that keeps a serving table continuously current from
-    a change stream.
-
-    Exactly-once needs no ``__batch_id`` partitions here because the
-    keep-latest MERGE is naturally idempotent: a crash between "files
-    written" and "commit recorded" replays the batch into the same
-    buckets and keep-latest converges to the identical table (pinned
-    by the commit-record-deletion test).  The first batch bootstraps
-    the table (``write_keyed`` of its own compaction) so the stream
-    needs no out-of-band initialization.
-
-    Per batch the cost is the upsert contract: touched buckets only,
-    never table size — an unbounded stream maintains a 100 TB serving
-    table by rewriting the few buckets each micro-batch lands in.
-    ``delete_col`` passes through to the MERGE: a change stream that
-    carries delete ops keeps the served table exact (delete-if-latest
-    is as replay-idempotent as keep-latest, so exactly-once still
-    needs no batch-id bookkeeping).
-    """
-    from nosql_join_stream_spark.sinks import (_mark_deletes,
-                                               latest_per_key,
-                                               upsert_keyed, write_keyed)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # bootstrap gate = the table's meta sidecar (written LAST by
-        # write_keyed), checked through Spark so it works on any
-        # filesystem: a crash MID-bootstrap leaves no marker, the
-        # upsert refuses, and the replay re-bootstraps over the
-        # partial dir instead of merging into it.  (A crash AFTER the
-        # write replays the batch as an upsert of the same rows — same
-        # table either way.)  Upsert-first keeps it to ONE meta read
-        # per micro-batch on the steady-state path.
-        try:
-            upsert_keyed(batch_df.sparkSession, path, batch_df, key_col,
-                         order_by, count_rows=False,
-                         delete_col=delete_col)
-        except ValueError as e:
-            if "no completely-written keyed table" not in str(e):
-                raise
-            marked = _mark_deletes(batch_df, delete_col)
-            first = (latest_per_key(marked, key_col, order_by)
-                     .filter(~F.col("__del")).drop("__del"))
-            write_keyed(first, path, key_col, num_buckets=num_buckets)
-
-    drain(stream.writeStream.foreachBatch(write_batch)
-          .outputMode("append")
-          .option("checkpointLocation", checkpoint))
-
-
 def stream_cdc_upsert_snapshot(stream: DataFrame, path: str,
                                checkpoint: str, key_col: str,
                                order_by: list[str],
                                num_buckets: int = 32,
                                delete_col: str | None = None) -> None:
-    """Streaming CDC into the SNAPSHOT-ISOLATED table: every
-    micro-batch merges via ``upsert_keyed_snapshot``, so concurrent
-    readers of the continuously-updated serving table always resolve
-    a complete committed version — never a half-merged mix of buckets
-    (the in-place form's documented reader hazard).  Each batch
-    publishes one manifest version; replay after a crash re-merges
-    the batch into a CONTENT-identical new version (keep-latest +
-    delete-if-latest are idempotent), so exactly-once needs no
-    batch-id bookkeeping — the version number advances but the table
-    a reader sees does not change.  GC retires old versions on its
-    own schedule, and its committed-version guard makes it safe to
-    run while the stream merges.  First batch bootstraps."""
+    """Streaming CDC materialization: every micro-batch MERGEs into
+    the keyed snapshot table via ``upsert_keyed_snapshot`` instead of
+    appending — the pattern that keeps a serving table continuously
+    current from a change stream.  Concurrent readers always resolve
+    a complete committed version, never a half-merged mix of buckets.
+    Per batch the cost is the merge's: touched buckets only, never
+    table size.
+
+    Each batch publishes one manifest version; replay after a crash
+    re-merges the batch into a CONTENT-identical new version
+    (keep-latest + delete-if-latest are idempotent), so exactly-once
+    needs no batch-id bookkeeping — the version number advances but
+    the table a reader sees does not change.  GC retires old versions
+    on its own schedule, and its committed-version guard makes it
+    safe to run while the stream merges.  The first batch bootstraps
+    the table (``write_keyed_snapshot`` of its own compaction, keys
+    whose latest op is a delete left out), so the stream needs no
+    out-of-band initialization; a crash mid-bootstrap leaves no
+    manifest, and the replay bootstraps again over the partial dir.
+    ``delete_col`` passes through to the merge."""
     from nosql_join_stream_spark.sinks import (_mark_deletes,
                                                latest_per_key,
                                                upsert_keyed_snapshot,

@@ -507,11 +507,12 @@ def test_minhash_standing_index_equals_inline_cross(spark, tmp_path_factory,
 @given(data=st.data())
 def test_upsert_keyed_equals_keep_latest_fold(spark, tmp_path_factory, data):
     """MERGE invariant: applying any sequence of batches through
-    upsert_keyed must equal latest_per_key over their concatenation —
-    regardless of key overlap, within-batch duplicates, stale rows,
-    or bucket layout."""
-    from nosql_join_stream_spark.sinks import (latest_per_key, read_keyed,
-                                               upsert_keyed, write_keyed)
+    upsert_keyed_snapshot must equal latest_per_key over their
+    concatenation — regardless of key overlap, within-batch
+    duplicates, stale rows, or bucket layout."""
+    from nosql_join_stream_spark.sinks import (
+        latest_per_key, read_keyed_snapshot, upsert_keyed_snapshot,
+        write_keyed_snapshot)
 
     n_batches = data.draw(st.integers(1, 3))
     batches = [
@@ -531,11 +532,12 @@ def test_upsert_keyed_equals_keep_latest_fold(spark, tmp_path_factory, data):
     path = str(tmp_path_factory.mktemp("ups") / "t")
     dfs = [spark.createDataFrame(b, "k int, seq int, p int")
            for b in batches]
-    write_keyed(latest_per_key(dfs[0], "k", ["seq"]), path, "k",
-                num_buckets=4)
+    write_keyed_snapshot(latest_per_key(dfs[0], "k", ["seq"]), path, "k",
+                         num_buckets=4)
     for b in dfs[1:]:
-        upsert_keyed(spark, path, b, "k", ["seq"], num_buckets=4)
-    got = {(r.k, r.seq, r.p) for r in read_keyed(spark, path).collect()}
+        upsert_keyed_snapshot(spark, path, b, "k", ["seq"])
+    got = {(r.k, r.seq, r.p)
+           for r in read_keyed_snapshot(spark, path).collect()}
     allrows = dfs[0]
     for b in dfs[1:]:
         allrows = allrows.unionByName(b)
@@ -547,25 +549,26 @@ def test_upsert_keyed_equals_keep_latest_fold(spark, tmp_path_factory, data):
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
-def test_upsert_keyed_deletes_equal_python_cdc_model(
+def test_snapshot_cdc_equals_python_model_and_time_travels(
         spark, tmp_path_factory, data):
     """FULL-CDC invariant (model-based): any sequence of mixed
-    upsert/delete batches through upsert_keyed(delete_col=...) must
-    equal the plain-Python SEQUENTIAL-merge fold — batches apply in
-    order; within each merge the greatest seq wins among {standing
+    upsert/delete batches through upsert_keyed_snapshot(delete_col=...)
+    must equal the plain-Python SEQUENTIAL-merge fold — batches apply
+    in order; within each merge the greatest seq wins among {standing
     row} ∪ {batch rows for the key}, and a winning delete removes the
     key.  This is the statement-level MERGE contract (public table
     formats behave identically): an out-of-order OLDER upsert in a
     later batch resurrects a deleted key, because no deleted-version
-    memory is kept — the model encodes that explicitly."""
-    from nosql_join_stream_spark.sinks import (latest_per_key, read_keyed,
-                                               upsert_keyed, write_keyed)
+    memory is kept — the model encodes that explicitly.  Every
+    intermediate version must also time-travel back exactly — the
+    immutable-manifest claim under randomized workloads."""
+    from nosql_join_stream_spark.sinks import (
+        read_keyed_snapshot, upsert_keyed_snapshot, write_keyed_snapshot)
 
     first = data.draw(st.lists(
         st.tuples(st.integers(0, 7), st.integers(0, 20),
                   st.integers(0, 999)),
         min_size=1, max_size=8))
-    n_batches = data.draw(st.integers(1, 3))
     batches = [
         data.draw(st.lists(
             st.tuples(st.integers(0, 7),          # key (forced overlap)
@@ -573,69 +576,9 @@ def test_upsert_keyed_deletes_equal_python_cdc_model(
                       st.integers(0, 999),        # payload
                       st.booleans()),             # delete marker
             min_size=1, max_size=10))
-        for _ in range(n_batches)]
+        for _ in range(data.draw(st.integers(1, 3)))]
     # make (k, seq) globally unique (row_number ties are engine-
     # arbitrary); batch 0 == the bootstrap, deletes start at batch 1
-    first = [(k, s * 1000 + i * 10, p, False)
-             for i, (k, s, p) in enumerate(first)]
-    batches = [[(k, s * 1000 + i * 10 + bi + 1, p, d)
-                for i, (k, s, p, d) in enumerate(b)]
-               for bi, b in enumerate(batches)]
-
-    path = str(tmp_path_factory.mktemp("cdc") / "t")
-    schema = "k int, seq int, p int, is_del boolean"
-    write_keyed(
-        latest_per_key(
-            spark.createDataFrame(first, schema).drop("is_del"),
-            "k", ["seq"]),
-        path, "k", num_buckets=4)
-    for b in batches:
-        upsert_keyed(spark, path, spark.createDataFrame(b, schema),
-                     "k", ["seq"], num_buckets=4, delete_col="is_del")
-    got = {(r.k, r.seq, r.p) for r in read_keyed(spark, path).collect()}
-
-    # plain-Python SEQUENTIAL-merge fold: state after each batch
-    state: dict[int, tuple] = {}
-    for (k, s, p, _d) in first:           # bootstrap: keep-latest
-        if k not in state or s > state[k][0]:
-            state[k] = (s, p)
-    for b in batches:
-        win: dict[int, tuple] = {}
-        for (k, s, p, d) in b:
-            prev = win.get(k, state.get(k) and (*state[k], False))
-            if prev is None or s > prev[0]:
-                win[k] = (s, p, d)
-        for k, (s, p, d) in win.items():
-            if d:
-                state.pop(k, None)
-            else:
-                state[k] = (s, p)
-    want = {(k, s, p) for k, (s, p) in state.items()}
-    assert got == want
-
-
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(data=st.data())
-def test_snapshot_cdc_equals_python_model_and_time_travels(
-        spark, tmp_path_factory, data):
-    """The snapshot-isolated merge must satisfy the SAME sequential
-    CDC fold as the in-place form under random upsert/delete batches,
-    AND every intermediate version must time-travel back exactly —
-    the immutable-manifest claim under randomized workloads."""
-    from nosql_join_stream_spark.sinks import (
-        read_keyed_snapshot, upsert_keyed_snapshot, write_keyed_snapshot)
-
-    first = data.draw(st.lists(
-        st.tuples(st.integers(0, 5), st.integers(0, 9),
-                  st.integers(0, 99)),
-        min_size=1, max_size=5))
-    batches = [
-        data.draw(st.lists(
-            st.tuples(st.integers(0, 5), st.integers(0, 9),
-                      st.integers(0, 99), st.booleans()),
-            min_size=1, max_size=6))
-        for _ in range(data.draw(st.integers(1, 2)))]
     first = [(k, s * 1000 + i * 10, p, False)
              for i, (k, s, p) in enumerate(first)]
     batches = [[(k, s * 1000 + i * 10 + bi + 1, p, d)

@@ -304,12 +304,17 @@ def test_write_log_rolled_partitions_and_prunes(spark, engine, tmp_path):
 
 def test_upsert_keyed_merges_and_leaves_untouched_buckets_alone(
         spark, tmp_path):
+    """upsert_keyed_snapshot applies updates, drops stale rows, inserts
+    new keys and collapses within-batch duplicates; buckets the batch
+    does not touch keep their old version dir in the new manifest,
+    byte-identical; replaying the batch changes no row."""
     import glob
     import hashlib
     import os
 
     from nosql_join_stream_spark.sinks import (
-        latest_per_key, read_keyed, upsert_keyed, write_keyed)
+        _read_manifest, latest_per_key, read_keyed_snapshot,
+        upsert_keyed_snapshot, write_keyed_snapshot)
 
     def file_state(path):
         out = {}
@@ -323,10 +328,12 @@ def test_upsert_keyed_merges_and_leaves_untouched_buckets_alone(
     initial = spark.createDataFrame(
         [(k, 1, f"v{k}.1") for k in range(40)], ["k", "seq", "payload"])
     path = str(tmp_path / "keyed")
-    write_keyed(latest_per_key(initial, "k", ["seq"]), path, "k",
-                num_buckets=8)
+    write_keyed_snapshot(latest_per_key(initial, "k", ["seq"]), path, "k",
+                         num_buckets=8)
     before = file_state(path)
-    assert len({p.split(os.sep)[0] for p in before}) == 8
+    assert len({p.split(os.sep)[1] for p in before}) == 8
+    v1_map = _read_manifest(spark, path)[3]
+    assert set(v1_map.values()) == {"v1"} and len(v1_map) == 8
 
     # batch: update key 3 (newer seq wins), STALE row for key 5 (must
     # lose), brand-new key 1000, and a within-batch dup for key 7
@@ -334,31 +341,34 @@ def test_upsert_keyed_merges_and_leaves_untouched_buckets_alone(
         [(3, 2, "v3.2"), (5, 0, "stale"), (1000, 1, "new"),
          (7, 2, "v7.2"), (7, 3, "v7.3")],
         ["k", "seq", "payload"])
-    stats = upsert_keyed(spark, path, batch, "k", ["seq"], num_buckets=8)
+    stats = upsert_keyed_snapshot(spark, path, batch, "k", ["seq"])
+    assert stats["version"] == 2
     assert 1 <= stats["buckets_touched"] <= 4  # 4 distinct keys max
 
-    got = {(r.k, r.seq, r.payload) for r in read_keyed(spark, path).collect()}
+    got = {(r.k, r.seq, r.payload)
+           for r in read_keyed_snapshot(spark, path).collect()}
     assert (3, 2, "v3.2") in got          # update applied
     assert (5, 1, "v5.1") in got          # stale row lost
     assert (1000, 1, "new") in got        # insert
     assert (7, 3, "v7.3") in got          # within-batch dup collapsed
     assert len(got) == 41                 # 40 keys + 1 insert
 
-    # untouched bucket dirs are byte-identical after the merge
+    # exactly the touched buckets moved to the new version dir; the
+    # untouched ones still point at v1, whose files are byte-identical
+    v2_map = _read_manifest(spark, path)[3]
+    moved = {kb for kb, d in v2_map.items() if d != "v1"}
+    assert len(moved) == stats["buckets_touched"]
     after = file_state(path)
-    touched_dirs = set()
-    for kb in range(8):
-        b_files = {p: h for p, h in before.items()
-                   if p.startswith(f"__kb={kb}{os.sep}")}
-        a_files = {p: h for p, h in after.items()
-                   if p.startswith(f"__kb={kb}{os.sep}")}
-        if b_files != a_files:
-            touched_dirs.add(kb)
-    assert len(touched_dirs) == stats["buckets_touched"]
+    for kb in set(v2_map) - moved:
+        prefix = os.path.join("v1", f"__kb={kb}") + os.sep
+        b_files = {p: h for p, h in before.items() if p.startswith(prefix)}
+        a_files = {p: h for p, h in after.items() if p.startswith(prefix)}
+        assert b_files and a_files == b_files
 
-    # idempotent: replaying the same batch changes nothing
-    upsert_keyed(spark, path, batch, "k", ["seq"], num_buckets=8)
-    again = {(r.k, r.seq, r.payload) for r in read_keyed(spark, path).collect()}
+    # idempotent: replaying the same batch changes no row
+    upsert_keyed_snapshot(spark, path, batch, "k", ["seq"])
+    again = {(r.k, r.seq, r.payload)
+             for r in read_keyed_snapshot(spark, path).collect()}
     assert again == got
 
 
@@ -621,46 +631,49 @@ def test_snapshot_schema_evolution_add_omit_retype(spark, tmp_path):
 
 
 def test_upsert_keyed_delete_markers_remove_keys(spark, tmp_path):
-    """Full CDC (not just upserts): a key whose LATEST op is a delete
-    marker leaves the table; an older delete is superseded by a newer
-    upsert; a bucket emptied by deletions loses its dir (dynamic
-    partition overwrite alone would silently keep its old files)."""
-    import glob
-    import os
-
+    """Full CDC (not just upserts) on the keyed snapshot table: a key
+    whose LATEST op is a delete marker leaves the table, an older delete
+    loses to a newer upsert, a stale delete loses to the standing row,
+    and a bucket emptied by deletions leaves the manifest; a
+    fully-emptied table reads back empty with its recorded schema."""
     from nosql_join_stream_spark.sinks import (
-        read_keyed, upsert_keyed, write_keyed)
+        _read_manifest, read_keyed_snapshot, upsert_keyed_snapshot,
+        write_keyed_snapshot)
 
     path = str(tmp_path / "cdcdel")
-    initial = spark.createDataFrame(
-        [(k, 1, f"v{k}") for k in range(8)], ["k", "seq", "p"])
-    write_keyed(initial, path, "k", num_buckets=2)
-    n_dirs_before = len(glob.glob(os.path.join(path, "__kb=*")))
-
+    write_keyed_snapshot(
+        spark.createDataFrame([(k, 1, f"v{k}") for k in range(8)],
+                              "k long, seq long, p string"),
+        path, "k", num_buckets=2)
+    assert _read_manifest(spark, path)[3] != {}
     batch = spark.createDataFrame(
         [(1, 2, None, True),      # delete k=1 (latest op wins)
          (2, 2, "v2.2", False),   # plain upsert
          (3, 3, "v3.3", False),   # upsert AFTER an older delete
          (3, 2, None, True),
-         (4, 0, None, True)],     # STALE delete: seq 0 < standing 1
+         (4, 0, None, True),      # STALE delete: seq 0 < standing 1
+         (9, 1, "v9", False)],    # insert
         "k long, seq long, p string, is_del boolean")
-    upsert_keyed(spark, path, batch, "k", ["seq"], delete_col="is_del")
-    got = {r.k: (r.seq, r.p) for r in read_keyed(spark, path).collect()}
+    upsert_keyed_snapshot(spark, path, batch, "k", ["seq"],
+                          delete_col="is_del")
+    got = {r.k: (r.seq, r.p)
+           for r in read_keyed_snapshot(spark, path).collect()}
     assert 1 not in got                      # deleted
     assert got[2] == (2, "v2.2")
     assert got[3] == (3, "v3.3")             # newer upsert beats delete
     assert got[4] == (1, "v4")               # stale delete ignored
-    assert set(got) == {0, 2, 3, 4, 5, 6, 7}
+    assert got[9] == (1, "v9")
+    assert set(got) == {0, 2, 3, 4, 5, 6, 7, 9}
 
-    # delete EVERY key: all bucket dirs must be dropped, not left stale
+    # delete EVERY key: every bucket leaves the manifest, and the
+    # latest snapshot is EMPTY but readable with the recorded schema
     wipe = spark.createDataFrame(
-        [(k, 9, None, True) for k in range(8)],
+        [(k, 9, None, True) for k in got],
         "k long, seq long, p string, is_del boolean")
-    upsert_keyed(spark, path, wipe, "k", ["seq"], delete_col="is_del")
-    assert glob.glob(os.path.join(path, "__kb=*")) == []
-    assert n_dirs_before > 0
-    # a fully-emptied table still READS (empty, meta-recorded schema)
-    emptied = read_keyed(spark, path)
+    upsert_keyed_snapshot(spark, path, wipe, "k", ["seq"],
+                          delete_col="is_del")
+    assert _read_manifest(spark, path)[3] == {}
+    emptied = read_keyed_snapshot(spark, path)
     assert emptied.columns == ["k", "seq", "p"] and emptied.count() == 0
 
 
@@ -721,48 +734,46 @@ def test_snapshot_gc_spares_inflight_version_dirs(spark, tmp_path):
 
 
 def test_keyed_lookup_point_reads_prune_buckets(spark, tmp_path):
-    """keyed_lookup serves per-key GETs from the bucket layout: values
-    equal the full-table filter, the plan PRUNES to the keys' buckets
-    (PartitionFilters on __kb — planning-time, not per-row), empty key
-    list is an empty typed frame, missing table raises."""
+    """keyed_snapshot_lookup serves per-key GETs from the bucket
+    layout: values equal the full-table filter, the scan reads only
+    the probed key's ``__kb=<b>`` dir, an absent key gives no rows, an
+    empty key list is an empty typed frame, a missing table raises."""
+    import os
+    from urllib.parse import urlparse
+
     import pytest
 
-    from nosql_join_stream_spark.sinks import (keyed_lookup, read_keyed,
-                                               write_keyed)
+    from nosql_join_stream_spark.sinks import (
+        _key_bucket, keyed_snapshot_lookup, read_keyed_snapshot,
+        write_keyed_snapshot)
 
     path = str(tmp_path / "kt")
     df = spark.createDataFrame([(k, f"p{k}", k * 10.0)
                                 for k in range(200)],
                                "k long, p string, v double")
-    write_keyed(df, path, "k", num_buckets=16)
+    write_keyed_snapshot(df, path, "k", num_buckets=16)
 
     got = {(r.k, r.p, r.v) for r in
-           keyed_lookup(spark, path, [3, 77, 150]).collect()}
+           keyed_snapshot_lookup(spark, path, [3, 77, 150]).collect()}
     assert got == {(3, "p3", 30.0), (77, "p77", 770.0),
                    (150, "p150", 1500.0)}
-    # pruning: the executed scan carries a PartitionFilters entry on
-    # the bucket column, and the planned input is a strict subset of
-    # the table's files
-    q = keyed_lookup(spark, path, [3])
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__kb" in plan
-    # ...and the filter names exactly key 3's bucket (inputFiles()
-    # reports the pre-pruning relation, so the literal in the plan is
-    # the observable pruning witness)
-    from nosql_join_stream_spark.sinks import _key_bucket
+    # pruning: every file the scan plans to read lies under key 3's
+    # bucket dir
     b3 = (spark.createDataFrame([(3,)], "k long")
           .select(_key_bucket("k", 16).alias("b")).first().b)
-    pf = plan.split("PartitionFilters")[1].split("]")[0]
-    assert f"({b3})" in pf or f" {b3}" in pf
+    files = keyed_snapshot_lookup(spark, path, [3]).inputFiles()
+    assert files and all(
+        os.path.dirname(urlparse(f).path).endswith(f"/kt/v1/__kb={b3}")
+        for f in files), files
     # lookup of an absent key: no rows, not an error
-    assert keyed_lookup(spark, path, [10_000]).count() == 0
-    assert keyed_lookup(spark, path, []).columns == ["k", "p", "v"]
-    assert keyed_lookup(spark, path, []).count() == 0
-    with pytest.raises(ValueError, match="no keyed table"):
-        keyed_lookup(spark, path + "_nope", [1])
+    assert keyed_snapshot_lookup(spark, path, [10_000]).count() == 0
+    assert keyed_snapshot_lookup(spark, path, []).columns == ["k", "p", "v"]
+    assert keyed_snapshot_lookup(spark, path, []).count() == 0
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        keyed_snapshot_lookup(spark, path + "_nope", [1])
     # values equal the unpruned read, restricted
     full = {(r.k, r.p, r.v) for r in
-            read_keyed(spark, path)
+            read_keyed_snapshot(spark, path)
             .filter(F.col("k").isin([3, 77, 150])).collect()}
     assert full == got
 

@@ -507,14 +507,16 @@ def test_kafka_source_resolution_or_skip(spark):
 def test_stream_cdc_upsert_replay_converges(spark, tmp_path):
     """Streaming MERGE exactly-once WITHOUT __batch_id partitions: the
     keep-latest upsert is naturally idempotent, so a crash between
-    files-written and commit-recorded (simulated by deleting the
-    commit record) replays the batch into the SAME table state.  Then
+    manifest-published and commit-recorded (simulated by deleting the
+    commit record) replays the batch into the SAME table rows.  Then
     the source grows and the next drain must fold in only the newer
     rows — per key the greatest (ts, event_id) wins across batches."""
     import os
 
-    from nosql_join_stream_spark.sinks import latest_per_key, read_keyed
-    from nosql_join_stream_spark.streaming.log_stream import stream_cdc_upsert
+    from nosql_join_stream_spark.sinks import (latest_per_key,
+                                               read_keyed_snapshot)
+    from nosql_join_stream_spark.streaming.log_stream import (
+        stream_cdc_upsert_snapshot)
 
     src = tmp_path / "src"
     tbl = tmp_path / "tbl"
@@ -527,11 +529,12 @@ def test_stream_cdc_upsert_replay_converges(spark, tmp_path):
     def drain():
         stream = (spark.readStream.schema(raw.schema)
                   .format("parquet").load(str(src)))
-        stream_cdc_upsert(stream, str(tbl), str(ckpt), "user_id",
-                          ["ts", "event_id"], num_buckets=8)
+        stream_cdc_upsert_snapshot(stream, str(tbl), str(ckpt), "user_id",
+                                   ["ts", "event_id"], num_buckets=8)
 
     def snapshot():
-        return {tuple(r) for r in read_keyed(spark, str(tbl)).collect()}
+        return {tuple(r) for r in
+                read_keyed_snapshot(spark, str(tbl)).collect()}
 
     drain()
     want_first = {tuple(r) for r in
@@ -563,8 +566,9 @@ def test_stream_cdc_upsert_with_deletes(spark, tmp_path):
     contains deletes."""
     from pyspark.sql import functions as F
 
-    from nosql_join_stream_spark.sinks import read_keyed
-    from nosql_join_stream_spark.streaming.log_stream import stream_cdc_upsert
+    from nosql_join_stream_spark.sinks import read_keyed_snapshot
+    from nosql_join_stream_spark.streaming.log_stream import (
+        stream_cdc_upsert_snapshot)
 
     src = tmp_path / "src"
     tbl = tmp_path / "tbl"
@@ -578,11 +582,13 @@ def test_stream_cdc_upsert_with_deletes(spark, tmp_path):
     def drain():
         stream = (spark.readStream.schema(schema)
                   .format("parquet").load(str(src)))
-        stream_cdc_upsert(stream, str(tbl), str(ckpt), "k", ["seq"],
-                          num_buckets=4, delete_col="is_del")
+        stream_cdc_upsert_snapshot(stream, str(tbl), str(ckpt), "k",
+                                   ["seq"], num_buckets=4,
+                                   delete_col="is_del")
 
     drain()
-    got = {r.k: r.p for r in read_keyed(spark, str(tbl)).collect()}
+    got = {r.k: r.p for r in
+           read_keyed_snapshot(spark, str(tbl)).collect()}
     assert got == {1: "a1", 2: "b1"}
 
     # batch 1: delete k=1 (later than its upsert), re-create k=3,
@@ -591,7 +597,8 @@ def test_stream_cdc_upsert_with_deletes(spark, tmp_path):
         [(1, 2, None, True), (3, 2, "c2", False), (2, 0, None, True)],
         schema).coalesce(1).write.mode("append").parquet(str(src))
     drain()
-    got = {r.k: r.p for r in read_keyed(spark, str(tbl)).collect()}
+    got = {r.k: r.p for r in
+           read_keyed_snapshot(spark, str(tbl)).collect()}
     assert got == {2: "b1", 3: "c2"}
 
 

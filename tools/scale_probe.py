@@ -14,7 +14,7 @@ Usage: python tools/scale_probe.py [max_factor] [op ...]
                        rrf textq pack mm coverage cap phrase dimstats
                        shuffle paradedup budget semdedup keepbest
                        keepbestmh ivfappend cleanmh streamij editdist
-                       incrmh mmr ivfcompact substr upsert bigram nbllr sketch substrinc chunkjac resolveinc snapupsert bpe retract asof mediainc aqeskew pyds keyed saltauto saltaqe shards scd2inc emblinalg jlann sketchq psib
+                       incrmh mmr ivfcompact substr bigram nbllr sketch substrinc chunkjac resolveinc snapupsert bpe retract asof mediainc aqeskew pyds keyed saltauto saltaqe shards scd2inc emblinalg jlann sketchq psib
 """
 
 from __future__ import annotations
@@ -366,10 +366,13 @@ def main() -> None:
             results["editdist_s"] = round(time.perf_counter() - t0, 2)
 
         if "snapupsert" in OPS:
-            # versioned snapshot MERGE, same shape as the in-place
-            # probe: fixed key-local batch, table grown with factor,
-            # buckets ∝ table — per-merge cost must stay flat AND the
-            # manifest/version machinery must not add a scale term
+            # keyed snapshot MERGE: fixed batch (a bounded key set)
+            # vs a table GROWN with factor, buckets scaled with table
+            # size so bucket size — the rewrite quantum — stays
+            # constant (the deployment contract): per-merge cost must
+            # stay flat because it rewrites only the <= |batch keys|
+            # touched buckets, and the manifest/version machinery
+            # must not add a scale term
             from nosql_join_stream_spark.sinks import (
                 latest_per_key, upsert_keyed_snapshot,
                 write_keyed_snapshot)
@@ -926,35 +929,6 @@ def main() -> None:
                 dd, "text", "doc_id", w=15).count()
             results["substr_s"] = round(time.perf_counter() - t0, 2)
 
-        if "upsert" in OPS:
-            # fixed batch (a bounded key set) vs a table GROWN with
-            # factor, buckets scaled with table size so bucket size —
-            # the rewrite quantum — stays constant (the deployment
-            # contract): per-batch MERGE cost must stay flat because
-            # it rewrites only the <= |batch keys| touched buckets,
-            # each of constant size, never the table
-            from nosql_join_stream_spark.sinks import (
-                latest_per_key, upsert_keyed, write_keyed)
-            ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-            copies = spark.range(factor).select(F.col("id").alias("__c"))
-            gev = (ev.crossJoin(copies)
-                     .withColumn("user_id",
-                                 F.col("user_id") + F.col("__c") * 10_000_000)
-                     .withColumn("event_id",
-                                 F.col("event_id") + F.col("__c") * 10_000_000)
-                     .drop("__c"))
-            upath = f"/tmp/scale_keyed_{factor}x"
-            nb = 64 * factor
-            write_keyed(latest_per_key(gev, "user_id", ["ts", "event_id"]),
-                        upath, "user_id", num_buckets=nb)
-            # ~1/31 of the original users: same keys at every factor
-            batch = ev.filter(F.col("user_id") % 31 == 0)
-            t0 = time.perf_counter()
-            stats = upsert_keyed(spark, upath, batch, "user_id",
-                                 ["ts", "event_id"], num_buckets=nb)
-            results["upsert_buckets"] = stats["buckets_touched"]
-            results["upsert_s"] = round(time.perf_counter() - t0, 2)
-
         if "cleanmh" in OPS:
             # the composed pipeline_clean_corpus_minhash stages over
             # the grown corpus: quality gate → banded MinHash pairs →
@@ -1058,32 +1032,32 @@ def main() -> None:
             results["pyds_stream_s"] = round(time.perf_counter() - t0, 2)
 
         if "keyed" in OPS:
-            # point lookups on the keyed standing table (sinks.
-            # keyed_lookup, the reference's per-key GET): bucket
-            # COUNT scales with the corpus (8 per factor) so bucket
-            # SIZE stays constant — the deployment contract.  A
-            # fixed 8-key GET must then stay FLAT while the table
-            # grows 16x (it reads only the touched ~8 bucket dirs,
-            # pruned at planning time), while the naive full-scan
-            # filter grows with the table
+            # point lookups on the keyed snapshot table (sinks.
+            # keyed_snapshot_lookup, the reference's per-key GET):
+            # bucket COUNT scales with the corpus (8 per factor) so
+            # bucket SIZE stays constant — the deployment contract.
+            # A fixed 8-key GET must then stay FLAT while the table
+            # grows 16x (it reads only the touched ~8 bucket dirs
+            # the manifest names), while the naive full-scan filter
+            # grows with the table
             import shutil as _shutil
 
-            from nosql_join_stream_spark.sinks import (keyed_lookup,
-                                                       read_keyed,
-                                                       write_keyed)
+            from nosql_join_stream_spark.sinks import (
+                keyed_snapshot_lookup, read_keyed_snapshot,
+                write_keyed_snapshot)
             kpath = f"/tmp/scale_keyed_{factor}x"
             if not os.path.isdir(kpath):
-                write_keyed(dd, kpath, "doc_id",
-                            num_buckets=8 * factor)
+                write_keyed_snapshot(dd, kpath, "doc_id",
+                                     num_buckets=8 * factor)
             probe_keys = [11, 503, 1007, 2003, 10_000_011,
                           10_000_503, 20_000_007, 30_000_019]
             t0 = time.perf_counter()
-            results["keyed_rows"] = keyed_lookup(
+            results["keyed_rows"] = keyed_snapshot_lookup(
                 spark, kpath, probe_keys).count()
             results["keyed_s"] = round(time.perf_counter() - t0, 2)
             t0 = time.perf_counter()
             results["keyed_scan_rows"] = (
-                read_keyed(spark, kpath)
+                read_keyed_snapshot(spark, kpath)
                 .filter(F.col("doc_id").isin(probe_keys)).count())
             results["keyed_scan_s"] = round(
                 time.perf_counter() - t0, 2)
