@@ -51,21 +51,6 @@ def table_path(sf_dir: str, name: str) -> str:
 # reading of the same parquet.
 _NANOS_TS_COLS = {"events": ("ts",)}
 
-# Tables whose downstream operators are CPU-bound per row (text
-# kernels: tokenize/quality/shingle/HTML/codec).  The driver's test
-# data ships each table as ONE parquet file with one row group, so a
-# plain scan is a single task and every expression above it runs
-# serially no matter how many cores the session has (the guide's
-# "input skew: one huge unsplittable file … repartition immediately
-# after the read" case).  When such a table arrives with fewer scan
-# partitions than the cluster's parallelism, spread it once at the
-# catalog boundary; a wide input (the 100 TB case, thousands of
-# splits) is left untouched, so the exchange exists only when the
-# input is too narrow to use the machine.  Value-safety of a catalog
-# repartition is exactly what the --perturb determinism gate proves
-# for every registered query (it re-shards every scan this same way).
-_SPREAD_TABLES = {"documents", "embeddings"}
-
 
 def _pin_if_broadcast_sized(spark: SparkSession, df: DataFrame) -> None:
     """``df.cache()`` when the optimizer's size estimate — the quantity
@@ -81,9 +66,11 @@ def _pin_if_broadcast_sized(spark: SparkSession, df: DataFrame) -> None:
         df.cache()
 
 
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None,
-               spread: bool = True) -> DataFrame:
+def load_table(spark: SparkSession, name: str,
+               sf_dir: str | None = None) -> DataFrame:
     """Scan a catalog table. Lazy; nothing runs until an action.
+    A narrow scan is not spread here: a per-row kernel spreads its own
+    input (``operators.spread``).
 
     The normalized DataFrame is memoized per (session, path): the
     ``df.dtypes`` probe and the cast projection cost a JVM round-trip
@@ -101,7 +88,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None,
     the parquet file again (the reference's reads are lookups against
     data the database already holds).  The pin is built by the first
     action that scans the table and lives as long as the session; the
-    perturb and spread variants are built on the pinned base.  Anything
+    perturb variant is built on the pinned base.  Anything
     the broadcast rule would not broadcast (sf1 ``lineitem``, every
     table at 100 TB) is not pinned and plans exactly as before; a
     threshold <= 0 disables pinning.  ``spark.catalog.clearCache()``
@@ -116,14 +103,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None,
     # nondeterministic (the r11 tpch_q11 half-cent ROUND(SUM(double))
     # class) and would flake the driver's value hash.
     perturb = os.environ.get("SPARK_GRAFT_PERTURB")
-    spread_env = os.environ.get("NSJS_CATALOG_SPREAD", "1")
-    cache_key = (path, perturb, bool(spread), spread_env)
     cache = getattr(spark, "_nsjs_table_cache", None)
     if cache is None:
         cache = {}
         spark._nsjs_table_cache = cache
-    if cache_key in cache:
-        return cache[cache_key]
     df = cache.get(path)  # the pinned base, shared by every variant
     if df is None:
         nanos_cols = _NANOS_TS_COLS.get(name, ())
@@ -139,24 +122,11 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None,
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
         _pin_if_broadcast_sized(spark, df)
         cache[path] = df
-    if perturb:
-        df = df.repartition(int(perturb))
-    elif spread and name in _SPREAD_TABLES and spread_env != "0":
-        # NSJS_CATALOG_SPREAD=0 disables the spread — the A/B seam the
-        # r15 verdict asked for (measure the session-wide default on a
-        # fixed query sample before trusting it); production value is
-        # moot (wide inputs skip the branch via the partition probe).
-        # ``spread=False`` is the per-CONSUMER opt-out (r16): the r15
-        # default was measured net-negative for query families whose
-        # plans shuffle the table immediately anyway (IVF/GEMM probes,
-        # the BM25 explode->aggregate) — for those the catalog exchange
-        # is pure per-stage overhead at 32 cores, while per-row CPU
-        # kernels (codecs, shingles, quality gates) keep the win.
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:  # once per (session, path)
-            df = df.repartition(target)
-    cache[cache_key] = df
-    return df
+    if not perturb:
+        return df
+    if (path, perturb) not in cache:
+        cache[(path, perturb)] = df.repartition(int(perturb))
+    return cache[(path, perturb)]
 
 
 def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:

@@ -38,14 +38,9 @@ class Engine:
         self.sf_dir = sf_dir or catalog.DEFAULT_SF_DIR
 
     # -- sources -------------------------------------------------------
-    def table(self, name: str, spread: bool = True) -> DataFrame:
-        """Bare scan (reference S1-S6, storage.scala:593-658).
-
-        ``spread=False`` skips the catalog-level narrow-scan spread for
-        consumers whose plan shuffles the table immediately anyway
-        (see catalog.load_table)."""
-        return catalog.load_table(self.spark, name, self.sf_dir,
-                                  spread=spread)
+    def table(self, name: str) -> DataFrame:
+        """Bare scan (reference S1-S6, storage.scala:593-658)."""
+        return catalog.load_table(self.spark, name, self.sf_dir)
 
     #: live-connector formats (reference storage.scala:593-616 Mongo
     #: cursor scan, :644-658 Cassandra; drivers build.sbt:34-35,55-56)

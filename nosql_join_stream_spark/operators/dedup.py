@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nosql_join_stream_spark.operators import spread
+from nosql_join_stream_spark.sinks import artifact_dir
+
 # fixed MinHash permutation parameters: (a*x + b) mod PRIME, seeds fixed.
 # 31-bit Mersenne prime: a,b,x < 2^31 keeps a*x+b < 2^62 — no long
 # overflow under ANSI mode (2^31 hash space is ample for minhash).
@@ -50,18 +53,6 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
               .agg(F.min(id_col).alias(id_col),
                    F.count("*").alias("n_copies"))
               .drop("__h"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Raise partition count to the cluster's parallelism when the
-    input arrives under-partitioned (e.g. one small parquet file).
-    The per-doc signature/shingle kernels are CPU-bound, so a cheap
-    round-robin shuffle of the raw text buys full-core speedup; a
-    wide input (the 100 TB case) is left untouched."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def word_shingles(col, n: int = 3):
@@ -94,7 +85,7 @@ def ngram_dup_coverage(df: DataFrame, content_col: str, id_col: str,
     the gram key — AQE keeps it local) and one final agg per doc.
     Never materializes a pair space.
     """
-    sh = _spread(df).select(
+    sh = spread(df).select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(content_col), n)).alias("g"))
     sh = sh.select("id", F.xxhash64("g").alias("gh"))
@@ -180,7 +171,7 @@ def minhash_signatures(df: DataFrame, content_col: str, id_col: str,
     preserving: no shuffle until the band join.
     """
     params = _perm_params()
-    hashed = _spread(df).select(
+    hashed = spread(df).select(
         F.col(id_col).alias("id"),
         F.transform(word_shingles(F.col(content_col), n),
                     lambda g: F.pmod(F.xxhash64(g), F.lit(_PRIME))).alias("hv"))
@@ -253,7 +244,7 @@ def minhash_lsh_pairs(df: DataFrame, content_col: str, id_col: str,
     # cheaply and array_intersect compares longs; a collision altering
     # a verified count needs two distinct shingles of ONE pair
     # colliding at 64 bits, ~1e-10 corpus-wide)
-    sh = (_spread(df)
+    sh = (spread(df)
           .select(F.col(id_col).alias("id"),
                   F.array_sort(F.transform(
                       word_shingles(F.col(content_col), n),
@@ -289,7 +280,7 @@ def _shingle_sets(df: DataFrame, content_col: str, id_col: str,
                   n: int) -> DataFrame:
     """(id, sorted shingle-hash array) — the exact-verify side shared
     by the inline and standing MinHash forms."""
-    return (_spread(df)
+    return (spread(df)
             .select(F.col(id_col).alias("id"),
                     F.array_sort(F.transform(
                         word_shingles(F.col(content_col), n),
@@ -332,9 +323,7 @@ def minhash_pairs_between_bucketed(
     spark = corpus.sparkSession
     tau = float(threshold)
     if location is None:
-        import tempfile
-        location = os.path.join(tempfile.gettempdir(),
-                                f"nsjs_mh_index_{os.getpid()}")
+        location = artifact_dir("nsjs_mh_index", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
         _drop_tombstones(spark, db)  # rebuild folds retractions
@@ -647,7 +636,7 @@ def simhash_signatures(df: DataFrame, content_col: str, id_col: str,
         th = F.transform(toks, order_hash)
     else:
         raise ValueError(f"unknown token_hash: {token_hash!r}")
-    hashed = _spread(df).select(F.col(id_col).alias("id"), th.alias("th"))
+    hashed = spread(df).select(F.col(id_col).alias("id"), th.alias("th"))
 
     def op(batches):
         import numpy as _np
@@ -719,7 +708,7 @@ def decontaminate(train: DataFrame, benchmark: DataFrame,
                   .select("id", F.xxhash64("g").alias("gh")))
 
     bench_grams = grams(benchmark).select("gh").distinct()
-    hits = grams(_spread(train)).join(F.broadcast(bench_grams), "gh")
+    hits = grams(spread(train)).join(F.broadcast(bench_grams), "gh")
     return (hits.groupBy("id")
                 .agg(F.count_distinct("gh").alias("n_shared")))
 
@@ -737,7 +726,7 @@ def _shingle_prefix(df: DataFrame, content_col: str, id_col: str,
     recompute saves — recompute is a streaming scan that never holds
     the arrays resident.
     """
-    sh = (_spread(df)
+    sh = (spread(df)
             .select(F.col(id_col).alias("id"),
                     F.array_sort(F.transform(
                         word_shingles(F.col(content_col), n),
@@ -838,12 +827,10 @@ def ngram_jaccard_pairs_between_bucketed(
     spark = corpus.sparkSession
     tau = float(threshold)
     if location is None:
-        # per-process tmp dir: works from any (even read-only) cwd and
-        # isolates concurrent sessions; reuse within a process is what
-        # the standing-index story wants
-        import tempfile
-        location = os.path.join(tempfile.gettempdir(),
-                                f"nsjs_index_{os.getpid()}")
+        # run-scoped tmp dir: works from any (even read-only) cwd,
+        # isolates concurrent sessions and is removed at exit; reuse
+        # within a process is what the standing-index story wants
+        location = artifact_dir("nsjs_index", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
         from nosql_join_stream_spark.sinks import write_bucketed
@@ -960,7 +947,7 @@ def edit_distance_pairs(df: DataFrame, content_col: str, id_col: str,
     key = F.substring(
         F.regexp_replace(F.trim(F.lower(F.col(content_col))), r"\s+", " "),
         1, key_len)
-    base = (_spread(df)
+    base = (spread(df)
             .select(F.col(id_col).alias("id"), key.alias("key"))
             .withColumn("l", F.length("key"))
             .filter(F.col("l") >= 1))
@@ -1188,7 +1175,7 @@ def _token_windows(df: DataFrame, content_col: str, id_col: str,
     """(id, pos, gh): every w-token window's 0-based position and
     8-byte content hash — gram strings never leave the map side."""
     toks = F.split(F.trim(F.col(content_col)), r"\s+")
-    base = (df.select(F.col(id_col).alias("id"), toks.alias("t"))
+    base = (spread(df).select(F.col(id_col).alias("id"), toks.alias("t"))
               .filter(F.size("t") >= w))
     return base.select(
         "id",
@@ -1250,9 +1237,7 @@ def repeated_substring_spans_between(
 
     spark = corpus.sparkSession
     if location is None:
-        import tempfile
-        location = os.path.join(tempfile.gettempdir(),
-                                f"nsjs_substr_{os.getpid()}")
+        location = artifact_dir("nsjs_substr", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
         from nosql_join_stream_spark.sinks import write_bucketed

@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nosql_join_stream_spark.operators import spread
+
 
 @dataclass
 class _Rule:
@@ -288,10 +290,9 @@ def sketch_quantiles_by_group(df: DataFrame, group_col: str,
     karg = f", {int(sketch_k)}" if sketch_k is not None else ""
     # the exact-percentile + KLL partial aggregation is the heavy
     # map-side work of this operator; an under-partitioned input (one
-    # parquet file) would run it serially, so spread first (the dedup
-    # kernel rule; a wide input is untouched)
-    from nosql_join_stream_spark.operators.dedup import _spread
-    df = _spread(df)
+    # parquet file) would run it serially, so spread first (a wide
+    # input is untouched)
+    df = spread(df)
     vals = df.select(
         F.explode(F.array(_sentinel_guarded_group(group_col),
                           F.lit("__ALL__"))).alias("grp"),

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nosql_join_stream_spark.sinks import artifact_dir
+
 MEDIA_SCHEMA = (
     "doc_id long, payload binary, media_type string, "
     "width int, height int, n_frames int"
@@ -413,9 +415,7 @@ def payload_chunks_between_bucketed(
     spark = corpus.sparkSession
     tau = float(threshold)
     if location is None:
-        import tempfile
-        location = os.path.join(tempfile.gettempdir(),
-                                f"nsjs_media_index_{os.getpid()}")
+        location = artifact_dir("nsjs_media_index", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
         _drop_tombstones(spark, db)  # rebuild folds retractions

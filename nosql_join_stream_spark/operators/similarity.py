@@ -28,6 +28,9 @@ import struct
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nosql_join_stream_spark.operators import spread
+from nosql_join_stream_spark.sinks import artifact_dir
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -332,6 +335,7 @@ def jl_project(df: DataFrame, out_dim: int, id_col: str = "vec_id",
                             lambda x, i: x.cast("double")
                             * _jl_sign(i, j).cast("double")),
                 F.lit(0.0), lambda acc, x: acc + x) * scale, 6))
+    df = spread(df)
     if not flat:
         # vector form for downstream similarity ops (still row-local)
         return df.select(F.col(id_col), y.alias("jl_embedding"))
@@ -501,9 +505,9 @@ def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
     absmax = F.array_max(F.transform(v, F.abs))
     scale = F.when(absmax > 0, absmax / F.lit(127.0)).otherwise(F.lit(1.0))
     q = F.transform(v, lambda x: F.round(x / scale).cast("int"))
-    return df.select(F.col(id_col),
-                     F.round(scale, 8).alias("scale"),
-                     q.alias("q_embedding"))
+    return spread(df).select(F.col(id_col),
+                             F.round(scale, 8).alias("scale"),
+                             q.alias("q_embedding"))
 
 
 def _ivf_centroids(corpus: DataFrame, vec: str, id_col: str,
@@ -968,8 +972,7 @@ def cluster_assign(df: DataFrame, k: int = 8, id_col: str = "vec_id",
                 "sim": sims[np.arange(len(best)), best],
             })
 
-    from nosql_join_stream_spark.operators.dedup import _spread
-    return _spread(df.select(id_col, vec)).mapInPandas(op, out_schema)
+    return spread(df.select(id_col, vec)).mapInPandas(op, out_schema)
 
 
 def _pq_codebooks(df: DataFrame, id_col: str, vec: str, m: int, k: int,
@@ -1057,8 +1060,7 @@ def pq_encode(df: DataFrame, id_col: str = "vec_id",
                 "recon_cos": _np.round(num / den, 4),
             })
 
-    from nosql_join_stream_spark.operators.dedup import _spread
-    return _spread(df.select(id_col, vec)).mapInPandas(
+    return spread(df.select(id_col, vec)).mapInPandas(
         op, schema=f"{id_col} long, codes_json string, recon_cos double")
 
 
@@ -1572,7 +1574,6 @@ def ann_ivf_partitioned(queries: DataFrame, corpus: DataFrame,
     the same ``meta_cols`` so maintenance preserves the layout.
     """
     import os
-    import tempfile
 
     import numpy as np
 
@@ -1580,8 +1581,7 @@ def ann_ivf_partitioned(queries: DataFrame, corpus: DataFrame,
 
     spark = corpus.sparkSession
     if location is None:
-        location = os.path.join(tempfile.gettempdir(),
-                                f"nsjs_ivf_{os.getpid()}")
+        location = artifact_dir("nsjs_ivf", "default")
     cent_path = os.path.join(location, "centroids.parquet")
     index_path = os.path.join(location, "corpus_cells")
 

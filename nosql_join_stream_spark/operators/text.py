@@ -15,6 +15,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from nosql_join_stream_spark.operators import spread
+
 # Small, fixed stopword lists (top function words) — enough for an
 # n-gram/stopword-heuristic language ID, deterministic and
 # SQL-mirrorable. Order matters: ties break in this order.
@@ -159,9 +161,9 @@ def novelty_ratio(df, content_col: str, id_col: str, n: int = 3):
     """
     from pyspark.sql import Window
 
-    from nosql_join_stream_spark.operators.dedup import _spread, word_shingles
+    from nosql_join_stream_spark.operators.dedup import word_shingles
 
-    grams = (_spread(df)
+    grams = (spread(df)
              .select(F.col(id_col).alias("id"),
                      F.explode(word_shingles(F.col(content_col), n))
                       .alias("g"))
@@ -336,8 +338,8 @@ def drop_common_paragraphs(df, content_col: str, id_col: str,
     paras = F.transform(
         F.sequence(F.lit(0), n_paras - 1),
         lambda i: F.array_join(F.slice(toks, i * w + 1, w), " "))
-    p = (df.select(F.col(id_col).alias("id"),
-                   F.posexplode(paras).alias("i", "para"))
+    p = (spread(df).select(F.col(id_col).alias("id"),
+                           F.posexplode(paras).alias("i", "para"))
            .withColumn("ph", F.xxhash64("para")))
     dfreq = (p.select("id", "ph").distinct()
               .groupBy("ph").agg(F.count("*").alias("nd")))
@@ -546,7 +548,7 @@ def mixed_language_report(df, content_col: str, id_col: str,
         F.sequence(F.lit(0), n_blocks - 1),
         lambda i: F.array_join(
             F.slice(toks, i * block_tokens + 1, block_tokens), " ")))
-    blocks = df.select(F.col(id_col).alias("id"), block.alias("blk"))
+    blocks = spread(df).select(F.col(id_col).alias("id"), block.alias("blk"))
     counts = {lg: stopword_hits(F.col("blk"), STOPWORDS[lg])
               for lg in LANG_ORDER}
     best = F.greatest(*counts.values())

@@ -19,12 +19,8 @@ in round 5 on MMR scores).
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -34,27 +30,7 @@ from pyspark.sql import functions as F
 from nosql_join_stream_spark.engine import Engine
 from nosql_join_stream_spark.dsl import q
 from nosql_join_stream_spark.operators.join import inner_join
-
-# --- standing-artifact location ------------------------------------------
-# Queries with build-once-serve-many semantics (standing dedup/ANN
-# indexes, CDC tables, stream run dirs) key their artifact dir on a
-# SESSION-UNIQUE token, not the bare pid: pids recycle, so a later
-# process could inherit a stale artifact built from different data and
-# silently serve it against a fresh oracle (r11 advisor).  The token is
-# minted once per interpreter; every dir handed out is rmtree'd at
-# process exit so temp space doesn't accumulate across runs.
-
-_RUN_TOKEN = uuid.uuid4().hex[:12]
-_ARTIFACT_DIRS: set[str] = set()
-
-
-def artifact_dir(prefix: str, tag: str) -> str:
-    """Session-scoped standing-artifact directory (stable within this
-    process, collision-free across processes, cleaned up at exit)."""
-    d = os.path.join(tempfile.gettempdir(), f"{prefix}_{_RUN_TOKEN}_{tag}")
-    _ARTIFACT_DIRS.add(d)
-    return d
-
+from nosql_join_stream_spark.sinks import artifact_dir
 
 def sf_tag(sf_dir: str) -> str:
     """Artifact tag for a catalog dir: the human-readable basename PLUS
@@ -66,12 +42,6 @@ def sf_tag(sf_dir: str) -> str:
     p = os.path.abspath(os.path.normpath(sf_dir))
     base = os.path.basename(p).replace(".", "_")
     return f"{base}_{hashlib.sha256(p.encode()).hexdigest()[:8]}"
-
-
-@atexit.register
-def _cleanup_artifact_dirs() -> None:
-    for d in _ARTIFACT_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @dataclass

@@ -21,7 +21,7 @@ from nosql_join_stream_spark.queries import (_engine, artifact_dir, register,
                                              sf_tag)
 from nosql_join_stream_spark import sinks
 from nosql_join_stream_spark.operators import dedup, similarity, text
-from nosql_join_stream_spark.operators import multimodal
+from nosql_join_stream_spark.operators import multimodal, spread
 
 _STOP_EN = ",".join(f"'{w}'" for w in text.STOPWORDS["en"])
 
@@ -416,7 +416,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = e.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10) \
                  .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    corpus = spread(emb.select(F.col("vec_id").alias("c_id"), "embedding"))
     return similarity.cosine_topk(queries, corpus, k=5)
 
 
@@ -526,7 +526,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
     t = F.col("text")
-    return e.table("documents").select(
+    return spread(e.table("documents")).select(
         "doc_id",
         F.length(t).alias("n_chars"),
         text.token_count(t).alias("n_tokens"),
@@ -599,7 +599,8 @@ def _lang_in(lg: str) -> str:
 )
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    d = e.table("documents").withColumn("lang_guess", text.lang_id(F.col("text")))
+    d = spread(e.table("documents")).withColumn(
+        "lang_guess", text.lang_id(F.col("text")))
     return (d.groupBy("lang", "lang_guess").agg(F.count("*").alias("n"))
              .orderBy("lang", "lang_guess"))
 
@@ -743,7 +744,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "payload", "media_type", "width", "height",
                 "n_frames"])
 
-    media = docs.mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
+    media = spread(docs).mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
     feats = multimodal.extract_features(media, batch_decode=True)
     return feats.select("doc_id", "width", "height", "mean_luma")
 
@@ -803,7 +804,7 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "payload", "media_type", "width", "height",
                 "n_frames"])
 
-    media = docs.mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
+    media = spread(docs).mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
     feats = multimodal.extract_features(media, batch_decode=True)
     return feats.select("doc_id", "media_type", "mean_luma")
 
@@ -875,8 +876,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back to one task; the Python encode+decode kernels are the cost
     # here and parallelize per row, so force an EXPLICIT task count
     # (AQE honors user-numbered repartitions)
-    par = spark.sparkContext.defaultParallelism
-    media = (docs.repartition(par, "doc_id")
+    media = (spread(docs)
              .mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA))
     feats = (multimodal.extract_features(media, batch_decode=True)
              .select("doc_id", F.col("mean_luma").alias("__decoded")))
@@ -972,8 +972,7 @@ def multimodal_decode_jpeg_rgb(spark: SparkSession,
 
     # explicit task count for the Python encode/decode kernels (the
     # same AQE-coalesce note as multimodal_decode_jpeg)
-    par = spark.sparkContext.defaultParallelism
-    dec = (docs.repartition(par, "doc_id")
+    dec = (spread(docs)
            .mapInPandas(plant, schema="doc_id long, payload binary")
            .mapInPandas(decode, schema="doc_id long, dec_r double, "
                                        "dec_g double, dec_b double"))
@@ -1108,15 +1107,14 @@ def _clean_corpus(spark: SparkSession, sf_dir: str, pair_fn) -> DataFrame:
     # The lazy checkpoint below the quality gate is a predicate-
     # pushdown BARRIER: without it Catalyst pushes the quality filter
     # (the heaviest row expression in the repo: split x4 +
-    # regexp_extract_all per doc) through the catalog's spread
-    # repartition onto the single-file scan task, serializing it on
-    # one core — measured 1.2 s single-task stages, evaluated once
-    # per consumer.  The checkpoint pins the spread 32-way layout,
-    # and checkpointing `base` makes its three consumers (pair
-    # generation, resolution, final join) read the filtered rows
-    # instead of re-running the gate.
-    docs = (e.table("documents").select("doc_id", "text")
-             .localCheckpoint(eager=False))
+    # regexp_extract_all per doc) through the spread repartition onto
+    # the single-file scan task, serializing it on one core — measured
+    # 1.2 s single-task stages, evaluated once per consumer.  The
+    # checkpoint pins the spread layout, and checkpointing `base`
+    # makes its three consumers (pair generation, resolution, final
+    # join) read the filtered rows instead of re-running the gate.
+    docs = (spread(e.table("documents").select("doc_id", "text"))
+            .localCheckpoint(eager=False))
     base = (docs.withColumn("quality", text.quality_score(F.col("text")))
                 .filter(F.col("quality") >= 0.7)
                 .select("doc_id", "text")
@@ -1864,7 +1862,7 @@ def embedding_pca_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
+    emb = spread(e.table("embeddings"))
     comps, eig, mean = similarity.pca_components(emb, 4)
     proj = similarity.pca_project(emb, 4, components=comps, mean=mean)
     white = similarity.pca_project(emb, 4, components=comps,
@@ -2879,7 +2877,7 @@ def text_novelty_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
     norm = text.normalize_text(F.col("text"))
-    return e.table("documents").select(
+    return spread(e.table("documents")).select(
         "doc_id",
         F.length(norm).alias("norm_chars"),
         text.fingerprint(norm).alias("norm_fp"))
@@ -3110,7 +3108,7 @@ def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
     red = text.redact_pii(F.col("text"))
     counts = text.pii_counts(F.col("text"))
-    return e.table("documents").select(
+    return spread(e.table("documents")).select(
         "doc_id",
         *[c.alias(k) for k, c in counts.items()],
         F.sha2(red, 256).alias("redacted_sha"),
@@ -3284,8 +3282,8 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
     e = _engine(spark, sf_dir)
-    bench_grams = (e.table("documents")
-                   .filter(F.col("doc_id") % 25 == 0)
+    bench_grams = (spread(e.table("documents")
+                          .filter(F.col("doc_id") % 25 == 0))
                    .select(F.explode(dedup.word_shingles(F.col("text"), 3))
                             .alias("g"))
                    .select(F.xxhash64("g").alias("gh")).distinct())
@@ -3398,7 +3396,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams = F.zip_with(F.slice(toks, 1, cnt),
                          F.slice(toks, 2, cnt),
                          lambda x, y: F.concat_ws(" ", x, y))
-    grams = (dedup._spread(e.table("documents"))
+    grams = (spread(e.table("documents"))
              .filter(F.size(toks) >= 2)
              .select("doc_id", F.explode(bigrams).alias("g")))
     c = grams.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
@@ -4107,7 +4105,7 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = e.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10) \
                  .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    corpus = spread(emb.select(F.col("vec_id").alias("c_id"), "embedding"))
     return similarity.mmr_topk(queries, corpus, k=5, pool=20, lam=0.7)
 
 
@@ -6852,13 +6850,8 @@ def _retrieval_eval_oracle(n_queries: int = 10, k: int = 10,
 def retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.operators import retrieval
     e = _engine(spark, sf_dir)
-    # spread=False: both tables are exchanged immediately by the plan
-    # (tokenize->explode->tf aggregate; broadcast cosine), so the
-    # catalog spread is an extra Exchange under every leg — measured
-    # 4.92 -> 3.65 s min-of-2 without it (r16 A/B, 32 cores).
     return retrieval.retrieval_eval(
-        e.table("documents", spread=False),
-        e.table("embeddings", spread=False), "text", "doc_id")
+        e.table("documents"), e.table("embeddings"), "text", "doc_id")
 
 
 @register(
@@ -7161,17 +7154,11 @@ _BITEXT_PLANTED_ORACLE = f"""
     """
 
 
-def _bitext_planted_inputs(e, spread: bool = True):
+def _bitext_planted_inputs(e):
     """The shared plant: every 17th document gets a same-embedding
     'translated twin' (lang 'planted', +_BITEXT_OFF id) — returns
-    (all_vectors, id→lang map) for any pair-source tier.
-
-    ``spread=False`` for the IVF-probe tiers: their plans exchange the
-    vectors immediately (banded-pair groupBy, cell cogroup), so the
-    catalog spread under every leg is measured pure overhead at 32
-    cores (r16 A/B: mine_bitext_margin_ivf 3.69→2.73 s min-of-2)."""
-    emb = e.table("embeddings", spread=spread) \
-           .select("vec_id", "embedding")
+    (all_vectors, id→lang map) for any pair-source tier."""
+    emb = e.table("embeddings").select("vec_id", "embedding")
     twins = (emb.filter(F.col("vec_id") % 17 == 0)
                 .select((F.col("vec_id") + _BITEXT_OFF).alias("vec_id"),
                         "embedding"))
@@ -7244,8 +7231,7 @@ def mine_bitext_planted_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "within-cluster curation.",
 )
 def mine_bitext_planted_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    allv, langs = _bitext_planted_inputs(_engine(spark, sf_dir),
-                                         spread=False)
+    allv, langs = _bitext_planted_inputs(_engine(spark, sf_dir))
     pairs = similarity.embedding_near_dup_pairs_ivf(
         allv, "vec_id", "embedding", threshold=0.9, k=8)
     return _bitext_attach_langs(pairs, langs)
@@ -7447,10 +7433,8 @@ def text_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit task count for the Python parse kernel: the sf0.1
     # parquet is one split, which would serialize the HTMLParser
     # batches (the multimodal_decode_jpeg AQE-coalesce note)
-    par = spark.sparkContext.defaultParallelism
-    planted = _html_plant(e.table("documents")
-                           .select("doc_id", "text", "source")
-                           .repartition(par, "doc_id"))
+    planted = _html_plant(spread(e.table("documents")
+                                 .select("doc_id", "text", "source")))
     return text.extract_html_text(planted, "html", "doc_id")
 
 
@@ -7563,8 +7547,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "channel", "sample_rate", "n_samples",
                 "min_s", "max_s", "sum_s", "sum_abs", "checksum"])
 
-    par = spark.sparkContext.defaultParallelism
-    return (docs.repartition(par, "doc_id")
+    return (spread(docs)
             .mapInPandas(plant, schema="doc_id long, payload binary")
             .mapInPandas(decode, schema="doc_id long, channel int, "
                          "sample_rate long, n_samples long, min_s long, "
@@ -7702,10 +7685,8 @@ _HTML_CLEAN_ORACLE = """
 )
 def text_extract_html_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    planted = _html_plant(e.table("documents")
-                           .select("doc_id", "text", "source")
-                           .repartition(par, "doc_id"))
+    planted = _html_plant(spread(e.table("documents")
+                                 .select("doc_id", "text", "source")))
     blocks = text.extract_html_text(planted, "html", "doc_id")
     content = F.array_join(
         F.transform(
@@ -7790,8 +7771,7 @@ def multimodal_wav_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "channel", "window_id", "win_len",
                 "sum_sq", "peak", "zero_cross"])
 
-    par = spark.sparkContext.defaultParallelism
-    return (docs.repartition(par, "doc_id")
+    return (spread(docs)
             .mapInPandas(plant, schema="doc_id long, payload binary")
             .mapInPandas(feats, schema="doc_id long, channel int, "
                          "window_id int, win_len long, sum_sq long, "
@@ -7845,8 +7825,7 @@ def _planted_link_edges(spark, e):
     the closed-form oracle pins it."""
     docs = e.table("documents").select("doc_id", "text", "source")
     n_docs = docs.count()          # bounded scalar (id domain size)
-    par = spark.sparkContext.defaultParallelism
-    planted = _html_plant(docs.repartition(par, "doc_id"), n_docs=n_docs)
+    planted = _html_plant(spread(docs), n_docs=n_docs)
     links = text.extract_html_links(planted, "html", "doc_id")
     return (links
             .filter(F.col("href").rlike(r"^/doc/[0-9]+$"))
@@ -8085,8 +8064,7 @@ def multimodal_decode_audio_multi(spark: SparkSession,
                 "n_samples", "min_s", "max_s", "sum_s", "sum_abs",
                 "checksum"])
 
-    par = spark.sparkContext.defaultParallelism
-    return (docs.repartition(par, "doc_id")
+    return (spread(docs)
             .mapInPandas(plant, schema="doc_id long, payload binary")
             .mapInPandas(decode, schema="doc_id long, container string, "
                          "channel int, sample_rate long, n_samples long, "
@@ -8132,8 +8110,7 @@ def stream_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "channel", "sample_rate", "n_samples",
                 "min_s", "max_s", "sum_s", "sum_abs", "checksum"])
 
-    par = spark.sparkContext.defaultParallelism
-    dec = (stream.repartition(par)
+    dec = (spread(stream)
            .mapInPandas(plant, schema="doc_id long, payload binary")
            .mapInPandas(decode, schema="doc_id long, channel int, "
                         "sample_rate long, n_samples long, min_s long, "
@@ -8441,8 +8418,7 @@ _BITEXT_MARGIN_SET_ORACLE = (
         "user runs THIS shape end-to-end.",
 )
 def mine_bitext_margin_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    allv, langs = _bitext_planted_inputs(_engine(spark, sf_dir),
-                                         spread=False)
+    allv, langs = _bitext_planted_inputs(_engine(spark, sf_dir))
     # standing-index semantics (ann_ivf_partitioned registry pattern):
     # build once per process per sf, probe thereafter.  n_cells scales
     # with the corpus at constant target cell SIZE (the standard IVF
@@ -8532,9 +8508,8 @@ def stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_table_stream(spark, path,
                                spark.read.parquet(path).schema
                                ).select("doc_id", "text", "source")
-    par = spark.sparkContext.defaultParallelism
     blocks = text.extract_html_text(
-        _html_plant(stream.repartition(par)), "html", "doc_id")
+        _html_plant(spread(stream)), "html", "doc_id")
     return run_available_now(blocks, "stream_html_extract",
                              output_mode="append")
 
@@ -8602,10 +8577,8 @@ from nosql_join_stream_spark.operators import warc as warc_ops  # noqa: E402
 )
 def pipeline_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    planted = _html_plant(e.table("documents")
-                          .select("doc_id", "text", "source")
-                          .repartition(par, "doc_id"))
+    planted = _html_plant(spread(e.table("documents")
+                                 .select("doc_id", "text", "source")))
 
     # ONE Arrow kernel for the WARC transport roundtrip (r16, guide
     # §4): the r15 shape shipped the gzip'd WARC payload JVM->Python->
@@ -8762,9 +8735,7 @@ _URL_DEDUP_ORACLE = """
 )
 def pipeline_crawl_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    d = (e.table("documents").select("doc_id")
-         .repartition(par, "doc_id"))
+    d = spread(e.table("documents").select("doc_id"))
     did = F.col("doc_id").cast("string")
 
     # All four URL variants ride ONE scan via explode (r15): the
@@ -8993,7 +8964,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _first(k: int):
         return F.array_join(F.slice(w0, 1, k), " ")
 
-    planted = e.table("documents").select(
+    planted = spread(e.table("documents")).select(
         "doc_id",
         F.concat(
             t,
@@ -9122,8 +9093,7 @@ def web_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
     docs = e.table("documents").select("doc_id", "text", "source")
     n_docs = docs.count()              # bounded scalar (id domain size)
-    par = spark.sparkContext.defaultParallelism
-    planted = _html_plant(docs.repartition(par, "doc_id"),
+    planted = _html_plant(spread(docs),
                           n_docs=n_docs)
     links = (text.extract_html_links(planted, "html", "doc_id")
              .filter(F.col("href").rlike(r"^/doc/[0-9]+$"))
@@ -9263,13 +9233,12 @@ def stream_repetition_filter(spark: SparkSession,
     from nosql_join_stream_spark.streaming.log_stream import (
         DOCUMENTS_SCHEMA, read_table_stream, run_available_now)
     from nosql_join_stream_spark.catalog import table_path
-    par = spark.sparkContext.defaultParallelism
     # one explicit repartition decouples the heavy HOF expression's
     # parallelism from the source FILE layout (file-stream batches
     # partition by file, not row group — the stream_audio_decode
     # discipline); the batch operator itself stays Exchange-free
-    docs = read_table_stream(spark, table_path(sf_dir, "documents"),
-                             DOCUMENTS_SCHEMA).repartition(par)
+    docs = spread(read_table_stream(spark, table_path(sf_dir, "documents"),
+                                    DOCUMENTS_SCHEMA))
     t = F.trim(F.col("text"))
     w0 = F.split(t, " ")
 
@@ -9383,11 +9352,10 @@ _DHASH_ORACLE = """
 )
 def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
     # the id table is KB-sized parquet (1-2 scan splits) but the plant
     # does per-row PNG encode work — spread it across the cores first
     # (the _planted_link_edges discipline)
-    docs = e.table("documents").select("doc_id").repartition(par, "doc_id")
+    docs = spread(e.table("documents").select("doc_id"))
 
     def plant(batches):
         import numpy as _np
@@ -9474,9 +9442,7 @@ _DHASH_PAIRS_ORACLE = _DHASH_ORACLE.replace(
 def multimodal_image_dhash_pairs(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    docs = e.table("documents").select("doc_id").repartition(par,
-                                                             "doc_id")
+    docs = spread(e.table("documents").select("doc_id"))
 
     def plant(batches):
         import numpy as _np
@@ -9619,9 +9585,7 @@ def multimodal_video_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    docs = e.table("documents").select("doc_id").repartition(par,
-                                                             "doc_id")
+    docs = spread(e.table("documents").select("doc_id"))
 
     def plant(batches):
         import numpy as _np
@@ -9793,9 +9757,7 @@ _AUDIO_FP_ORACLE = """
 def multimodal_audio_fingerprint(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    par = spark.sparkContext.defaultParallelism
-    docs = e.table("documents").select("doc_id").repartition(par,
-                                                             "doc_id")
+    docs = spread(e.table("documents").select("doc_id"))
 
     def plant_fp(batches):
         import numpy as _np

@@ -52,6 +52,16 @@ def _stream_ckpt_root() -> str:
     return _STREAM_CKPT_ROOT[0]
 
 
+def _driver_mem() -> str:
+    """Default driver heap: a third of the host's physical memory, in
+    whole GB, between 1g and 16g.  In local mode the driver JVM is the
+    whole cluster, so a fixed 16g on a 15 GB host lets a second session
+    started beside the first (a gate run beside the test suite) grow
+    both heaps past the host and get OOM-killed."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 3 // 2**30))}g"
+
+
 def get_session(app_name: str = "nosql_join_stream_spark",
                 cpus: str | int | None = None,
                 shuffle_partitions: int | None = None,
@@ -125,7 +135,8 @@ def get_session(app_name: str = "nosql_join_stream_spark",
         # Set here, once, so no read path mutates session conf mid-run.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
     )
     active = SparkSession.getActiveSession()
     if active is None:

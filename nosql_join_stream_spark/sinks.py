@@ -19,9 +19,12 @@ layout decisions that matter at 100 TB:
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
 import re
+import shutil
+import tempfile
 import uuid
 from collections.abc import Callable, Sequence
 
@@ -75,6 +78,30 @@ def write_observed(df: DataFrame, path: str,
     write_table(observed, path, fmt=fmt, mode=mode,
                 partition_by=partition_by, sort_by=sort_by)
     return obs.get
+
+
+# Standing artifacts with build-once-serve-many semantics (indexes,
+# CDC tables, stream run dirs) key their default dir on a token minted
+# once per interpreter, not on the bare pid: pids recycle, so a later
+# process could inherit a stale artifact built from different data and
+# silently serve it.  Every dir handed out is rmtree'd at process exit
+# so temp space doesn't accumulate across runs.
+_RUN_TOKEN = uuid.uuid4().hex[:12]
+_ARTIFACT_DIRS: set[str] = set()
+
+
+def artifact_dir(prefix: str, tag: str) -> str:
+    """Session-scoped standing-artifact directory (stable within this
+    process, collision-free across processes, cleaned up at exit)."""
+    d = os.path.join(tempfile.gettempdir(), f"{prefix}_{_RUN_TOKEN}_{tag}")
+    _ARTIFACT_DIRS.add(d)
+    return d
+
+
+@atexit.register
+def _cleanup_artifact_dirs() -> None:
+    for d in _ARTIFACT_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # Every artifact dir ``standing`` built in this process, in build order.
@@ -612,24 +639,36 @@ def write_keyed_snapshot(df: DataFrame, path: str, key_col: str,
     """Bootstrap a versioned keyed table (version 1).  ``df`` must be
     one-row-per-key (:func:`latest_per_key`).  Returns the version.
 
-    The stamped frame is localCheckpointed ONCE: the write and the
-    manifest's bucket list both resolve from that materialization, so
-    the source is scanned exactly once — a read-once or
+    The manifest's bucket list is the written dir's listing, so the
+    source is scanned exactly once, by the write — a read-once or
     non-deterministic upstream (kafka batch, ``.sample()``) cannot
     diverge between the data written and the buckets the manifest
     claims.  ``num_buckets`` is fixed for the table's life; it should
     scale with table size until one bucket is a comfortable rewrite
     quantum (e.g. a few GB)."""
     spark = df.sparkSession
-    stamped = (df.withColumn(_KB, _key_bucket(key_col, num_buckets))
-                 .localCheckpoint(eager=False))  # write materializes
-    (stamped.repartition(_KB)
+    (df.withColumn(_KB, _key_bucket(key_col, num_buckets))
+     .repartition(_KB)
      .sortWithinPartitions(key_col)
      .write.mode("overwrite").partitionBy(_KB).parquet(path + "/v1"))
-    kbs = sorted(r[_KB] for r in stamped.select(_KB).distinct().collect())
     _write_manifest(spark, path, 1, key_col, num_buckets,
-                    {kb: "v1" for kb in kbs}, schema=_schema_fields(df))
+                    {kb: "v1" for kb in _written_buckets(spark, path + "/v1")},
+                    schema=_schema_fields(df))
     return 1
+
+
+def _written_buckets(spark: SparkSession, data_dir: str) -> set[int]:
+    """The buckets a write actually produced: its ``__kb=<b>`` dirs
+    (one FS listing, metadata cost).  A bucket with no rows has no
+    dir."""
+    jvm = spark._jvm
+    d = jvm.org.apache.hadoop.fs.Path(data_dir)
+    fs = d.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(d):
+        return set()
+    return {int(st.getPath().getName()[len(_KB) + 1:])
+            for st in fs.listStatus(d)
+            if st.getPath().getName().startswith(_KB + "=")}
 
 
 def _read_buckets(spark: SparkSession, path: str, buckets: dict,
@@ -817,17 +856,8 @@ def upsert_keyed_snapshot(spark: SparkSession, path: str, batch: DataFrame,
          .parquet(f"{path}/{ver_dir}"))
         # the bucket map reflects what the merge actually WROTE: a
         # touched bucket whose keys were all deleted produces no
-        # partition dir and leaves the manifest (one FS listing —
-        # metadata-cost, correct for plain upserts too)
-        jvm = spark._jvm
-        vd = jvm.org.apache.hadoop.fs.Path(f"{path}/{ver_dir}")
-        fs = vd.getFileSystem(spark._jsc.hadoopConfiguration())
-        written = set()
-        if fs.exists(vd):
-            for st in fs.listStatus(vd):
-                nm = st.getPath().getName()
-                if nm.startswith(_KB + "="):
-                    written.add(int(nm[len(_KB) + 1:]))
+        # partition dir and leaves the manifest
+        written = _written_buckets(spark, f"{path}/{ver_dir}")
         new_map = dict(buckets)
         for kb in touched:
             if kb in written:

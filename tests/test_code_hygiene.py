@@ -43,3 +43,52 @@ def test_registry_functions_have_no_unused_local_imports():
     assert files
     hits = [h for f in files for h in _unused_local_imports(f)]
     assert not hits, f"{len(hits)} unused function-local imports: {hits}"
+
+
+def _calls_in_default_locations(path: str) -> list[tuple[str, str]]:
+    """(function, called name) for each call in an ``if location is
+    None:`` block — how an operator picks its default standing dir."""
+    tree = ast.parse(open(path).read(), path)
+    out = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.If)
+                    and isinstance(node.test, ast.Compare)
+                    and isinstance(node.test.left, ast.Name)
+                    and node.test.left.id == "location"):
+                for c in ast.walk(node):
+                    if isinstance(c, ast.Call):
+                        f = c.func
+                        out.append((fn.name, getattr(f, "attr", None)
+                                    or getattr(f, "id", None)))
+    return out
+
+
+def test_default_standing_locations_use_artifact_dir():
+    calls = [(os.path.basename(f), fn, name)
+             for f in glob.glob(os.path.join(PKG, "operators", "*.py"))
+             for fn, name in _calls_in_default_locations(f)]
+    assert len([c for c in calls if c[2] == "artifact_dir"]) >= 5, calls
+    assert not [c for c in calls if c[2] == "getpid"], calls
+
+
+def test_default_parallelism_is_read_only_by_spread():
+    """One narrow-input spread rule: ``defaultParallelism`` is read only
+    inside ``operators.spread``, so inlined repartition copies cannot
+    grow back."""
+    hits = []
+    for f in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        tree = ast.parse(open(f).read(), f)
+        allowed = set()
+        if f.endswith(os.path.join("operators", "__init__.py")):
+            allowed = {id(n) for fn in tree.body
+                       if isinstance(fn, ast.FunctionDef)
+                       and fn.name == "spread" for n in ast.walk(fn)}
+        hits += [f"{os.path.relpath(f, PKG)}:{n.lineno}"
+                 for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute)
+                 and n.attr == "defaultParallelism"
+                 and id(n) not in allowed]
+    assert not hits, hits

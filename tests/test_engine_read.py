@@ -304,17 +304,24 @@ def test_perturb_seam_reshards_catalog_scans(spark, sf_dir):
     assert after.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
 
 
-def test_catalog_spread_env_keys_the_cache(spark, sf_dir, monkeypatch):
-    """Toggling NSJS_CATALOG_SPREAD inside one process must not hand
-    back the other arm's cached DataFrame."""
+def test_catalog_scan_is_bare_and_spread_adds_one_exchange(spark, sf_dir):
+    """The catalog hands back the bare (pinned) scan: no Exchange.
+    ``spread`` adds exactly one exchange to a one-partition input and
+    returns an input already as wide as the cluster unchanged."""
     from nosql_join_stream_spark.catalog import load_table
+    from nosql_join_stream_spark.operators import spread
 
-    monkeypatch.setenv("NSJS_CATALOG_SPREAD", "1")
-    spread = load_table(spark, "documents", sf_dir)
-    monkeypatch.setenv("NSJS_CATALOG_SPREAD", "0")
-    plain = load_table(spark, "documents", sf_dir)
-    assert plain is not spread
-    assert load_table(spark, "documents", sf_dir) is plain
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+                 .count("Exchange")
+
+    docs = load_table(spark, "documents", sf_dir)
+    assert exchanges(docs) == 0
+    narrow = docs.coalesce(1)
+    assert exchanges(narrow) == 0
+    assert exchanges(spread(narrow)) == 1
+    wide = docs.repartition(spark.sparkContext.defaultParallelism)
+    assert spread(wide) is wide
 
 
 def test_log_from_reads_one_key_without_range_exchange(engine):

@@ -109,9 +109,9 @@ def test_ann_lsh_precision_and_recall(spark, sf_dir, engine):
 
 
 def test_multimodal_sha256_and_stub(spark, sf_dir, engine):
-    # orderBy before limit: the catalog may spread single-file tables
-    # across partitions (r15), so a bare limit is not stable across
-    # the two actions below
+    # orderBy before limit: a scan's partitioning is not part of its
+    # contract (SPARK_GRAFT_PERTURB re-shards it), so a bare limit is
+    # not stable across the two actions below
     docs = engine.table("documents").orderBy("doc_id").limit(8)
     media = multimodal.synthesize_media(docs)
     feats = multimodal.extract_features(media).collect()
@@ -875,8 +875,8 @@ def test_embed_media_stub_deterministic_and_composable(spark, sf_dir, engine):
     rows = emb.orderBy("doc_id").limit(20).collect()
     assert all(len(r.embedding) == 8 for r in rows)
     assert all(0.0 <= v < 1.0 for r in rows for v in r.embedding)
-    # deterministic across runs (ordered limit: stable row set even
-    # when the catalog spreads the scan, r15)
+    # deterministic across runs (ordered limit: stable row set under
+    # any partitioning of the scan)
     again = {r.doc_id: r.embedding
              for r in emb.orderBy("doc_id").limit(20).collect()}
     assert all(again[r.doc_id] == r.embedding for r in rows)

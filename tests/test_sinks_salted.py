@@ -211,7 +211,7 @@ def test_bucketed_incremental_index_no_corpus_shuffle(engine, spark, tmp_path):
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan
         # exactly one join-key shuffle — the batch side (the second
-        # Exchange in the plan is _spread's batch-side RoundRobin);
+        # Exchange in the plan is spread's batch-side RoundRobin);
         # a shuffled corpus side would make it two
         n_hash = plan.count("Exchange hashpartitioning")
         assert n_hash == 1, f"expected batch-side-only join shuffle:\n{plan}"

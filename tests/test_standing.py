@@ -53,3 +53,11 @@ def test_standing_failed_build_is_never_served(tmp_path):
     with pytest.raises(RuntimeError, match="half-written"):
         sinks.standing(loc, _writer(loc, calls))
     assert calls == [loc]
+
+
+def test_default_locations_carry_the_run_token():
+    """A default standing location is an ``artifact_dir``: keyed on the
+    interpreter's run token (pids recycle) and removed at exit."""
+    loc = sinks.artifact_dir("nsjs_index", "default")
+    assert sinks._RUN_TOKEN in os.path.basename(loc)
+    assert loc in sinks._ARTIFACT_DIRS

@@ -6,7 +6,6 @@ plus the sample total, as one JSON line.
 
 Environment decides the arm (set by the caller):
   NSJS_AQE_MIN_PARTITION_SIZE  (default 64k — the r15 session floor)
-  NSJS_CATALOG_SPREAD          (default 1 — the r15 catalog spread)
 
 Usage:  python tools/ab_sample.py [--reps N] [--tag LABEL] [names...]
 """
@@ -23,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 SAMPLE = [
-    # r15 spread/floor winners
+    # r15 per-row kernel / floor winners
     "retrieval_eval_metrics", "text_repetition_filter",
     "multimodal_decode_mixed", "embedding_quantize",
     "sketch_price_quantiles",
@@ -78,7 +77,6 @@ def main() -> None:
     print(json.dumps({
         "tag": tag,
         "aqe_floor": os.environ.get("NSJS_AQE_MIN_PARTITION_SIZE", "64k"),
-        "spread": os.environ.get("NSJS_CATALOG_SPREAD", "1"),
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "total_steady": round(sum(out.values()), 3),
         "steady": out,
