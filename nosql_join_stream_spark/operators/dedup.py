@@ -18,11 +18,17 @@ recall only, never precision.
 
 from __future__ import annotations
 
+import os
+import shutil
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nosql_join_stream_spark.operators import spread
-from nosql_join_stream_spark.sinks import artifact_dir
+from nosql_join_stream_spark.sinks import (
+    append_tombstones, artifact_dir, clear_tombstones, drop_tombstones,
+    read_tombstones, write_bucketed)
 
 # fixed MinHash permutation parameters: (a*x + b) mod PRIME, seeds fixed.
 # 31-bit Mersenne prime: a,b,x < 2^31 keeps a*x+b < 2^62 — no long
@@ -315,23 +321,13 @@ def minhash_pairs_between_bucketed(
     Returns (left_id [corpus], right_id [batch], jaccard).  Caller
     guarantees disjoint id sets, as in the PPJoin form.
     """
-    import os
-    import shutil
-
-    from nosql_join_stream_spark.sinks import write_bucketed
-
     spark = corpus.sparkSession
     tau = float(threshold)
     if location is None:
         location = artifact_dir("nsjs_mh_index", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
-        _drop_tombstones(spark, db)  # rebuild folds retractions
-        for t in ("corpus_bands", "corpus_sets"):
-            spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-            p = location.removeprefix("file:")
-            if os.path.isdir(os.path.join(p, t)):
-                shutil.rmtree(os.path.join(p, t), ignore_errors=True)
+        _reset_index(spark, db, ("corpus_bands", "corpus_sets"))
         write_bucketed(_minhash_band_rows(corpus, content_col, id_col,
                                           n, bands),
                        f"{db}.corpus_bands", ["bh"],
@@ -339,7 +335,7 @@ def minhash_pairs_between_bucketed(
         write_bucketed(_shingle_sets(corpus, content_col, id_col, n),
                        f"{db}.corpus_sets", ["id"],
                        num_buckets=num_buckets, sort_by=["id"])
-    tombs = _dedup_tombstones(spark, db)
+    tombs = read_tombstones(spark, _index_dir(spark, db))
     bands_l = _retract(spark.table(f"{db}.corpus_bands"), tombs, db)
     sets_l = _retract(spark.table(f"{db}.corpus_sets"), tombs, db)
     bands_r = _minhash_band_rows(batch, content_col, id_col, n, bands)
@@ -364,8 +360,7 @@ def minhash_pairs_between_bucketed(
 
 def minhash_index_append(batch: DataFrame, content_col: str, id_col: str,
                          n: int = 3, bands: int = _BANDS,
-                         db: str = "nsjs_mh_index",
-                         num_buckets: int = 16) -> int:
+                         db: str = "nsjs_mh_index") -> int:
     """Fold an ingested batch into the STANDING MinHash band index —
     the maintenance twin of ``dedup_index_append`` at the banded tier:
     after the batch dedups against the index
@@ -374,8 +369,6 @@ def minhash_index_append(batch: DataFrame, content_col: str, id_col: str,
     spec (append-stable layout, corpus never read).  The batch is
     cached through both derivations, so its SOURCE is scanned once —
     safe for read-once ingest; count = docs written."""
-    from nosql_join_stream_spark.sinks import write_bucketed
-
     spark = batch.sparkSession
     for t in ("corpus_bands", "corpus_sets"):
         if not spark.catalog.tableExists(f"{db}.{t}"):
@@ -385,39 +378,35 @@ def minhash_index_append(batch: DataFrame, content_col: str, id_col: str,
     batch = batch.select(F.col(id_col), F.col(content_col)).persist()
     try:
         sets_b = _shingle_sets(batch, content_col, id_col, n)
-        write_bucketed(_minhash_band_rows(batch, content_col, id_col,
-                                          n, bands),
-                       f"{db}.corpus_bands", ["bh"],
-                       num_buckets=num_buckets, sort_by=["bh"],
-                       mode="append")
-        write_bucketed(sets_b, f"{db}.corpus_sets", ["id"],
-                       num_buckets=num_buckets, sort_by=["id"],
-                       mode="append")
+        _append_to_index(_minhash_band_rows(batch, content_col, id_col,
+                                            n, bands), f"{db}.corpus_bands")
+        _append_to_index(sets_b, f"{db}.corpus_sets")
         n_docs = sets_b.count()
         # a previously-deleted id re-ingested here is live again
-        _clear_tombstones_for_ids(sets_b.select("id"), db)
+        clear_tombstones(sets_b.select("id"), _index_dir(spark, db))
     finally:
         batch.unpersist()
     return n_docs
 
 
 # ---------------------------------------------------------------------------
-# Standing dedup-index retraction (tombstones) — mirrors ann_ivf_delete
+# Standing dedup-index lifecycle: retraction (tombstones), rebuild, append
 # ---------------------------------------------------------------------------
 
 def dedup_index_delete(ids: DataFrame, db: str, id_col: str = "id") -> int:
     """Delete documents from a STANDING dedup index (PPJoin prefix,
-    MinHash band, or substring-gram family) WITHOUT rewriting it — the
-    takedown/license-revocation/PII-purge path a long-lived curation
-    deployment hits monthly: the doc ids append to a tombstone table
-    inside the index db, and every probe anti-joins the corpus-side
-    index rows against it (broadcast — deletions are tiny relative to
-    a 100 TB index), so the deleted doc stops generating pairs/spans
+    MinHash band, substring-gram or media-chunk family) WITHOUT
+    rewriting it — the takedown/license-revocation/PII-purge path a
+    long-lived curation deployment hits monthly: the doc ids append to
+    the index's tombstone set (``sinks.append_tombstones``, under the
+    db's location), and every probe anti-joins the corpus-side index
+    rows against it (broadcast — deletions are tiny relative to a
+    100 TB index), so the deleted doc stops generating pairs/spans
     immediately.  ``dedup_index_compact`` folds outstanding tombstones
     into the physical tables and restores the no-tombstone fast path;
-    a full rebuild folds them by construction.  Mirrors
-    ``similarity.ann_ivf_delete`` (same tombstone + compact
-    lifecycle).  Returns the number of ids appended."""
+    a full rebuild folds them by construction.  ``similarity``'s IVF
+    index keeps the same tombstone set.  Returns the number of ids
+    appended."""
     spark = ids.sparkSession
     known = ("corpus_prefix", "corpus_bands", "corpus_grams",
              "corpus_chunks")  # PPJoin / MinHash / substring / media
@@ -425,65 +414,37 @@ def dedup_index_delete(ids: DataFrame, db: str, id_col: str = "id") -> int:
         raise ValueError(
             f"no standing dedup index tables in {db}; build one first "
             "(*_between_bucketed rebuild=True)")
-    out = (ids.select(F.col(id_col).cast("long").alias("id"))
-              .localCheckpoint())
-    out.write.mode("append").format("parquet") \
-       .saveAsTable(f"{db}.tombstones")
-    return out.count()
+    return append_tombstones(ids, id_col, _index_dir(spark, db))
 
 
-def _recover_tombstone_swap(spark, db: str) -> None:
-    """Repair an interrupted ``_clear_tombstones_for_ids`` swap before
-    reading or rewriting the tombstone set.  The swap is a two-step
-    rename (tombstones→tombstones_old, staging→tombstones), so a crash
-    can leave two observable states, both repaired here:
-
-    * ``tombstones`` ABSENT + ``tombstones_old`` present (crash between
-      the renames): rename the old set back.  That set is a SUPERSET of
-      the staged survivors, so recovery errs toward keeping tombstones —
-      a purged/PII-deleted doc can never be resurrected by the crash;
-      the ids the interrupted clear meant to re-admit are simply cleared
-      again when their append is retried.
-    * both present (crash after the second rename, before the cleanup
-      DROP): the swap committed; drop the stale ``tombstones_old`` so
-      the next swap's rename doesn't fail with 'table already exists'.
-    """
-    old_exists = spark.catalog.tableExists(f"{db}.tombstones_old")
-    if not old_exists:
-        return
-    if spark.catalog.tableExists(f"{db}.tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.tombstones_old")
-    else:
-        # concurrent probes can race on the repair: the loser's rename
-        # fails because the winner already moved the table — reaching
-        # the same end state is success, not an error (r8-ADVICE)
-        try:
-            spark.sql(
-                f"ALTER TABLE {db}.tombstones_old "
-                f"RENAME TO {db}.tombstones")
-        except Exception:
-            if not spark.catalog.tableExists(f"{db}.tombstones"):
-                raise
+def _index_dir(spark, db: str) -> str:
+    """The local dir of a standing index db — its tables and its
+    tombstone set live here."""
+    return unquote(urlparse(spark.catalog.getDatabase(db).locationUri).path)
 
 
-def _dedup_tombstones(spark, db: str) -> DataFrame | None:
-    """The index's outstanding tombstones (distinct), or None — the
-    absence of the table is the steady-state fast path: probes on an
-    index with no outstanding deletes pay nothing.  When the table is
-    PRESENT no recovery check is needed (r8-ADVICE: the extra
-    ``tombstones_old`` tableExists round-trip per probe) — the
-    dangerous crash state is ``tombstones`` ABSENT mid-swap, and a
-    stale ``tombstones_old`` left after a committed swap only matters
-    to the NEXT swap, which runs its own recovery first.  Only when
-    the table is missing do we run recovery so an interrupted rename
-    is never misread as 'no tombstones' (which would resurrect purged
-    docs)."""
-    if spark.catalog.tableExists(f"{db}.tombstones"):
-        return spark.table(f"{db}.tombstones").distinct()
-    _recover_tombstone_swap(spark, db)
-    if spark.catalog.tableExists(f"{db}.tombstones"):
-        return spark.table(f"{db}.tombstones").distinct()
-    return None
+def _reset_index(spark, db: str, tables) -> None:
+    """Start a rebuild from nothing: drop each index table and remove
+    its dir (a fresh session's in-memory catalog does not know tables a
+    previous session left at the db location, and saveAsTable fails
+    with LOCATION_ALREADY_EXISTS on them), and drop the tombstone set —
+    a rebuild folds retractions by construction."""
+    loc = _index_dir(spark, db)
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
+        shutil.rmtree(os.path.join(loc, t), ignore_errors=True)
+    drop_tombstones(loc)
+
+
+def _append_to_index(df: DataFrame, table: str) -> None:
+    """Append rows to a standing index table with the table's own bucket
+    spec, read from the catalog (Spark rejects any other); every index
+    table is sorted by its bucket columns."""
+    spark = df.sparkSession
+    cols = _bucket_cols(spark, table)
+    write_bucketed(df, table, cols,
+                   num_buckets=int(_table_detail(spark, table)["Num Buckets"]),
+                   sort_by=cols, mode="append")
 
 
 def _retract(index_df: DataFrame, tombs: DataFrame | None,
@@ -497,57 +458,6 @@ def _retract(index_df: DataFrame, tombs: DataFrame | None,
             f"standing index in {db} predates doc-id attribution and "
             "cannot serve deletes; rebuild it (rebuild=True)")
     return index_df.join(F.broadcast(tombs), "id", "left_anti")
-
-
-def _drop_tombstones(spark, db: str) -> None:
-    """Full rebuild / compact folds retractions by construction —
-    clear the tombstone table (managed: DROP removes its files)."""
-    spark.sql(f"DROP TABLE IF EXISTS {db}.tombstones")
-
-
-def _clear_tombstones_for_ids(batch_ids: DataFrame, db: str) -> None:
-    """A deleted id legitimately RE-INGESTED via ``*_index_append``
-    must become probe-visible again: rewrite the tombstone table minus
-    the batch's ids.  Survivors are STAGED to a side table first and
-    swapped in with catalog renames (the ``dedup_index_compact``
-    pattern), so (a) the rewrite never reads files it is replacing,
-    and (b) the survivors never pass through the driver: the anti-join
-    writes distributively, so a mass purge (a tombstone set of
-    millions) costs one anti-join + write instead of a driver-side
-    collect.  The two-step rename does leave a crash window where
-    ``tombstones`` is transiently absent; that window is closed on the
-    READ side — ``_dedup_tombstones`` and this function both run
-    ``_recover_tombstone_swap`` first, which restores the old
-    (superset) table when only ``tombstones_old`` survives and drops a
-    stale ``tombstones_old`` when the swap committed, so probes never
-    misread the mid-swap state as 'no tombstones' and later swaps
-    never trip over the leftover.  An emptied table is dropped
-    entirely, restoring the fast path.  Mirrors
-    ``similarity._clear_tombstones_for``."""
-    spark = batch_ids.sparkSession
-    _recover_tombstone_swap(spark, db)
-    if not spark.catalog.tableExists(f"{db}.tombstones"):
-        return
-    tombs = spark.table(f"{db}.tombstones").distinct()
-    # no forced broadcast: the batch side can be arbitrarily large in
-    # a mass re-ingest — AQE picks broadcast when it actually fits
-    survivors = tombs.join(batch_ids.select(
-        F.col("id").cast("long").alias("id")), "id", "left_anti")
-    n_surv = survivors.count()
-    if n_surv == tombs.count():
-        return  # nothing cleared; leave the table untouched
-    if n_surv == 0:
-        _drop_tombstones(spark, db)
-        return
-    # one file for the takedown-sized common case; natural partitioning
-    # above that so a mass purge never funnels through a single task
-    staged = survivors if n_surv > 1_000_000 else survivors.coalesce(1)
-    spark.sql(f"DROP TABLE IF EXISTS {db}.tombstones_staging")
-    staged.write.format("parquet").saveAsTable(f"{db}.tombstones_staging")
-    spark.sql(f"ALTER TABLE {db}.tombstones RENAME TO {db}.tombstones_old")
-    spark.sql(
-        f"ALTER TABLE {db}.tombstones_staging RENAME TO {db}.tombstones")
-    spark.sql(f"DROP TABLE {db}.tombstones_old")
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -821,9 +731,6 @@ def ngram_jaccard_pairs_between_bucketed(
     the set tables the same way.  Results are identical to the inline
     form (same lossless PPJoin filters).
     """
-    import os
-    import shutil
-
     spark = corpus.sparkSession
     tau = float(threshold)
     if location is None:
@@ -833,22 +740,13 @@ def ngram_jaccard_pairs_between_bucketed(
         location = artifact_dir("nsjs_index", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
-        from nosql_join_stream_spark.sinks import write_bucketed
-        _drop_tombstones(spark, db)  # rebuild folds retractions
-        # a fresh session's in-memory catalog doesn't know tables a
-        # previous session left at this location — drop AND clear the
-        # stale dirs or saveAsTable fails with LOCATION_ALREADY_EXISTS
-        for t in ("corpus_prefix", "corpus_sets"):
-            spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-            p = location.removeprefix("file:")
-            if os.path.isdir(os.path.join(p, t)):
-                shutil.rmtree(os.path.join(p, t), ignore_errors=True)
+        _reset_index(spark, db, ("corpus_prefix", "corpus_sets"))
         sh_c, ex_c = _shingle_prefix(corpus, content_col, id_col, n, tau)
         write_bucketed(ex_c, f"{db}.corpus_prefix", ["g"],
                        num_buckets=num_buckets, sort_by=["g"])
         write_bucketed(sh_c, f"{db}.corpus_sets", ["id"],
                        num_buckets=num_buckets, sort_by=["id"])
-    tombs = _dedup_tombstones(spark, db)
+    tombs = read_tombstones(spark, _index_dir(spark, db))
     ex_l = _retract(spark.table(f"{db}.corpus_prefix"), tombs, db)
     sh_l = _retract(spark.table(f"{db}.corpus_sets"), tombs, db)
     sh_r, ex_r = _shingle_prefix(batch, content_col, id_col, n, tau)
@@ -857,8 +755,7 @@ def ngram_jaccard_pairs_between_bucketed(
 
 def dedup_index_append(batch: DataFrame, content_col: str, id_col: str,
                        n: int = 3, threshold: float = 0.6,
-                       db: str = "nsjs_index",
-                       num_buckets: int = 16) -> int:
+                       db: str = "nsjs_index") -> int:
     """Fold an ingested batch into the STANDING bucketed dedup index —
     the maintenance op that closes the incremental loop: after today's
     batch is deduped against the index
@@ -877,8 +774,6 @@ def dedup_index_append(batch: DataFrame, content_col: str, id_col: str,
     read-once ingest sources, and the returned count is the docs
     actually written (one shingle-set row per doc).
     """
-    from nosql_join_stream_spark.sinks import write_bucketed
-
     spark = batch.sparkSession
     for t in ("corpus_prefix", "corpus_sets"):
         if not spark.catalog.tableExists(f"{db}.{t}"):
@@ -890,13 +785,11 @@ def dedup_index_append(batch: DataFrame, content_col: str, id_col: str,
                                  float(threshold))
     sh_b = sh_b.persist()  # ex_b derives from sh_b: both writes + the
     try:                   # count resolve from this one materialization
-        write_bucketed(ex_b, f"{db}.corpus_prefix", ["g"],
-                       num_buckets=num_buckets, sort_by=["g"], mode="append")
-        write_bucketed(sh_b, f"{db}.corpus_sets", ["id"],
-                       num_buckets=num_buckets, sort_by=["id"], mode="append")
+        _append_to_index(ex_b, f"{db}.corpus_prefix")
+        _append_to_index(sh_b, f"{db}.corpus_sets")
         n = sh_b.count()
         # a previously-deleted id re-ingested here is live again
-        _clear_tombstones_for_ids(sh_b.select("id"), db)
+        clear_tombstones(sh_b.select("id"), _index_dir(spark, db))
     finally:
         sh_b.unpersist()
     return n
@@ -1019,55 +912,58 @@ def edit_distance_pairs(df: DataFrame, content_col: str, id_col: str,
                     .select("id1", "id2", "distance"))
 
 
-def _table_location(spark, table: str) -> str:
-    """A catalog table's storage location."""
-    return spark.sql(f"DESC EXTENDED {table}") \
-        .where("col_name = 'Location'").head()["data_type"]
+def _table_detail(spark, table: str) -> dict[str, str]:
+    """A catalog table's ``DESC EXTENDED`` rows (``Location``, ``Num
+    Buckets``, ...) as {name: value}."""
+    return {r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESC EXTENDED {table}").collect()}
 
 
-def dedup_index_compact(spark, db: str, tables_buckets=None,
-                        num_buckets: int = 16) -> dict[str, int]:
+def _bucket_cols(spark, table: str) -> list[str]:
+    """A catalog table's bucket columns."""
+    return [c.name for c in spark.catalog.listColumns(table) if c.isBucket]
+
+
+def dedup_index_compact(spark, db: str) -> dict[str, int]:
     """Compact a standing dedup index's bucketed tables — the file-
-    count maintenance both index families need: every
-    ``*_index_append`` lands one new file per bucket per batch, so a
-    year of daily appends means ~365 files per bucket and scan/open
-    overhead creeps into every probe.
+    count maintenance every index family needs: each ``*_index_append``
+    lands one new file per bucket per batch, so a year of daily
+    appends means ~365 files per bucket and scan/open overhead creeps
+    into every probe.
 
-    Mechanism: each table is rewritten FROM ITSELF (no corpus
-    re-shingle, no signature recompute — one read + one bucketed
-    write per table) into a fresh table name, then swapped in with
-    catalog renames; the bucket spec is preserved, so probe joins
-    keep their zero-corpus-Exchange plans and results are identical
-    (pinned in tests).  Write-then-rename rather than overwrite-in-
-    place because Spark (rightly) refuses a self-overwrite, and the
-    rename window leaves either the old or the new complete table
-    visible — never a partial one.
-
-    ``tables_buckets``: {table_name: bucket_cols} — defaults to the
-    PPJoin index layout (``corpus_prefix`` by gram, ``corpus_sets``
-    by id); pass the band-index layout for the MinHash family.
+    Mechanism: each bucketed table in ``db`` is rewritten FROM ITSELF
+    (no corpus re-shingle, no signature recompute — one read + one
+    bucketed write per table) into a fresh table name, then swapped in
+    with catalog renames.  The bucket columns and count are read from
+    the catalog, so one call serves the PPJoin, MinHash, substring and
+    media layouts, probe joins keep their zero-corpus-Exchange plans,
+    and results are identical (pinned in tests).  Write-then-rename
+    rather than overwrite-in-place because Spark (rightly) refuses a
+    self-overwrite, and the rename window leaves either the old or the
+    new complete table visible — never a partial one.
 
     Outstanding TOMBSTONES (``dedup_index_delete``) are folded in:
     the rewrite anti-joins each table's rows against them, then drops
-    the tombstone table — restoring the probe's no-tombstone fast
-    path, exactly like ``similarity.ann_ivf_compact``.
+    the tombstone set — restoring the probe's no-tombstone fast path,
+    exactly like ``similarity.ann_ivf_compact``.
     Returns {table: n_files_after}.
     """
-    if tables_buckets is None:
-        tables_buckets = {"corpus_prefix": ["g"], "corpus_sets": ["id"]}
-    from nosql_join_stream_spark.sinks import write_bucketed
-
-    tombs = _dedup_tombstones(spark, db)
+    layouts = {t.name: _bucket_cols(spark, f"{db}.{t.name}")
+               for t in spark.catalog.listTables(db) if not t.isTemporary}
+    layouts = {t: cols for t, cols in layouts.items() if cols}
+    if not layouts:
+        raise ValueError(f"no standing index table in {db}")
+    loc = _index_dir(spark, db)
+    tombs = read_tombstones(spark, loc)
     if tombs is not None:
         # the rewrite below reads these rows while the table swap
         # happens — pin the (tiny) tombstone list first
         tombs = tombs.localCheckpoint()
     out: dict[str, int] = {}
-    for t, bucket_cols in tables_buckets.items():
+    for t, bucket_cols in layouts.items():
         full = f"{db}.{t}"
-        if not spark.catalog.tableExists(full):
-            raise ValueError(f"no standing index table {full}")
-        sort_by = bucket_cols  # both layouts sort by their bucket key
+        detail = _table_detail(spark, full)
+        num_buckets = int(detail["Num Buckets"])
         # repartition onto the bucket spec first: bucketBy emits one
         # file per (task × bucket-touched), so without this a rewrite
         # read by many tasks can emit MORE files than it compacts —
@@ -1078,12 +974,12 @@ def dedup_index_compact(spark, db: str, tables_buckets=None,
         # with the bucketed scan, then disables that scan as unneeded
         # (no join/agg above it), so the write inherits the file-split
         # tasks and wrote as many files as it read (18 in, 18 out).
-        location = _table_location(spark, full)
-        compacted = (_retract(spark.read.parquet(location), tombs, db)
+        compacted = (_retract(spark.read.parquet(detail["Location"]),
+                              tombs, db)
                      .repartition(num_buckets, *bucket_cols))
         write_bucketed(compacted, f"{full}_compacting",
                        bucket_cols, num_buckets=num_buckets,
-                       sort_by=sort_by)
+                       sort_by=bucket_cols)
         spark.sql(f"ALTER TABLE {full} RENAME TO {db}.{t}_old")
         spark.sql(f"ALTER TABLE {db}.{t}_compacting RENAME TO {db}.{t}")
         spark.sql(f"DROP TABLE {db}.{t}_old")
@@ -1096,10 +992,10 @@ def dedup_index_compact(spark, db: str, tables_buckets=None,
         # and the managed-table renames above move directories, so the
         # swapped-in table's path can still carry the PRE-swap listing.
         # refreshByPath is the API that purges that cache layer.
-        spark.catalog.refreshByPath(_table_location(spark, full))
+        spark.catalog.refreshByPath(_table_detail(spark, full)["Location"])
         out[t] = len(spark.table(full).inputFiles())
     if tombs is not None:
-        _drop_tombstones(spark, db)
+        drop_tombstones(loc)
     return out
 
 
@@ -1230,9 +1126,6 @@ def repeated_substring_spans_between(
     (count_total >= 2  ⇔  in-corpus >= 1 OR in-batch >= 2).
     Spans then merge per batch doc as usual.
     """
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
     spark = corpus.sparkSession
@@ -1240,19 +1133,13 @@ def repeated_substring_spans_between(
         location = artifact_dir("nsjs_substr", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
-        from nosql_join_stream_spark.sinks import write_bucketed
-        _drop_tombstones(spark, db)  # rebuild folds retractions
-        spark.sql(f"DROP TABLE IF EXISTS {db}.corpus_grams")
-        p = location.removeprefix("file:")
-        if os.path.isdir(os.path.join(p, "corpus_grams")):
-            shutil.rmtree(os.path.join(p, "corpus_grams"),
-                          ignore_errors=True)
+        _reset_index(spark, db, ("corpus_grams",))
         grams = (_token_windows(corpus, content_col, id_col, w)
                  .select("id", "gh").distinct())
         write_bucketed(grams, f"{db}.corpus_grams", ["gh"],
                        num_buckets=num_buckets, sort_by=["gh"])
     idx = _retract(spark.table(f"{db}.corpus_grams"),
-                   _dedup_tombstones(spark, db), db)
+                   read_tombstones(spark, _index_dir(spark, db)), db)
     win = _token_windows(batch, content_col, id_col, w)
     hit_corpus = win.join(idx, "gh", "left_semi")
     hit_batch = (win.withColumn(
@@ -1264,8 +1151,7 @@ def repeated_substring_spans_between(
 
 
 def substring_index_append(batch: DataFrame, content_col: str, id_col: str,
-                           w: int = 15, db: str = "nsjs_substr",
-                           num_buckets: int = 16) -> int:
+                           w: int = 15, db: str = "nsjs_substr") -> int:
     """Fold an ingested batch into the STANDING substring-gram index —
     the append op that closes the gram family's lifecycle the way
     ``dedup_index_append`` / ``minhash_index_append`` do for theirs:
@@ -1279,8 +1165,6 @@ def substring_index_append(batch: DataFrame, content_col: str, id_col: str,
     SOURCE is scanned once (read-once-ingest safe).  Re-ingested
     previously-deleted ids become live again (tombstones cleared).
     Returns the number of docs appended."""
-    from nosql_join_stream_spark.sinks import write_bucketed
-
     spark = batch.sparkSession
     if not spark.catalog.tableExists(f"{db}.corpus_grams"):
         raise ValueError(
@@ -1290,11 +1174,9 @@ def substring_index_append(batch: DataFrame, content_col: str, id_col: str,
     grams = (_token_windows(batch, content_col, id_col, w)
              .select("id", "gh").distinct().persist())
     try:
-        write_bucketed(grams, f"{db}.corpus_grams", ["gh"],
-                       num_buckets=num_buckets, sort_by=["gh"],
-                       mode="append")
+        _append_to_index(grams, f"{db}.corpus_grams")
         n_docs = grams.select("id").distinct().count()
-        _clear_tombstones_for_ids(grams.select("id"), db)
+        clear_tombstones(grams.select("id"), _index_dir(spark, db))
     finally:
         grams.unpersist()
     return n_docs

@@ -399,18 +399,14 @@ def payload_chunks_between_bucketed(
     digests sort-merge-join them with ZERO corpus-side Exchange (only
     the batch shuffles).  Payload bytes never leave the map side on
     either path; supports ``dedup.dedup_index_delete`` retraction and
-    ``dedup.dedup_index_compact`` with the media layout
-    (``{"corpus_chunks": ["csha"], "corpus_counts": ["id"]}``).
+    ``dedup.dedup_index_compact``.
 
     Returns (id1 [corpus], id2 [batch], jaccard >= threshold).
     Caller guarantees disjoint id sets, as in the text tiers.
     """
-    import os
-    import shutil
-
     from nosql_join_stream_spark.operators.dedup import (
-        _dedup_tombstones, _drop_tombstones, _retract)
-    from nosql_join_stream_spark.sinks import write_bucketed
+        _index_dir, _reset_index, _retract)
+    from nosql_join_stream_spark.sinks import read_tombstones, write_bucketed
 
     spark = corpus.sparkSession
     tau = float(threshold)
@@ -418,19 +414,14 @@ def payload_chunks_between_bucketed(
         location = artifact_dir("nsjs_media_index", "default")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{location}'")
     if rebuild:
-        _drop_tombstones(spark, db)  # rebuild folds retractions
-        for t in ("corpus_chunks", "corpus_counts"):
-            spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-            p = location.removeprefix("file:")
-            if os.path.isdir(os.path.join(p, t)):
-                shutil.rmtree(os.path.join(p, t), ignore_errors=True)
+        _reset_index(spark, db, ("corpus_chunks", "corpus_counts"))
         ch_c = _chunk_digests(corpus, chunk_bytes, payload_col, id_col)
         write_bucketed(ch_c, f"{db}.corpus_chunks", ["csha"],
                        num_buckets=num_buckets, sort_by=["csha"])
         write_bucketed(ch_c.groupBy("id").agg(F.count("*").alias("n_ch")),
                        f"{db}.corpus_counts", ["id"],
                        num_buckets=num_buckets, sort_by=["id"])
-    tombs = _dedup_tombstones(spark, db)
+    tombs = read_tombstones(spark, _index_dir(spark, db))
     ch_l = _retract(spark.table(f"{db}.corpus_chunks"), tombs, db)
     n_l = _retract(spark.table(f"{db}.corpus_counts"), tombs, db)
     ch_r = (_chunk_digests(batch, chunk_bytes, payload_col, id_col)
@@ -456,8 +447,7 @@ def payload_chunks_between_bucketed(
 def media_index_append(batch: DataFrame, chunk_bytes: int = 64,
                        payload_col: str = "payload",
                        id_col: str = "doc_id",
-                       db: str = "nsjs_media_index",
-                       num_buckets: int = 16) -> int:
+                       db: str = "nsjs_media_index") -> int:
     """Fold an ingested media batch into the STANDING chunk index —
     the maintenance op closing the media family's lifecycle like the
     text tiers': the deduped batch's digest rows and counts append
@@ -466,8 +456,8 @@ def media_index_append(batch: DataFrame, chunk_bytes: int = 64,
     pass is persisted: the batch SOURCE is scanned once.  Returns the
     number of payloads appended."""
     from nosql_join_stream_spark.operators.dedup import (
-        _clear_tombstones_for_ids)
-    from nosql_join_stream_spark.sinks import write_bucketed
+        _append_to_index, _index_dir)
+    from nosql_join_stream_spark.sinks import clear_tombstones
 
     spark = batch.sparkSession
     for t in ("corpus_chunks", "corpus_counts"):
@@ -477,15 +467,11 @@ def media_index_append(batch: DataFrame, chunk_bytes: int = 64,
                 "first (payload_chunks_between_bucketed rebuild=True)")
     ch = _chunk_digests(batch, chunk_bytes, payload_col, id_col).persist()
     try:
-        write_bucketed(ch, f"{db}.corpus_chunks", ["csha"],
-                       num_buckets=num_buckets, sort_by=["csha"],
-                       mode="append")
+        _append_to_index(ch, f"{db}.corpus_chunks")
         counts = ch.groupBy("id").agg(F.count("*").alias("n_ch"))
-        write_bucketed(counts, f"{db}.corpus_counts", ["id"],
-                       num_buckets=num_buckets, sort_by=["id"],
-                       mode="append")
+        _append_to_index(counts, f"{db}.corpus_counts")
         n = counts.count()
-        _clear_tombstones_for_ids(ch.select("id"), db)
+        clear_tombstones(ch.select("id"), _index_dir(spark, db))
     finally:
         ch.unpersist()
     return n

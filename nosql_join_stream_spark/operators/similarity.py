@@ -29,7 +29,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nosql_join_stream_spark.operators import spread
-from nosql_join_stream_spark.sinks import artifact_dir
+from nosql_join_stream_spark.sinks import (
+    append_tombstones, artifact_dir, clear_tombstones, drop_tombstones,
+    read_tombstones)
 
 
 def _dot(a, b):
@@ -1304,9 +1306,9 @@ def ann_ivf_append(new_corpus: DataFrame, location: str,
     standing corpus is never read, never shuffled.
 
     A re-ingested id that was previously tombstoned by
-    ``ann_ivf_delete`` becomes visible again: the (tiny) tombstone
-    table is rewritten minus the appended ids, so append+delete
-    compose in either order without a rebuild.
+    ``ann_ivf_delete`` becomes visible again: the appended ids are
+    cleared from the tombstone set, so append+delete compose in either
+    order without a rebuild.
 
     ``meta_cols`` must name the same metadata columns the index was
     built with (``ann_ivf_partitioned(meta_cols=...)``) so appended
@@ -1345,7 +1347,8 @@ def ann_ivf_append(new_corpus: DataFrame, location: str,
         write_table(assigned, index_path, mode="append",
                     partition_by=["__cell"])
         n = assigned.count()  # served from the cache the write populated
-        _clear_tombstones_for(assigned.select("__cid"), location)
+        clear_tombstones(assigned.select(F.col("__cid").alias("id")),
+                         location)
     finally:
         assigned.unpersist()
     return n
@@ -1354,7 +1357,7 @@ def ann_ivf_append(new_corpus: DataFrame, location: str,
 def ann_ivf_delete(ids: DataFrame, location: str,
                    corpus_id: str = "c_id") -> int:
     """Delete vectors from the standing IVF index WITHOUT rewriting it:
-    the ids append to a tombstone table next to the index, and probes
+    the ids append to the index's tombstone set (``sinks``), and probes
     anti-join tombstones (broadcast — deletions are tiny relative to a
     100 TB index) before reranking.  Parquet files are immutable and a
     delete must not rewrite petabytes, so tombstoning is the honest
@@ -1368,10 +1371,7 @@ def ann_ivf_delete(ids: DataFrame, location: str,
         raise ValueError(
             f"no standing IVF index at {location}; build one first "
             "(ann_ivf_partitioned rebuild=True)")
-    tomb_path = os.path.join(location, "tombstones.parquet")
-    out = ids.select(F.col(corpus_id).cast("long").alias("__cid"))
-    out.write.mode("append").parquet(tomb_path)
-    return out.count()
+    return append_tombstones(ids, corpus_id, location)
 
 
 def ann_ivf_compact(location: str) -> int:
@@ -1387,26 +1387,25 @@ def ann_ivf_compact(location: str) -> int:
     affected cells (a bounded driver list — cells, not rows), a
     dynamic partition overwrite rewrites exactly those ``__cell=N/``
     directories minus the dead rows, untouched cells keep their files
-    byte-identical, and the tombstone table is removed — restoring
+    byte-identical, and the tombstone set is dropped — restoring
     the probe's no-tombstone fast path.  Centroids are untouched
     (geometry never changes), so probe pruning and recall are
     unaffected.  Returns the number of cells rewritten.
     """
     import os
-    import shutil
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     index_path = os.path.join(location, "corpus_cells")
-    tomb_path = os.path.join(location, "tombstones.parquet")
     if not os.path.isdir(index_path):
         raise ValueError(
             f"no standing IVF index at {location}; build one first "
             "(ann_ivf_partitioned rebuild=True)")
-    if not os.path.isdir(tomb_path):
+    tombs = read_tombstones(spark, location)
+    if tombs is None:
         return 0  # nothing outstanding — compaction is a no-op
-    tombs = spark.read.parquet(tomb_path).distinct()
+    tombs = tombs.withColumnRenamed("id", "__cid")
     index = spark.read.parquet(index_path)
     affected = [r["__cell"] for r in
                 (index.join(F.broadcast(tombs), "__cid", "left_semi")
@@ -1423,107 +1422,8 @@ def ann_ivf_compact(location: str) -> int:
                   .option("partitionOverwriteMode", "dynamic")
                   .partitionBy("__cell")
                   .parquet(index_path))
-    shutil.rmtree(tomb_path, ignore_errors=True)
+    drop_tombstones(location)
     return len(affected)
-
-
-def _apply_tombstones(index: DataFrame, location: str) -> DataFrame:
-    """Anti-join the index scan against the tombstone table, if one
-    exists — broadcast, so the probe plan gains one map-side filter.
-    The dir's absence is the steady-state fast path: append/rebuild
-    delete it when the last tombstone is cleared, so a probe on an
-    index with no outstanding deletes pays nothing here.  When the
-    dir is PRESENT no recovery is needed (the dangerous crash state
-    is its mid-swap absence; a stale ``tombstones_old`` only matters
-    to the next swap, which repairs first) — recovery runs only when
-    the dir is missing, so an interrupted ``_clear_tombstones_for``
-    rename is never misread as 'no tombstones'."""
-    import os
-
-    tomb_path = os.path.join(location, "tombstones.parquet")
-    if not os.path.isdir(tomb_path):
-        _recover_tombstone_swap_dir(location)
-    if not os.path.isdir(tomb_path):
-        return index
-    spark = index.sparkSession
-    tombs = spark.read.parquet(tomb_path).distinct()
-    return index.join(F.broadcast(tombs), "__cid", "left_anti")
-
-
-def _recover_tombstone_swap_dir(location: str) -> None:
-    """Repair an interrupted ``_clear_tombstones_for`` swap.  A crash
-    between the two renames leaves ``tombstones.parquet`` absent with
-    ``tombstones_old.parquet`` present: rename the old (SUPERSET) dir
-    back, so recovery errs toward keeping tombstones and a purged doc
-    can never be resurrected by the crash.  A crash after the second
-    rename leaves a stale ``tombstones_old.parquet`` beside the
-    committed set: remove it so the next swap starts clean.  Directory
-    mirror of ``dedup._recover_tombstone_swap``."""
-    import os
-    import shutil
-
-    old = os.path.join(location, "tombstones_old.parquet")
-    if not os.path.isdir(old):
-        return
-    tomb_path = os.path.join(location, "tombstones.parquet")
-    if os.path.isdir(tomb_path):
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        # concurrent probes can race on the repair: the loser's rename
-        # finds the source already gone — the other repairer reaching
-        # the same end state is success, not an error (r8-ADVICE)
-        try:
-            os.rename(old, tomb_path)
-        except (FileNotFoundError, OSError):
-            if not os.path.isdir(tomb_path):
-                raise
-
-
-def _clear_tombstones_for(ids: DataFrame, location: str) -> None:
-    """Rewrite the tombstone table minus ``ids`` — a deleted id that
-    is later legitimately re-ingested via append must become
-    probe-visible again without a full rebuild.  Survivors are STAGED
-    to a sibling dir and swapped in with directory renames (atomic on
-    a posix filesystem; object stores get either the old or the new
-    complete dir), and the survivors never pass through the driver:
-    the anti-join writes distributively, so a mass purge costs one
-    broadcast anti-join + write, not a driver collect.  The two-step
-    rename leaves a crash window where the tombstone dir is transiently
-    absent; it is closed on the READ side — this function and
-    ``_apply_tombstones`` both run ``_recover_tombstone_swap_dir``
-    first, restoring the old (superset) dir when only it survives, so
-    the mid-swap state is never misread as 'no tombstones'.  An
-    emptied table is removed entirely, restoring the probe's
-    no-tombstone fast path."""
-    import os
-    import shutil
-
-    _recover_tombstone_swap_dir(location)
-    tomb_path = os.path.join(location, "tombstones.parquet")
-    if not os.path.isdir(tomb_path):
-        return
-    spark = ids.sparkSession
-    tombs = spark.read.parquet(tomb_path).distinct()
-    # no forced broadcast: the re-ingest batch can be arbitrarily
-    # large — AQE picks broadcast when it actually fits
-    survivors = tombs.join(ids, "__cid", "left_anti")
-    n_surv = survivors.count()
-    if n_surv == tombs.count():
-        return  # nothing cleared; leave the table untouched
-    if n_surv == 0:
-        shutil.rmtree(tomb_path, ignore_errors=True)
-        return
-    staging = os.path.join(location, "tombstones_staging.parquet")
-    old = os.path.join(location, "tombstones_old.parquet")
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    # one file for the takedown-sized common case; natural partitioning
-    # above that so a mass purge never funnels through a single task
-    staged = survivors if n_surv > 1_000_000 else survivors.coalesce(1)
-    staged.write.mode("overwrite").parquet(staging)
-    os.rename(tomb_path, old)
-    os.rename(staging, tomb_path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def ann_ivf_partitioned(queries: DataFrame, corpus: DataFrame,
@@ -1590,9 +1490,7 @@ def ann_ivf_partitioned(queries: DataFrame, corpus: DataFrame,
             raise ValueError("n_cells is required when rebuild=True")
         # a rebuild folds deletions in by construction — stale
         # tombstones must not shadow legitimately re-ingested ids
-        import shutil
-        shutil.rmtree(os.path.join(location, "tombstones.parquet"),
-                      ignore_errors=True)
+        drop_tombstones(location)
         cents = _ivf_centroids(corpus, vec, corpus_id, n_cells)
         cent_rows = [(i, [float(x) for x in cents[i]])
                      for i in range(len(cents))]
@@ -1670,10 +1568,12 @@ def ann_ivf_probe(queries: DataFrame, location: str,
                   .localCheckpoint(eager=False))
     probed_cells = [r["__cell"] for r in
                     q_assigned.select("__cell").distinct().collect()]
-    index = _apply_tombstones(
-        spark.read.parquet(index_path)
-             .filter(F.col("__cell").isin(probed_cells)),
-        location)
+    index = (spark.read.parquet(index_path)
+             .filter(F.col("__cell").isin(probed_cells)))
+    tombs = read_tombstones(spark, location)
+    if tombs is not None:
+        index = index.join(F.broadcast(tombs.withColumnRenamed("id", "__cid")),
+                           "__cid", "left_anti")
     if corpus_filter is not None:
         # plain column predicate -> PushedFilters on the cell scan,
         # evaluated alongside the PartitionFilters pruning

@@ -138,6 +138,94 @@ def standing(loc: str, build: Callable[[], object]) -> bool:
     return True
 
 
+# The tombstone set of a standing index (PPJoin prefix, MinHash band,
+# substring gram, media chunk, IVF cell): the ids deleted from the
+# index but still in its files, one ``id bigint`` column in a parquet
+# dir inside the index dir ``loc``.  Probes anti-join it; a rebuild or
+# a compaction folds it into the index files and drops it.
+_TOMBS = "tombstones.parquet"
+_TOMBS_OLD = "tombstones_old.parquet"
+_TOMBS_STAGING = "tombstones_staging.parquet"
+
+
+def append_tombstones(ids: DataFrame, id_col: str, loc: str) -> int:
+    """Delete the ids in ``ids[id_col]`` from the standing index in
+    ``loc`` without rewriting it; returns the number of ids appended.
+    The ids are checkpointed first, so the count is of the rows
+    written even when ``ids`` is non-deterministic."""
+    out = (ids.select(F.col(id_col).cast("long").alias("id"))
+              .localCheckpoint())
+    out.write.mode("append").parquet(os.path.join(loc, _TOMBS))
+    return out.count()
+
+
+def read_tombstones(spark: SparkSession, loc: str) -> DataFrame | None:
+    """The distinct ids of the tombstone set in ``loc``, or None when
+    there is none: a probe of an index with no outstanding deletes
+    pays two directory checks and nothing else.
+
+    ``clear_tombstones`` swaps a new set in by two renames (set → old,
+    staging → set).  A crash between them leaves only the old set, so
+    when the set is missing the old one is renamed back.  The old set
+    is a superset of the staged survivors: a crash never brings a
+    deleted id back, and an id the interrupted clear meant to re-admit
+    is cleared again when its append is retried."""
+    path = os.path.join(loc, _TOMBS)
+    if not os.path.isdir(path):
+        old = os.path.join(loc, _TOMBS_OLD)
+        if not os.path.isdir(old):
+            return None
+        try:
+            os.rename(old, path)
+        except OSError:
+            # a concurrent reader's repair won the rename
+            if not os.path.isdir(path):
+                raise
+    return spark.read.parquet(path).distinct()
+
+
+def clear_tombstones(ids: DataFrame, loc: str) -> None:
+    """Remove the ids in ``ids.id`` from the tombstone set in ``loc``:
+    a deleted id that an append re-ingests is served again.
+
+    The survivors are staged beside the set and swapped in by renames,
+    so the rewrite never reads the files it replaces and the ids never
+    pass through the driver; an emptied set is dropped, which restores
+    the probe's fast path.  Leftovers of an earlier swap that committed
+    are removed first, so they never block this one."""
+    tombs = read_tombstones(ids.sparkSession, loc)
+    if tombs is None:
+        return
+    path, old, staging = (os.path.join(loc, n)
+                          for n in (_TOMBS, _TOMBS_OLD, _TOMBS_STAGING))
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)
+    # no forced broadcast: a mass re-ingest can be arbitrarily large,
+    # and AQE picks broadcast when it fits
+    survivors = tombs.join(ids.select(F.col("id").cast("long")), "id",
+                           "left_anti")
+    n_surv = survivors.count()
+    if n_surv == tombs.count():
+        return
+    if n_surv == 0:
+        drop_tombstones(loc)
+        return
+    # one file for the takedown-sized common case; natural partitioning
+    # above that so a mass purge never funnels through a single task
+    staged = survivors if n_surv > 1_000_000 else survivors.coalesce(1)
+    staged.write.parquet(staging)
+    os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def drop_tombstones(loc: str) -> None:
+    """Remove the tombstone set in ``loc`` and any leftovers of an
+    interrupted swap (a rebuild or compaction has folded them in)."""
+    for name in (_TOMBS, _TOMBS_OLD, _TOMBS_STAGING):
+        shutil.rmtree(os.path.join(loc, name), ignore_errors=True)
+
+
 def compact(spark: SparkSession, path: str,
             target_file_bytes: int = 128 * 1024 * 1024,
             sort_by: Sequence[str] | None = None) -> int:

@@ -92,3 +92,19 @@ def test_default_parallelism_is_read_only_by_spread():
                  and n.attr == "defaultParallelism"
                  and id(n) not in allowed]
     assert not hits, hits
+
+
+def test_tombstone_swap_lives_only_in_sinks():
+    """One tombstone set for every standing index: the names of its
+    swap's side dirs appear only in ``sinks``, so a second copy of the
+    crash-safe swap cannot grow back."""
+    hits = []
+    for f in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        if os.path.relpath(f, PKG) == "sinks.py":
+            continue
+        hits += [f"{os.path.relpath(f, PKG)}:{n.lineno}"
+                 for n in ast.walk(ast.parse(open(f).read(), f))
+                 if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                 and ("tombstones_old" in n.value
+                      or "tombstones_staging" in n.value)]
+    assert not hits, hits

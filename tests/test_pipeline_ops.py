@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from nosql_join_stream_spark.operators import dedup, multimodal, similarity, text
 from nosql_join_stream_spark.queries import REGISTRY
+from nosql_join_stream_spark.sinks import read_tombstones
 
 
 def _pairs(df):
@@ -837,15 +838,16 @@ def test_mine_contrastive_pairs_invariants(spark, sf_dir):
         assert r.anchor_text != r.positive_text   # adjacent disjoint chunks
 
 
-def test_ann_ivf_partitioned_matches_inline_and_prunes(spark, sf_dir, engine):
-    import tempfile, os, glob
+def test_ann_ivf_partitioned_matches_inline_and_prunes(spark, sf_dir, engine,
+                                                       tmp_path):
+    import os, glob
     emb = engine.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10) \
                  .select(F.col("vec_id").alias("q_id"), "embedding")
     corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
     inline = similarity.ann_ivf_topk(queries, corpus, k=5,
                                      n_cells=16, nprobe=4)
-    loc = tempfile.mkdtemp(prefix="ivf_idx_")
+    loc = str(tmp_path / "ivf_idx")
     part = similarity.ann_ivf_partitioned(queries, corpus, k=5,
                                           n_cells=16, nprobe=4,
                                           location=loc)
@@ -1091,7 +1093,7 @@ def test_ann_ivf_compact_rewrites_only_affected_cells(spark, sf_dir,
     """Partial compaction: tombstoned rows fold into the index by
     rewriting ONLY the cells that contain them — untouched cells keep
     their files byte-identical, probe results are unchanged, and the
-    tombstone table disappears (probe fast path restored)."""
+    tombstone set disappears (probe fast path restored)."""
     import os
 
     emb = engine.table("embeddings")
@@ -1139,10 +1141,10 @@ def test_ann_ivf_compact_rewrites_only_affected_cells(spark, sf_dir,
 def test_ann_ivf_append_clears_matching_tombstones(spark, sf_dir, engine,
                                                    tmp_path):
     """delete → re-ingest via append must make the id probe-visible
-    again WITHOUT a rebuild: append rewrites the tombstone table minus
-    the appended ids.  Non-appended tombstones stay shadowed, and a
-    fully-cleared table is removed (restoring the probe's
-    no-tombstone fast path)."""
+    again WITHOUT a rebuild: append clears the appended ids from the
+    tombstone set.  Non-appended tombstones stay shadowed, and a
+    fully-cleared set is removed (restoring the probe's no-tombstone
+    fast path)."""
     import os
 
     emb = engine.table("embeddings")
@@ -1165,7 +1167,7 @@ def test_ann_ivf_append_clears_matching_tombstones(spark, sf_dir, engine,
     assert similarity.ann_ivf_append(batch, loc) == 1
     tomb_path = os.path.join(loc, "tombstones.parquet")
     assert os.path.isdir(tomb_path)  # partially cleared, not deleted
-    left = {r["__cid"] for r in spark.read.parquet(tomb_path).collect()}
+    left = {r.id for r in read_tombstones(spark, loc).collect()}
     assert revive not in left and keep_dead in left
 
     after = {r.c_id
@@ -1306,7 +1308,7 @@ def test_dedup_index_compact_shrinks_files_keeps_answers(spark, tmp_path):
     """Appends accumulate one file per bucket per batch; compaction
     rewrites each table from itself (no re-shingle), swaps via catalog
     renames, and must shrink the file count while probe answers stay
-    identical. Covers both index families via tables_buckets."""
+    identical. The layout is read from the catalog."""
     base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
             "juliet")
     corpus = spark.createDataFrame(
@@ -1352,9 +1354,13 @@ def test_dedup_index_compact_shrinks_files_keeps_answers(spark, tmp_path):
                  corpus, probe, "text", "doc_id", db=db, location=loc,
                  rebuild=False).collect()}
     assert after == before and after  # answers identical
+    empty = "nsjs_idx_cmp_empty"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {empty} "
+              f"LOCATION '{tmp_path / 'empty'}'")
     with pytest.raises(ValueError, match="no standing index table"):
-        dedup.dedup_index_compact(spark, db, {"nope": ["g"]})
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        dedup.dedup_index_compact(spark, empty)
+    for d in (db, empty):
+        spark.sql(f"DROP DATABASE IF EXISTS {d} CASCADE")
 
 
 def test_dedup_index_delete_retracts_and_compact_restores(spark, tmp_path):
@@ -1362,7 +1368,7 @@ def test_dedup_index_delete_retracts_and_compact_restores(spark, tmp_path):
     flagged): delete a corpus doc -> its pairs are gone from the next
     probe (answers == a rebuilt index without the doc), compact folds
     the tombstones into the physical tables and drops the tombstone
-    table, and re-APPENDING the doc makes it probe-visible again."""
+    set, and re-APPENDING the doc makes it probe-visible again."""
     base = ("alpha bravo charlie delta echo foxtrot golf hotel india "
             "juliet")
     tweak = base.rsplit(" ", 1)[0] + " kilo"   # jaccard 7/9 ≈ 0.78
@@ -1394,9 +1400,9 @@ def test_dedup_index_delete_retracts_and_compact_restores(spark, tmp_path):
     assert rebuilt.collect() == []
 
     # compact folds the tombstones: physical rows gone, tombstone
-    # table dropped (fast path restored), answers unchanged
+    # set dropped (fast path restored), answers unchanged
     dedup.dedup_index_compact(spark, db)
-    assert not spark.catalog.tableExists(f"{db}.tombstones")
+    assert read_tombstones(spark, loc) is None
     assert (spark.table(f"{db}.corpus_sets")
             .filter(F.col("id") == 1).count()) == 0
     p2 = dedup.ngram_jaccard_pairs_between_bucketed(
@@ -1412,7 +1418,7 @@ def test_dedup_index_delete_retracts_and_compact_restores(spark, tmp_path):
     dedup.dedup_index_append(
         spark.createDataFrame([(501, tweak)], "doc_id long, text string"),
         "text", "doc_id", db=db)
-    assert not spark.catalog.tableExists(f"{db}.tombstones")
+    assert read_tombstones(spark, loc) is None
     p3 = dedup.ngram_jaccard_pairs_between_bucketed(
         corpus, spark.createDataFrame([(601, tweak)],
                                       "doc_id long, text string"),
@@ -1444,10 +1450,11 @@ def test_minhash_index_delete_retracts_pairs(spark, tmp_path):
         corpus, probe, "text", "doc_id", threshold=0.6,
         min_band_matches=1, db=db, location=loc, rebuild=False)
     assert p1.collect() == []
-    # band-family compact folds the tombstones too
-    dedup.dedup_index_compact(
-        spark, db, {"corpus_bands": ["bh"], "corpus_sets": ["id"]})
-    assert not spark.catalog.tableExists(f"{db}.tombstones")
+    # band-family compact folds the tombstones too, with the layout
+    # read from the catalog
+    assert set(dedup.dedup_index_compact(spark, db)) == {
+        "corpus_bands", "corpus_sets"}
+    assert read_tombstones(spark, loc) is None
     assert (spark.table(f"{db}.corpus_bands")
             .filter(F.col("id") == 1).count()) == 0
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
@@ -1704,9 +1711,9 @@ def test_media_chunk_index_lifecycle(spark, tmp_path):
     # doc1's pair is retracted; the appended 501 still matches
     assert {(r.id1, r.id2, r.jaccard) for r in p2.collect()} \
         == {(501, 602, 1.0)}
-    dedup_index_compact(spark, db,
-                        {"corpus_chunks": ["csha"], "corpus_counts": ["id"]})
-    assert not spark.catalog.tableExists(f"{db}.tombstones")
+    assert set(dedup_index_compact(spark, db)) == {
+        "corpus_chunks", "corpus_counts"}
+    assert read_tombstones(spark, loc) is None
     assert (spark.table(f"{db}.corpus_chunks")
             .filter(F.col("id") == 1).count()) == 0
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
@@ -1939,89 +1946,152 @@ def test_resolve_incremental_equals_full_cc(spark, sf_dir, engine):
     assert got == {(1, 1), (2, 1), (10, 1), (11, 1), (99, 99)}
 
 
-def test_tombstone_swap_crash_recovery_catalog(spark, tmp_path):
-    """r7-ADVICE: the two-step catalog-rename tombstone swap has a
-    crash window where `tombstones` is transiently absent.  Both
-    observable crash states must be repaired before any read/rewrite:
-    (a) crash BETWEEN the renames (only tombstones_old survives) must
-    not be misread as 'no tombstones' — the deleted doc would be
-    resurrected; (b) crash AFTER the second rename (stale
-    tombstones_old beside the committed set) must not make the next
-    swap fail with 'table already exists'."""
-    corpus = spark.createDataFrame(
-        [(1, "alpha bravo charlie delta echo foxtrot golf hotel"),
-         (2, "unrelated words entirely distinct content here now")],
-        "doc_id long, text string")
-    probe = spark.createDataFrame(
-        [(501, "alpha bravo charlie delta echo foxtrot golf india")],
-        "doc_id long, text string")
-    db, loc = "nsjs_tomb_crash", str(tmp_path / "idx")
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    p0 = dedup.ngram_jaccard_pairs_between_bucketed(
-        corpus, probe, "text", "doc_id", db=db, location=loc, rebuild=True)
-    assert {(r.left_id, r.right_id) for r in p0.collect()} == {(1, 501)}
-    dedup.dedup_index_delete(
-        spark.createDataFrame([(1,)], "doc_id long"), db, id_col="doc_id")
+class _Ppjoin:
+    """A standing PPJoin index over two docs and a one-doc probe;
+    ``served()`` is whether corpus doc 1 (the victim) still pairs."""
 
-    # (a) simulate crash between the renames
-    spark.sql(f"ALTER TABLE {db}.tombstones RENAME TO {db}.tombstones_old")
-    tombs = dedup._dedup_tombstones(spark, db)  # read path recovers
-    assert tombs is not None and {r.id for r in tombs.collect()} == {1}
-    assert spark.catalog.tableExists(f"{db}.tombstones")
-    assert not spark.catalog.tableExists(f"{db}.tombstones_old")
-    p1 = dedup.ngram_jaccard_pairs_between_bucketed(
-        corpus, probe, "text", "doc_id", db=db, location=loc, rebuild=False)
-    assert p1.collect() == []  # doc 1 stays retracted through the crash
+    def __init__(self, spark, engine, tmp_path):
+        self.spark = spark
+        self.corpus = spark.createDataFrame(
+            [(1, "alpha bravo charlie delta echo foxtrot golf hotel"),
+             (2, "unrelated words entirely distinct content here now")],
+            "doc_id long, text string")
+        self.probe = spark.createDataFrame(
+            [(501, "alpha bravo charlie delta echo foxtrot golf india")],
+            "doc_id long, text string")
+        self.db, self.loc = "nsjs_tomb_crash", str(tmp_path / "idx")
+        spark.sql(f"DROP DATABASE IF EXISTS {self.db} CASCADE")
 
-    # (b) simulate crash after the second rename: stale leftover copy
-    spark.table(f"{db}.tombstones").write.saveAsTable(
-        f"{db}.tombstones_old")
-    # next clear (via append of the deleted id) must succeed, not
-    # collide with the stale tombstones_old
-    dedup.dedup_index_append(
-        spark.createDataFrame(
-            [(1, "alpha bravo charlie delta echo foxtrot golf hotel")],
-            "doc_id long, text string"), "text", "doc_id", db=db)
-    assert not spark.catalog.tableExists(f"{db}.tombstones")
-    assert not spark.catalog.tableExists(f"{db}.tombstones_old")
-    p2 = dedup.ngram_jaccard_pairs_between_bucketed(
-        corpus, probe, "text", "doc_id", db=db, location=loc, rebuild=False)
-    assert {(r.left_id, r.right_id) for r in p2.collect()} == {(1, 501)}
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    def pairs(self, rebuild):
+        return dedup.ngram_jaccard_pairs_between_bucketed(
+            self.corpus, self.probe, "text", "doc_id", db=self.db,
+            location=self.loc, rebuild=rebuild).collect()
+
+    def build(self):
+        assert {(r.left_id, r.right_id) for r in self.pairs(True)} \
+            == {(1, 501)}
+
+    def served(self):
+        return bool(self.pairs(False))
+
+    def delete(self):
+        dedup.dedup_index_delete(
+            self.spark.createDataFrame([(1,)], "doc_id long"), self.db,
+            id_col="doc_id")
+
+    def reingest(self):
+        dedup.dedup_index_append(
+            self.corpus.filter("doc_id = 1"), "text", "doc_id", db=self.db)
+
+    def close(self):
+        self.spark.sql(f"DROP DATABASE IF EXISTS {self.db} CASCADE")
 
 
-def test_tombstone_swap_crash_recovery_dir(spark, engine, tmp_path):
-    """Directory-flavored mirror of the catalog recovery test, for the
-    IVF index's rename-based tombstone swap (similarity.py)."""
+class _Ivf:
+    """A standing IVF index over the embeddings; the victim is one
+    query's top-1 neighbour and ``served()`` is whether it is returned."""
+
+    def __init__(self, spark, engine, tmp_path):
+        self.spark = spark
+        emb = engine.table("embeddings")
+        self.q = emb.filter("vec_id < 5").select(
+            F.col("vec_id").alias("q_id"), "embedding")
+        self.c = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+        self.loc = str(tmp_path / "ivf_idx")
+
+    def ids(self, rebuild):
+        return {r.c_id for r in similarity.ann_ivf_partitioned(
+            self.q, self.c, k=3, n_cells=8, nprobe=3, location=self.loc,
+            rebuild=rebuild).collect() if r.rank == 1}
+
+    def build(self):
+        self.victim = min(self.ids(True))
+
+    def served(self):
+        return self.victim in self.ids(False)
+
+    def delete(self):
+        similarity.ann_ivf_delete(self.spark.createDataFrame(
+            [(self.victim,)], "c_id long"), self.loc)
+
+    def reingest(self):
+        assert similarity.ann_ivf_append(
+            self.c.filter(F.col("c_id") == self.victim), self.loc) == 1
+
+    def close(self):
+        pass
+
+
+@pytest.fixture(params=[_Ppjoin, _Ivf], ids=["ppjoin", "ivf"])
+def standing_index(request, spark, engine, tmp_path):
+    idx = request.param(spark, engine, tmp_path)
+    yield idx
+    idx.close()
+
+
+def _crash_between_renames(loc):
+    """The tombstone swap's state after ``set -> old`` and before
+    ``staging -> set``."""
     import os
+    os.rename(os.path.join(loc, "tombstones.parquet"),
+              os.path.join(loc, "tombstones_old.parquet"))
+
+
+def _swap_leftovers(loc):
+    import os
+    return sorted(n for n in os.listdir(loc) if n.startswith("tombstones"))
+
+
+def test_tombstone_swap_crash_recovery(standing_index):
+    """The shared tombstone set's two crash states, on each index
+    family: (a) a crash BETWEEN the swap's renames leaves only the old
+    set, which must not be read as 'no tombstones' (the deleted doc
+    would come back); (b) a stale old set left AFTER a committed swap
+    must not block the next swap."""
     import shutil
 
-    emb = engine.table("embeddings")
-    q = emb.filter("vec_id < 5").select(F.col("vec_id").alias("q_id"),
-                                        "embedding")
-    c = emb.select(F.col("vec_id").alias("c_id"), "embedding")
-    loc = str(tmp_path / "ivf_idx")
-    before = similarity.ann_ivf_partitioned(
-        q, c, k=3, n_cells=8, nprobe=3, location=loc, rebuild=True).collect()
-    victim = sorted({r.c_id for r in before if r.rank == 1})[0]
-    similarity.ann_ivf_delete(
-        spark.createDataFrame([(victim,)], "c_id long"), loc)
-    tomb = os.path.join(loc, "tombstones.parquet")
-    old = os.path.join(loc, "tombstones_old.parquet")
+    idx = standing_index
+    idx.build()
+    idx.delete()
+    assert not idx.served()
 
-    # (a) crash between renames: only the old dir survives
-    os.rename(tomb, old)
-    after = {r.c_id for r in similarity.ann_ivf_partitioned(
-        q, c, k=3, n_cells=8, nprobe=3, location=loc,
-        rebuild=False).collect()}
-    assert victim not in after          # retraction survives the crash
-    assert os.path.isdir(tomb) and not os.path.isdir(old)
+    _crash_between_renames(idx.loc)
+    assert not idx.served()  # retraction survives the crash
+    assert _swap_leftovers(idx.loc) == ["tombstones.parquet"]
 
-    # (b) crash after the commit rename: stale old dir beside the set
-    shutil.copytree(tomb, old)
-    assert similarity.ann_ivf_append(
-        c.filter(F.col("c_id") == victim), loc) == 1
-    assert not os.path.isdir(tomb) and not os.path.isdir(old)
+    shutil.copytree(f"{idx.loc}/tombstones.parquet",
+                    f"{idx.loc}/tombstones_old.parquet")
+    idx.reingest()  # clears the id: the emptied set and leftover go
+    assert _swap_leftovers(idx.loc) == []
+    assert idx.served()
+
+
+def test_rebuild_after_swap_crash_serves_deleted_id(standing_index):
+    """A rebuild folds every retraction, so it must also discard the
+    old set an interrupted swap left: the rebuilt index serves the
+    deleted id again, and no later read renames the stale set back."""
+    idx = standing_index
+    idx.build()
+    idx.delete()
+    _crash_between_renames(idx.loc)
+    idx.build()
+    assert idx.served()
+    assert _swap_leftovers(idx.loc) == []
+
+
+def test_ann_ivf_compact_folds_after_swap_crash(spark, engine, tmp_path):
+    """Compaction reads the tombstone set through the same repair as a
+    probe: after a crash between the swap's renames it still folds
+    the deleted vector and leaves no swap leftovers."""
+    idx = _Ivf(spark, engine, tmp_path)
+    idx.build()
+    idx.delete()
+    _crash_between_renames(idx.loc)
+    assert similarity.ann_ivf_compact(idx.loc) > 0
+    assert _swap_leftovers(idx.loc) == []
+    assert not idx.served()
+    cells = spark.read.parquet(f"{idx.loc}/corpus_cells")
+    assert cells.filter(F.col("__cid") == idx.victim).count() == 0
 
 
 def test_banded_near_dup_equals_exact_on_planted_corpus(spark, engine):
