@@ -109,17 +109,8 @@ def load_table(spark: SparkSession, name: str,
         spark._nsjs_table_cache = cache
     df = cache.get(path)  # the pinned base, shared by every variant
     if df is None:
-        nanos_cols = _NANOS_TS_COLS.get(name, ())
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-        for c, dtype in df.dtypes:
-            if c in nanos_cols and dtype == "bigint":
-                # integer `div`, NOT float division: nanos exceed 2^53, so
-                # a double round-trip is off by ±1µs on recent timestamps
-                df = df.withColumn(
-                    c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-            elif dtype == "timestamp_ntz":
-                df = df.withColumn(c, F.col(c).cast("timestamp"))
+        df = normalize_ts(spark.read.parquet(path),
+                          _NANOS_TS_COLS.get(name, ()))
         _pin_if_broadcast_sized(spark, df)
         cache[path] = df
     if not perturb:
@@ -127,6 +118,25 @@ def load_table(spark: SparkSession, name: str,
     if (path, perturb) not in cache:
         cache[(path, perturb)] = df.repartition(int(perturb))
     return cache[(path, perturb)]
+
+
+def normalize_ts(df: DataFrame, nanos_cols=()) -> DataFrame:
+    """Turn ``df``'s time columns into TIMESTAMP: a ``nanos_cols``
+    column read as nanos-since-epoch BIGINT becomes
+    ``timestamp_micros(c div 1000)`` and any TIMESTAMP_NTZ is cast.
+    The one normalization for batch (``load_table``) and stream
+    (``log_stream.read_log_stream``) reads of the same files."""
+    from pyspark.sql import functions as F
+
+    for c, dtype in df.dtypes:
+        if c in nanos_cols and dtype == "bigint":
+            # integer `div`, NOT float division: nanos exceed 2^53, so
+            # a double round-trip is off by ±1µs on recent timestamps
+            df = df.withColumn(
+                c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+        elif dtype == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:

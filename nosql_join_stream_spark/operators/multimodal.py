@@ -88,16 +88,35 @@ def decode_image(payload: bytes) -> "object":
     containers (progressive JPEG, JPEG 2000, WebP…) without PIL raise
     the clearly-marked stub.  The Spark-side contract (bytes in,
     ndarray out) is identical on every branch."""
-    try:
-        from PIL import Image
-        import io
+    return _gray_decoder()(payload)
 
-        import numpy as np
-        return np.asarray(Image.open(io.BytesIO(payload)).convert("L"))
-    except ImportError:
-        pass
-    from nosql_join_stream_spark.operators import png_codec
-    return png_codec.decode_gray_auto(payload)
+
+def _gray_decoder():
+    """Return ``decode(payload) -> ndarray``, the one PIL-else-stdlib
+    grayscale decoder.  Call it on the driver and close an executor op
+    over the result: a nested function pickles by value, and its
+    imports run at call time, so an executor needs neither this module
+    nor an addPyFile — one without the package degrades to the stub
+    error, not a deserialization crash."""
+    def decode(payload: bytes):
+        try:
+            from PIL import Image
+            import io as _io
+
+            import numpy as _np
+            return _np.asarray(Image.open(_io.BytesIO(payload)).convert("L"))
+        except ImportError:
+            pass
+        # stdlib codec fallback (r9, widened r10 to BMP/PGM/PPM): real
+        # pixels without PIL
+        try:
+            from nosql_join_stream_spark.operators import png_codec as _pc
+        except ImportError:
+            raise NotImplementedError(
+                "image decode requires PIL/libvips; not available "
+                "here") from None
+        return _pc.decode_gray_auto(payload)
+    return decode
 
 
 def extract_features(media: DataFrame, batch_decode: bool = False) -> DataFrame:
@@ -115,33 +134,13 @@ def extract_features(media: DataFrame, batch_decode: bool = False) -> DataFrame:
     # module-level helpers): cloudpickle ships nested definitions by
     # value, so executors need neither this package on sys.path nor an
     # addPyFile — the driver environment can't be assumed to ship it.
+    decode = _gray_decoder()
+
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hl
 
         import numpy as _np
         import pandas as _pd
-
-        def _decode(payload: bytes):
-            try:
-                from PIL import Image
-                import io as _io
-                return _np.asarray(
-                    Image.open(_io.BytesIO(payload)).convert("L"))
-            except ImportError:
-                pass
-            # stdlib codec fallback (r9, widened r10 to BMP/PGM/PPM):
-            # real pixels without PIL; the import is call-time so
-            # pickling stays self-contained and an executor without
-            # the package degrades to the stub error, not a
-            # deserialization crash
-            try:
-                from nosql_join_stream_spark.operators import (
-                    png_codec as _pc)
-            except ImportError:
-                raise NotImplementedError(
-                    "image decode requires PIL/libvips; not available "
-                    "here") from None
-            return _pc.decode_gray_auto(payload)
 
         def _luma(b: bytes) -> float:
             return float(sum(b)) / len(b) if b else 0.0
@@ -149,7 +148,7 @@ def extract_features(media: DataFrame, batch_decode: bool = False) -> DataFrame:
         for pdf in batches:
             payloads = pdf["payload"]
             if batch_decode:
-                decoded = payloads.map(_decode)
+                decoded = payloads.map(decode)
                 luma = decoded.map(lambda a: float(a.mean()))
             else:
                 luma = payloads.map(_luma)
@@ -212,8 +211,8 @@ def resize_images(media: DataFrame, target_w: int = 128,
             except ImportError:
                 # executor without the package: degrade to the
                 # documented stub instead of crashing every payload
-                # before PIL is even tried (the same guard _decode in
-                # extract_features carries — r10 review catch)
+                # before PIL is even tried (the same guard
+                # _gray_decoder carries — r10 review catch)
                 raise NotImplementedError(
                     "image resize requires the nosql_join_stream_spark "
                     "package (stdlib codecs) on the executor; not "
@@ -543,26 +542,11 @@ def image_dhash(media: DataFrame, grid_w: int = 8,
     schema = ("doc_id long, width int, height int, "
               "hash_hi long, hash_lo long")
 
+    decode = _gray_decoder()
+
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as _np
         import pandas as _pd
-
-        def _decode(payload: bytes):
-            try:
-                from PIL import Image
-                import io as _io
-                return _np.asarray(
-                    Image.open(_io.BytesIO(payload)).convert("L"))
-            except ImportError:
-                pass
-            try:
-                from nosql_join_stream_spark.operators import (
-                    png_codec as _pc)
-            except ImportError:
-                raise NotImplementedError(
-                    "image decode requires PIL/libvips; not available "
-                    "here") from None
-            return _pc.decode_gray_auto(payload)
 
         def _dhash(arr):
             h, w = arr.shape
@@ -590,7 +574,7 @@ def image_dhash(media: DataFrame, grid_w: int = 8,
         for pdf in batches:
             his, los, ws, hs = [], [], [], []
             for pay in pdf["payload"]:
-                arr = _decode(bytes(pay))
+                arr = decode(bytes(pay))
                 hi, lo = _dhash(arr)
                 his.append(hi)
                 los.append(lo)

@@ -23,6 +23,7 @@ touched once (scan) plus once per shortlist hit (rerank).
 from __future__ import annotations
 
 import hashlib
+import os
 import struct
 
 from pyspark.sql import DataFrame, Window
@@ -539,6 +540,67 @@ def _ivf_centroids(corpus: DataFrame, vec: str, id_col: str,
     return c
 
 
+def _cell_assign_kernel(bc, n_meta: int):
+    """mapInPandas kernel assigning each vector to its argmax-cosine
+    cell (zero-norm guard included), passing ``n_meta`` trailing
+    metadata columns through untouched — shared by the inline index,
+    the standing build and the append maintenance op so their layouts
+    can never drift."""
+    def assign(batches):
+        import numpy as _np
+        import pandas as _pd
+        c = bc.value
+        for part in batches:
+            if len(part) == 0:
+                continue
+            v = _np.stack(part.iloc[:, 1].to_list()).astype("float64")
+            nv = _np.linalg.norm(v, axis=1, keepdims=True)
+            nv[nv == 0] = 1.0  # zero vector -> cell 0, not NaN-argmax
+            cell = ((v / nv) @ c.T).argmax(axis=1).astype("int32")
+            out = {"__cid": part.iloc[:, 0], "__cell": cell,
+                   "__cv": part.iloc[:, 1]}
+            for j in range(n_meta):
+                out[part.columns[2 + j]] = part.iloc[:, 2 + j]
+            yield _pd.DataFrame(out)
+    return assign
+
+
+def _cell_schema(df: DataFrame, vec: str, meta_cols) -> str:
+    types = dict(df.dtypes)
+    extra = "".join(f", {c} {types[c]}" for c in meta_cols)
+    return f"__cid long, __cell int, __cv {types[vec]}{extra}"
+
+
+def _probe_kernel(bc, nprobe: int):
+    """mapInPandas kernel sending each query to its ``nprobe`` nearest
+    cells by cosine, one output row per probed cell (zero-norm guard
+    included) — the one query side of the inline, standing and PQ
+    probes.  It ranks with ``argsort`` where the assignment kernel
+    takes ``argmax``: the two break ties differently, so they stay
+    two kernels."""
+    def probe(batches):
+        import numpy as _np
+        import pandas as _pd
+        c = bc.value
+        np_ = min(nprobe, len(c))
+        for part in batches:
+            if len(part) == 0:
+                continue
+            v = _np.stack(part.iloc[:, 1].to_list()).astype("float64")
+            nv = _np.linalg.norm(v, axis=1, keepdims=True)
+            nv[nv == 0] = 1.0  # zero vector -> cell 0, not NaN-argmax
+            order = _np.argsort(-((v / nv) @ c.T), axis=1)[:, :np_]
+            out = part.loc[part.index.repeat(np_)]
+            yield _pd.DataFrame({"__qid": out.iloc[:, 0],
+                                 "__cell": order.reshape(-1).astype("int32"),
+                                 "__qv": out.iloc[:, 1]})
+    return probe
+
+
+def _probe_schema(queries: DataFrame, vec: str) -> str:
+    return f"__qid long, __cell int, __qv {dict(queries.dtypes)[vec]}"
+
+
 def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                  n_cells: int = 16, nprobe: int = 4,
                  query_id: str = "q_id", corpus_id: str = "c_id",
@@ -555,58 +617,15 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     partitioned by cell, and a probe reads only nprobe/n_cells of it.
     """
     spark = corpus.sparkSession
-    cents = _ivf_centroids(corpus, vec, corpus_id, n_cells)
-    bc = spark.sparkContext.broadcast(cents)
-
-    def assign_corpus(batches):
-        import numpy as _np
-        import pandas as _pd
-        c = bc.value
-        for part in batches:
-            if len(part) == 0:
-                continue
-            v = _np.stack(part.iloc[:, 1].to_list()).astype("float64")
-            nv = _np.linalg.norm(v, axis=1, keepdims=True)
-            nv[nv == 0] = 1.0  # zero vector -> cell 0, not NaN-argmax
-            vn = v / nv
-            cell = (vn @ c.T).argmax(axis=1).astype("int32")
-            yield _pd.DataFrame({"__cid": part.iloc[:, 0], "__cell": cell,
-                                 "__cv": part.iloc[:, 1]})
-
-    def assign_queries(batches):
-        import numpy as _np
-        import pandas as _pd
-        c = bc.value
-        np_ = min(nprobe, len(c))
-        for part in batches:
-            if len(part) == 0:
-                continue
-            v = _np.stack(part.iloc[:, 1].to_list()).astype("float64")
-            nv = _np.linalg.norm(v, axis=1, keepdims=True)
-            nv[nv == 0] = 1.0  # zero vector -> cell 0, not NaN-argmax
-            vn = v / nv
-            order = _np.argsort(-(vn @ c.T), axis=1)[:, :np_]
-            out = part.loc[part.index.repeat(np_)]
-            yield _pd.DataFrame({"__qid": out.iloc[:, 0],
-                                 "__cell": order.reshape(-1).astype("int32"),
-                                 "__qv": out.iloc[:, 1]})
-
-    vec_t = dict(corpus.dtypes)[vec]
+    bc = spark.sparkContext.broadcast(
+        _ivf_centroids(corpus, vec, corpus_id, n_cells))
     c_assigned = corpus.select(F.col(corpus_id), F.col(vec)).mapInPandas(
-        assign_corpus, schema=f"__cid long, __cell int, __cv {vec_t}")
+        _cell_assign_kernel(bc, 0), schema=_cell_schema(corpus, vec, ()))
     q_assigned = queries.select(F.col(query_id), F.col(vec)).mapInPandas(
-        assign_queries, schema=f"__qid long, __cell int, __qv {vec_t}")
-    sim = F.round(cosine(
-        F.transform("__qv", lambda x: x.cast("double")),
-        F.transform("__cv", lambda x: x.cast("double"))), 6)
+        _probe_kernel(bc, nprobe), schema=_probe_schema(queries, vec))
     scored = (F.broadcast(q_assigned).join(c_assigned, "__cell")
-              .filter(F.col("__qid") != F.col("__cid"))
-              .withColumn("sim", sim))
-    w = Window.partitionBy("__qid").orderBy(F.col("sim").desc(), F.col("__cid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select(F.col("__qid").alias(query_id),
-                          F.col("__cid").alias(corpus_id), "sim", "rank"))
+              .filter(F.col("__qid") != F.col("__cid")))
+    return _rank_topk(scored, k, query_id, corpus_id)
 
 
 def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
@@ -1027,8 +1046,6 @@ def pq_encode(df: DataFrame, id_col: str = "vec_id",
     array and the cosine between the original vector and its
     reconstruction (the per-row quantization-quality witness).
     """
-    import numpy as np
-
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(
         _pq_codebooks(df, id_col, vec, m, k, sample, iters))
@@ -1116,23 +1133,6 @@ def ann_ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
             yield _pd.DataFrame({"__cid": part.iloc[:, 0], "__cell": cell,
                                  "__codes": list(codes)})
 
-    def probe_queries(batches):
-        import pandas as _pd
-        C, _ = bc.value
-        np_ = min(nprobe, len(C))
-        for part in batches:
-            if len(part) == 0:
-                continue
-            V = np.stack(part.iloc[:, 1].to_list()).astype("float64")
-            nv = np.linalg.norm(V, axis=1, keepdims=True)
-            nv[nv == 0] = 1.0
-            vn = V / nv
-            order = np.argsort(-(vn @ C.T), axis=1)[:, :np_]
-            out = part.loc[part.index.repeat(np_)]
-            yield _pd.DataFrame({"__qid": out.iloc[:, 0],
-                                 "__cell": order.reshape(-1).astype("int32"),
-                                 "__qv": out.iloc[:, 1]})
-
     def adc_score(batches):
         """Asymmetric distance: sum_j q_sub_j · book[j][code_j] — an
         inner-product approximation from codes alone."""
@@ -1151,11 +1151,11 @@ def ann_ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                                  "__cid": part["__cid"],
                                  "__adc": np.round(score, 6)})
 
-    vec_t = dict(corpus.dtypes)[vec]
     c_codes = corpus.select(F.col(corpus_id), F.col(vec)).mapInPandas(
         encode_corpus, schema=f"__cid long, __cell int, __codes array<int>")
     q_probe = queries.select(F.col(query_id), F.col(vec)).mapInPandas(
-        probe_queries, schema=f"__qid long, __cell int, __qv {vec_t}")
+        _probe_kernel(spark.sparkContext.broadcast(cents), nprobe),
+        schema=_probe_schema(queries, vec))
     cand = (F.broadcast(q_probe).join(c_codes, "__cell")
             .filter(F.col("__qid") != F.col("__cid")))
     scored = cand.mapInPandas(
@@ -1170,18 +1170,9 @@ def ann_ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                         F.col(vec).alias("__qv"))
     cv = corpus.select(F.col(corpus_id).alias("__cid"),
                        F.col(vec).alias("__cv"))
-    sim = F.round(cosine(
-        F.transform("__qv", lambda x: x.cast("double")),
-        F.transform("__cv", lambda x: x.cast("double"))), 6)
     reranked = (short.join(F.broadcast(qv), "__qid")
-                     .join(cv, "__cid")
-                     .withColumn("sim", sim))
-    w2 = Window.partitionBy("__qid").orderBy(F.col("sim").desc(),
-                                             F.col("__cid"))
-    return (reranked.withColumn("rank", F.row_number().over(w2))
-                    .filter(F.col("rank") <= k)
-                    .select(F.col("__qid").alias(query_id),
-                            F.col("__cid").alias(corpus_id), "sim", "rank"))
+                     .join(cv, "__cid"))
+    return _rank_topk(reranked, k, query_id, corpus_id)
 
 
 def semantic_dedup(df: DataFrame, k: int = 8, threshold: float = 0.4,
@@ -1256,34 +1247,31 @@ def semantic_dedup(df: DataFrame, k: int = 8, threshold: float = 0.4,
                             "is_duplicate"))
 
 
-def _cell_assign_kernel(bc, n_meta: int):
-    """mapInPandas kernel assigning each vector to its argmax-cosine
-    cell (zero-norm guard included), passing ``n_meta`` trailing
-    metadata columns through untouched — shared by the index build and
-    the append maintenance op so their layouts can never drift."""
-    def assign(batches):
-        import numpy as _np
-        import pandas as _pd
-        c = bc.value
-        for part in batches:
-            if len(part) == 0:
-                continue
-            v = _np.stack(part.iloc[:, 1].to_list()).astype("float64")
-            nv = _np.linalg.norm(v, axis=1, keepdims=True)
-            nv[nv == 0] = 1.0  # zero vector -> cell 0, not NaN-argmax
-            cell = ((v / nv) @ c.T).argmax(axis=1).astype("int32")
-            out = {"__cid": part.iloc[:, 0], "__cell": cell,
-                   "__cv": part.iloc[:, 1]}
-            for j in range(n_meta):
-                out[part.columns[2 + j]] = part.iloc[:, 2 + j]
-            yield _pd.DataFrame(out)
-    return assign
+#: a standing IVF index's layout under its ``location``: the trained
+#: centroids and the corpus hive-partitioned by ``__cell``
+_IVF_CENTROIDS, _IVF_CELLS = "centroids.parquet", "corpus_cells"
 
 
-def _cell_schema(df: DataFrame, vec: str, meta_cols) -> str:
-    types = dict(df.dtypes)
-    extra = "".join(f", {c} {types[c]}" for c in meta_cols)
-    return f"__cid long, __cell int, __cv {types[vec]}{extra}"
+def _ivf_cells(location: str) -> str:
+    """Path of the standing IVF index's cell-partitioned corpus;
+    ``ValueError`` when none was built at ``location``.  The check is
+    the directory, not a ``_STANDING`` marker: a direct
+    ``ann_ivf_partitioned`` build writes none."""
+    path = os.path.join(location, _IVF_CELLS)
+    if not os.path.isdir(path):
+        raise ValueError(
+            f"no standing IVF index at {location}; build one first "
+            "(ann_ivf_partitioned rebuild=True)")
+    return path
+
+
+def _read_centroids(spark, location: str):
+    """The standing index's persisted centroids, one row per cell."""
+    import numpy as np
+
+    pdf = (spark.read.parquet(os.path.join(location, _IVF_CENTROIDS))
+           .orderBy("cell").toPandas())
+    return np.stack(pdf["cv"].to_list()).astype("float64")
 
 
 def ann_ivf_append(new_corpus: DataFrame, location: str,
@@ -1320,22 +1308,11 @@ def ann_ivf_append(new_corpus: DataFrame, location: str,
     non-deterministic upstreams (sample/limit): the count returned is
     the rows actually written.
     """
-    import os
-
-    import numpy as np
-
     from nosql_join_stream_spark.sinks import write_table
 
+    index_path = _ivf_cells(location)
     spark = new_corpus.sparkSession
-    cent_path = os.path.join(location, "centroids.parquet")
-    index_path = os.path.join(location, "corpus_cells")
-    if not os.path.isdir(index_path):
-        raise ValueError(
-            f"no standing IVF index at {location}; build one first "
-            "(ann_ivf_partitioned rebuild=True)")
-    cent_pdf = spark.read.parquet(cent_path).orderBy("cell").toPandas()
-    cents = np.stack(cent_pdf["cv"].to_list()).astype("float64")
-    bc = spark.sparkContext.broadcast(cents)
+    bc = spark.sparkContext.broadcast(_read_centroids(spark, location))
 
     assigned = (new_corpus
                 .select(F.col(corpus_id), F.col(vec),
@@ -1365,12 +1342,7 @@ def ann_ivf_delete(ids: DataFrame, location: str,
     ``compact='...'`` semantics belong to a rebuild, which folds
     tombstones in by construction.  Returns the number of ids appended.
     """
-    import os
-
-    if not os.path.isdir(os.path.join(location, "corpus_cells")):
-        raise ValueError(
-            f"no standing IVF index at {location}; build one first "
-            "(ann_ivf_partitioned rebuild=True)")
+    _ivf_cells(location)
     return append_tombstones(ids, corpus_id, location)
 
 
@@ -1392,16 +1364,10 @@ def ann_ivf_compact(location: str) -> int:
     (geometry never changes), so probe pruning and recall are
     unaffected.  Returns the number of cells rewritten.
     """
-    import os
-
     from pyspark.sql import SparkSession
 
+    index_path = _ivf_cells(location)
     spark = SparkSession.getActiveSession()
-    index_path = os.path.join(location, "corpus_cells")
-    if not os.path.isdir(index_path):
-        raise ValueError(
-            f"no standing IVF index at {location}; build one first "
-            "(ann_ivf_partitioned rebuild=True)")
     tombs = read_tombstones(spark, location)
     if tombs is None:
         return 0  # nothing outstanding — compaction is a no-op
@@ -1473,17 +1439,11 @@ def ann_ivf_partitioned(queries: DataFrame, corpus: DataFrame,
     vectors — raise nprobe to compensate).  ``ann_ivf_append`` takes
     the same ``meta_cols`` so maintenance preserves the layout.
     """
-    import os
-
-    import numpy as np
-
     from nosql_join_stream_spark.sinks import write_table
 
     spark = corpus.sparkSession
     if location is None:
         location = artifact_dir("nsjs_ivf", "default")
-    cent_path = os.path.join(location, "centroids.parquet")
-    index_path = os.path.join(location, "corpus_cells")
 
     if rebuild:
         if n_cells is None:
@@ -1495,14 +1455,16 @@ def ann_ivf_partitioned(queries: DataFrame, corpus: DataFrame,
         cent_rows = [(i, [float(x) for x in cents[i]])
                      for i in range(len(cents))]
         spark.createDataFrame(cent_rows, "cell int, cv array<double>") \
-             .coalesce(1).write.mode("overwrite").parquet(cent_path)
+             .coalesce(1).write.mode("overwrite") \
+             .parquet(os.path.join(location, _IVF_CENTROIDS))
         bc = spark.sparkContext.broadcast(cents)
         assigned = (corpus
                     .select(F.col(corpus_id), F.col(vec),
                             *[F.col(c) for c in meta_cols])
                     .mapInPandas(_cell_assign_kernel(bc, len(meta_cols)),
                                  schema=_cell_schema(corpus, vec, meta_cols)))
-        write_table(assigned, index_path, partition_by=["__cell"])
+        write_table(assigned, os.path.join(location, _IVF_CELLS),
+                    partition_by=["__cell"])
 
     return ann_ivf_probe(queries, location, k=k, nprobe=nprobe,
                          query_id=query_id, corpus_id=corpus_id,
@@ -1525,46 +1487,15 @@ def ann_ivf_probe(queries: DataFrame, location: str,
     (PushedFilters — see ann_ivf_partitioned's filtered-search notes).
     Batch-shaped, so it drops straight into ``foreachBatch`` for the
     streaming query-service form (streaming.stream_ann_probe)."""
-    import os
-
-    import numpy as np
-
+    index_path = _ivf_cells(location)
     spark = queries.sparkSession
-    cent_path = os.path.join(location, "centroids.parquet")
-    index_path = os.path.join(location, "corpus_cells")
-    if not os.path.isdir(index_path):
-        raise ValueError(
-            f"no standing IVF index at {location}; build one first "
-            "(ann_ivf_partitioned rebuild=True)")
-    vec_t = dict(queries.dtypes)[vec]
-    cent_pdf = spark.read.parquet(cent_path).orderBy("cell").toPandas()
-    cents = np.stack(cent_pdf["cv"].to_list()).astype("float64")
-    bc_q = spark.sparkContext.broadcast(cents)
-    np_probe = min(nprobe, len(cents))
-
-    def assign_queries(batches):
-        import numpy as _np
-        import pandas as _pd
-        c = bc_q.value
-        for part in batches:
-            if len(part) == 0:
-                continue
-            v = _np.stack(part.iloc[:, 1].to_list()).astype("float64")
-            nv = _np.linalg.norm(v, axis=1, keepdims=True)
-            nv[nv == 0] = 1.0  # zero vector -> cell 0, not NaN-argmax
-            vn = v / nv
-            order = _np.argsort(-(vn @ c.T), axis=1)[:, :np_probe]
-            out = part.loc[part.index.repeat(np_probe)]
-            yield _pd.DataFrame({"__qid": out.iloc[:, 0],
-                                 "__cell": order.reshape(-1).astype("int32"),
-                                 "__qv": out.iloc[:, 1]})
-
+    bc = spark.sparkContext.broadcast(_read_centroids(spark, location))
     # lazy: the collect below is the materializing action (one job
     # instead of checkpoint-job + collect-job); later joins reuse the
     # persisted RDD
     q_assigned = (queries.select(F.col(query_id), F.col(vec))
-                  .mapInPandas(assign_queries,
-                               schema=f"__qid long, __cell int, __qv {vec_t}")
+                  .mapInPandas(_probe_kernel(bc, nprobe),
+                               schema=_probe_schema(queries, vec))
                   .localCheckpoint(eager=False))
     probed_cells = [r["__cell"] for r in
                     q_assigned.select("__cell").distinct().collect()]

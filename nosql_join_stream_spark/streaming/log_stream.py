@@ -38,8 +38,8 @@ _SHUFFLE_CONF_LOCK = threading.Lock()
 #: 2 starts hurting the per-key Python forms badly (sessionize 1.97 ->
 #: 3.49 at 2).  Per-key applyInPandasWithState callers pass 8
 #: explicitly (their state work parallelizes; see callers).  On a real
-#: cluster size this to key cardinality x executors — env-overridable.
-_DEFAULT_STORES = int(os.environ.get("NSJS_STREAM_STORES", "4"))
+#: cluster size this to key cardinality x executors.
+_DEFAULT_STORES = 4
 
 #: process-wide sequence behind every drain's unique query name and
 #: run-dir tag
@@ -117,17 +117,14 @@ def read_log_stream(spark: SparkSession, path: str, key=None, offset: int = 0,
     backpressure (Rx request(n) pages of 8, Akka buffers 32/64 —
     BASELINE.md) becomes declarative trigger pacing.
     """
+    from nosql_join_stream_spark.catalog import normalize_ts
+
     # footer-only batch peek: learn the physical ts encoding so the
-    # declared stream schema matches, then normalize to TIMESTAMP once
-    # (same contract as catalog.load_table)
+    # declared stream schema matches, then normalize to TIMESTAMP the
+    # way catalog.load_table does
     ts_dtype = dict(spark.read.parquet(path).dtypes).get("ts", "timestamp")
-    df = read_table_stream(spark, path, _events_schema(ts_dtype),
-                           max_files_per_trigger)
-    if ts_dtype == "bigint":
-        # integer `div`: nanos exceed 2^53 (catalog.py note)
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    df = normalize_ts(read_table_stream(spark, path, _events_schema(ts_dtype),
+                                        max_files_per_trigger), ("ts",))
     if key is not None:
         df = df.filter(F.col("user_id") == F.lit(key))
     if offset:

@@ -108,3 +108,25 @@ def test_tombstone_swap_lives_only_in_sinks():
                  and ("tombstones_old" in n.value
                       or "tombstones_staging" in n.value)]
     assert not hits, hits
+
+
+def _top_level_functions_with(path: str, text: str) -> set[str]:
+    """Names of the module-level functions whose source holds ``text``."""
+    src = open(path).read()
+    lines = src.splitlines()
+    return {fn.name for fn in ast.parse(src, path).body
+            if isinstance(fn, ast.FunctionDef)
+            and text in "\n".join(lines[fn.lineno - 1:fn.end_lineno])}
+
+
+def test_ivf_decisions_have_one_home():
+    """One IVF kernel set: the missing-index error is written once, the
+    nprobe row fan-out lives in one kernel, and the rounded-cosine rank
+    window is spelled only by the shared rank tail and the standing
+    probe's GEMM rerank."""
+    path = os.path.join(PKG, "operators", "similarity.py")
+    assert open(path).read().count("no standing IVF index") == 1
+    assert _top_level_functions_with(path, "index.repeat(") == \
+        {"_probe_kernel"}
+    assert _top_level_functions_with(path, 'orderBy(F.col("sim").desc()') \
+        == {"_rank_topk", "ann_ivf_probe"}

@@ -1138,6 +1138,27 @@ def test_ann_ivf_compact_rewrites_only_affected_cells(spark, sf_dir,
     assert similarity.ann_ivf_compact(loc) == 0
 
 
+@pytest.mark.parametrize("op", ["append", "delete", "compact", "probe"])
+def test_ann_ivf_ops_reject_missing_index(spark, tmp_path, op):
+    """Every op on a standing IVF index raises the one missing-index
+    error on a dir that holds none, before any Spark job runs."""
+    loc, sc, group = str(tmp_path), spark.sparkContext, "ivf_missing_index"
+    df = spark.createDataFrame([(1, [1.0, 0.0])],
+                               "c_id long, embedding array<double>")
+    call = {"append": lambda: similarity.ann_ivf_append(df, loc),
+            "delete": lambda: similarity.ann_ivf_delete(df, loc),
+            "compact": lambda: similarity.ann_ivf_compact(loc),
+            "probe": lambda: similarity.ann_ivf_probe(
+                df.withColumnRenamed("c_id", "q_id"), loc)}[op]
+    sc.setJobGroup(group, "missing-index check")
+    try:
+        with pytest.raises(ValueError, match="no standing IVF index"):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_ann_ivf_append_clears_matching_tombstones(spark, sf_dir, engine,
                                                    tmp_path):
     """delete → re-ingest via append must make the id probe-visible
@@ -1623,7 +1644,8 @@ def test_sketch_cardinality_exact_and_witness(spark):
     assert out["__ALL__"] == (100, True)
 
 
-def test_substring_spans_between_equals_full_on_union(spark, sf_dir, engine):
+def test_substring_spans_between_equals_full_on_union(spark, sf_dir, engine,
+                                                      tmp_path):
     """The incremental form must mark EXACTLY the spans the full
     operator marks over corpus ∪ batch, restricted to batch docs —
     the same contract every incremental dedup tier here carries."""
@@ -1631,17 +1653,14 @@ def test_substring_spans_between_equals_full_on_union(spark, sf_dir, engine):
     corpus = docs.filter(F.col("doc_id") % 10 != 9)
     batch = docs.filter(F.col("doc_id") % 10 == 9)
     inc = {tuple(r) for r in dedup.repeated_substring_spans_between(
-        corpus, batch, "text", "doc_id", w=15).collect()}
+        corpus, batch, "text", "doc_id", w=15,
+        location=str(tmp_path / "substr")).collect()}
     full = {tuple(r) for r in dedup.repeated_substring_spans(
         docs, "text", "doc_id", w=15)
         .filter(F.col("id") % 10 == 9).collect()}
     # drop the standing-index db so reruns/in-process siblings never
     # inherit a stale catalog entry (sibling index tests do the same)
-    import shutil
-    import tempfile
     spark.sql("DROP DATABASE IF EXISTS nsjs_substr CASCADE")
-    shutil.rmtree(f"{tempfile.gettempdir()}/nsjs_substr_{__import__('os').getpid()}",
-                  ignore_errors=True)
     assert inc == full and len(inc) > 0
 
 
