@@ -27,10 +27,18 @@ Scale shape (the whole point):
 - The manifest is driver-side but bounded by n_shards (never by
   rows): shard → row count, plus the (seed, n_shards, total) triple a
   consumer needs to verify the contract.
+
+One body per step: both balancing rules (equal-row hash order and
+weight serpentine) take their positions from ``_dense_positions`` and
+write through ``_write_parquet_shards``; both containers (WebDataset
+tar and TFRecord) share one writer, ``_write_container_shards``, and
+one reader, ``_read_container_shards`` — each container contributes
+only its encoder and its member walk.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -48,6 +56,71 @@ def seeded_order_hash(id_col: Column, seed: int) -> Column:
     tagged = F.concat(F.lit(f"{seed}:"), id_col.cast("string"))
     return F.conv(F.substring(F.sha2(tagged, 256), 1, 15),
                   16, 10).cast("long")
+
+
+def _dense_positions(df: DataFrame, order: list[Column]) -> DataFrame:
+    """df + ``__p0`` (the row's 0-based position in ``order``) and
+    ``__total`` (the corpus row count): the two-pass dense index both
+    balancing rules share.  One range partition on ``order``, a
+    within-partition ``row_number``, and a partitions-sized offset
+    table that broadcasts with the grand total riding along — no
+    global single-partition sort, and shard arithmetic adds no pass."""
+    d = (df.repartitionByRange(*order)
+           .sortWithinPartitions(*order)
+           .withColumn("__pid", F.spark_partition_id()))
+    w_in = Window.partitionBy("__pid").orderBy(*order)
+    d = d.withColumn("__rn", F.row_number().over(w_in))
+    w_off = Window.orderBy("__pid").rowsBetween(
+        Window.unboundedPreceding, -1)
+    w_all = Window.orderBy("__pid").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing)
+    offsets = (d.groupBy("__pid").agg(F.count("*").alias("__n"))
+               .withColumn("__off", F.coalesce(F.sum("__n").over(w_off),
+                                               F.lit(0)))
+               .withColumn("__total", F.sum("__n").over(w_all))
+               .select("__pid", "__off", "__total"))
+    return (d.join(F.broadcast(offsets), "__pid")
+             .withColumn("__p0", F.col("__off") + F.col("__rn") - 1)
+             .drop("__pid", "__rn", "__off"))
+
+
+def _write_parquet_shards(assigned: DataFrame, path: str, n_shards: int,
+                          sort: list, totals: dict, manifest: dict) -> dict:
+    """Write ``assigned`` (it carries a ``shard`` column) as hive
+    ``shard=K/`` parquet, one file per shard sorted by ``sort``, then
+    the ``_MANIFEST.json`` both parquet writers share: ``manifest``
+    plus, per shard and as ``total_<name>``, each aggregate in
+    ``totals`` (name -> Column) read back from the written files.
+
+    The repartition is BY SHARD ID, so each shard's rows coalesce
+    into one task → one file; the per-task sort leads with the shard
+    so a task that happens to hold two shards (hash collision) still
+    writes each file internally ordered.  A corpus smaller than
+    n_shards leaves some shards EMPTY (no hive dir is written for
+    them) — the manifest still lists every shard 0..N-1, with zeros,
+    so a dataloader expecting N entries never sees a missing shard.
+    """
+    (assigned
+     .repartition(n_shards, F.col("shard"))
+     .sortWithinPartitions("shard", *sort)
+     .write.mode("overwrite").partitionBy("shard")
+     .parquet(path))
+    rows = (assigned.sparkSession.read.parquet(path)
+            .groupBy(F.col("shard").cast("int").alias("shard"))
+            .agg(*[c.alias(k) for k, c in totals.items()])
+            .orderBy("shard").collect())  # bounded: n_shards rows
+    per = {int(r["shard"]): r for r in rows}
+    shards = [{"shard": k, **{c: int(per[k][c]) if k in per else 0
+                              for c in totals}}
+              for k in range(n_shards)]
+    manifest = dict(manifest, format="parquet/hive shard=K",
+                    n_shards=n_shards, shards=shards,
+                    **{f"total_{c}": sum(s[c] for s in shards)
+                       for c in totals})
+    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    return manifest
 
 
 def assign_shards(df: DataFrame, id_col: str, n_shards: int,
@@ -71,30 +144,13 @@ def assign_shards(df: DataFrame, id_col: str, n_shards: int,
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     kc = key_col or "__shuffle_key"
-    order = [kc, id_col]
-    d = (df.withColumn(kc, seeded_order_hash(F.col(id_col), seed))
-           .repartitionByRange(*[F.col(c) for c in order])
-           .sortWithinPartitions(*order)
-           .withColumn("__pid", F.spark_partition_id()))
-    w_in = Window.partitionBy("__pid").orderBy(*order)
-    d = d.withColumn("__rn", F.row_number().over(w_in))
-    # partitions-sized side: cumulative offsets AND the grand total
-    # ride one tiny broadcast — shard arithmetic costs no extra pass
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-    offsets = (d.groupBy("__pid").agg(F.count("*").alias("__n"))
-               .withColumn("__off", F.coalesce(F.sum("__n").over(w_off),
-                                               F.lit(0)))
-               .withColumn("__total", F.sum("__n").over(w_all))
-               .select("__pid", "__off", "__total"))
-    d = (d.join(F.broadcast(offsets), "__pid")
-          .withColumn("__p0", F.col("__off") + F.col("__rn") - 1)
-          .withColumn(shard_col,
+    d = _dense_positions(
+        df.withColumn(kc, seeded_order_hash(F.col(id_col), seed)),
+        [F.col(kc), F.col(id_col)])
+    d = (d.withColumn(shard_col,
                       F.expr(f"CAST((__p0 * {int(n_shards)}) DIV __total "
                              f"AS INT)"))
-          .drop("__pid", "__rn", "__off", "__total", "__p0"))
+          .drop("__total", "__p0"))
     return d if key_col else d.drop(kc)
 
 
@@ -103,48 +159,20 @@ def write_shards(df: DataFrame, path: str, id_col: str, n_shards: int,
     """Export ``df`` as ``n_shards`` equal-row parquet shards under
     ``path`` (hive layout ``shard=K/``), one file per shard, rows
     inside each shard sorted by the seeded shuffle key — then write a
-    ``_MANIFEST.json`` a dataloader verifies against.  Returns the
-    manifest dict.
-
-    The repartition is BY SHARD ID, so each shard's rows coalesce
-    into one task → one file; the per-task sort keys on (shard, key)
-    so a task that happens to hold two shards (hash collision) still
-    writes each file internally ordered.  Deterministic end to end:
-    rerunning overwrites with identical shard membership and order.
+    ``_MANIFEST.json`` (shard → rows, plus the seed/n_shards/total a
+    consumer verifies against).  Returns the manifest dict.
+    Deterministic end to end: rerunning overwrites with identical
+    shard membership and order.
     """
     kc = "__shuffle_key"
     assigned = assign_shards(df, id_col, n_shards, seed=seed,
                              key_col=kc)
-    (assigned
-     .repartition(n_shards, F.col("shard"))
-     .sortWithinPartitions("shard", kc, id_col)
-     .write.mode("overwrite").partitionBy("shard")
-     .parquet(path))
-    spark = df.sparkSession
-    rows = (spark.read.parquet(path)
-            .groupBy(F.col("shard").cast("int").alias("shard"))
-            .agg(F.count("*").alias("rows"))
-            .orderBy("shard").collect())  # bounded: n_shards rows
-    # a corpus smaller than n_shards leaves some shards EMPTY (no
-    # hive dir is written for them) — the manifest still lists every
-    # shard 0..N-1 so a dataloader expecting N entries sees rows=0
-    # instead of a missing shard
-    per = {int(r["shard"]): int(r["rows"]) for r in rows}
-    manifest = {
-        "format": "parquet/hive shard=K",
-        "seed": seed,
-        "n_shards": n_shards,
-        "id_col": id_col,
-        "order": f"sha256('{seed}:' || {id_col}) first-15-hex, "
-                 f"ties on {id_col}",
-        "total_rows": int(sum(per.values())),
-        "shards": [{"shard": k, "rows": per.get(k, 0)}
-                   for k in range(n_shards)],
-    }
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    return manifest
+    return _write_parquet_shards(
+        assigned, path, n_shards, [kc, id_col],
+        {"rows": F.count("*")},
+        {"seed": seed, "id_col": id_col,
+         "order": f"sha256('{seed}:' || {id_col}) first-15-hex, "
+                  f"ties on {id_col}"})
 
 
 def assign_shards_weight_balanced(df: DataFrame, id_col: str,
@@ -164,32 +192,18 @@ def assign_shards_weight_balanced(df: DataFrame, id_col: str,
     max(total) - min(total) <= max(weight).  Deterministic: pure
     integer arithmetic on the dense rank, no RNG.
 
-    Scale shape: identical to assign_shards — one range partition on
-    the sort key, per-partition row_number, partitions-sized
-    broadcast offset table.  No global single-partition sort.
+    Scale shape: identical to assign_shards (the same dense index).
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    order = [F.col(weight_col).desc(), F.col(id_col).asc()]
-    d = (df.repartitionByRange(*order)
-           .sortWithinPartitions(*order)
-           .withColumn("__pid", F.spark_partition_id()))
-    w_in = Window.partitionBy("__pid").orderBy(*order)
-    d = d.withColumn("__rn", F.row_number().over(w_in))
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1)
-    offsets = (d.groupBy("__pid").agg(F.count("*").alias("__n"))
-               .withColumn("__off", F.coalesce(F.sum("__n").over(w_off),
-                                               F.lit(0)))
-               .select("__pid", "__off"))
     n = int(n_shards)
-    return (d.join(F.broadcast(offsets), "__pid")
-             .withColumn("__p0", F.col("__off") + F.col("__rn") - 1)
-             .withColumn(shard_col,
+    d = _dense_positions(df, [F.col(weight_col).desc(),
+                              F.col(id_col).asc()])
+    return (d.withColumn(shard_col,
                          F.expr(f"CAST(IF((__p0 DIV {n}) % 2 = 0, "
                                 f"__p0 % {n}, {n - 1} - __p0 % {n}) "
                                 f"AS INT)"))
-             .drop("__pid", "__rn", "__off", "__p0"))
+             .drop("__total", "__p0"))
 
 
 def write_shards_weight_balanced(df: DataFrame, path: str, id_col: str,
@@ -204,36 +218,141 @@ def write_shards_weight_balanced(df: DataFrame, path: str, id_col: str,
     shard membership and order."""
     assigned = assign_shards_weight_balanced(df, id_col, weight_col,
                                              n_shards)
-    (assigned
-     .repartition(n_shards, F.col("shard"))
-     .sortWithinPartitions("shard", F.col(weight_col).desc(),
-                           F.col(id_col))
-     .write.mode("overwrite").partitionBy("shard")
-     .parquet(path))
-    spark = df.sparkSession
-    rows = (spark.read.parquet(path)
-            .groupBy(F.col("shard").cast("int").alias("shard"))
-            .agg(F.count("*").alias("rows"),
-                 F.sum(F.col(weight_col).cast("long")).alias("weight"))
-            .orderBy("shard").collect())  # bounded: n_shards rows
-    per = {int(r["shard"]): (int(r["rows"]), int(r["weight"]))
-           for r in rows}
-    manifest = {
-        "format": "parquet/hive shard=K",
-        "n_shards": n_shards,
-        "id_col": id_col,
-        "weight_col": weight_col,
-        "order": f"({weight_col} DESC, {id_col}) serpentine",
-        "total_rows": int(sum(r for r, _ in per.values())),
-        "total_weight": int(sum(w for _, w in per.values())),
-        "shards": [{"shard": k, "rows": per.get(k, (0, 0))[0],
-                    "weight": per.get(k, (0, 0))[1]}
-                   for k in range(n_shards)],
-    }
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    return manifest
+    return _write_parquet_shards(
+        assigned, path, n_shards,
+        [F.col(weight_col).desc(), F.col(id_col)],
+        {"rows": F.count("*"),
+         "weight": F.sum(F.col(weight_col).cast("long"))},
+        {"id_col": id_col, "weight_col": weight_col,
+         "order": f"({weight_col} DESC, {id_col}) serpentine"})
+
+
+def _write_container_shards(df: DataFrame, path: str, id_col: str,
+                            content_col: str, n_shards: int, ext: str,
+                            encode, names: tuple[str, str, str, str]):
+    """The one container writer behind the tar and TFRecord exports.
+
+    Shard = ``id % n_shards``; stale ``shard-*.{ext}`` files from
+    prior runs are cleared first (a shard group with zero rows writes
+    no file, so leftovers from a different n_shards/corpus would be
+    silently picked up by the reader).  One ``applyInPandas`` task
+    per shard sorts its rows by id, calls ``encode(ids, contents) ->
+    (bytes, payload_bytes)`` (an operator-module function, so it
+    pickles by reference) and atomically publishes
+    ``shard-{K:05d}.{ext}`` (tmp + rename) — nothing passes through
+    the driver.  Returns per-shard stats: ``shard``, then the four
+    ``names`` (record count, payload bytes, file bytes, file sha)
+    around a position-weighted ``ids_checksum`` that pins order.
+    """
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+    os.makedirs(path, exist_ok=True)
+    for stale in glob.glob(os.path.join(path, f"shard-*.{ext}")):
+        os.remove(stale)
+
+    assigned = df.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.col(content_col).cast("string").alias("content"),
+        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"))
+    n_rec, n_payload, n_file, sha = names
+
+    def build(key, pdf):
+        import hashlib
+
+        import pandas as _pd
+
+        shard = int(key[0])
+        pdf = pdf.sort_values("id")
+        raw, payload_bytes = encode(
+            pdf["id"], ["" if c is None else str(c) for c in pdf["content"]])
+        out = os.path.join(path, f"shard-{shard:05d}.{ext}")
+        tmp = out + f".tmp-{os.getpid()}"
+        with open(tmp, "wb") as fh:
+            fh.write(raw)
+        os.replace(tmp, out)                  # atomic publish
+        checksum = sum((i + 1) * int(d)
+                       for i, d in enumerate(pdf["id"]))
+        return _pd.DataFrame([{
+            "shard": shard,
+            n_rec: len(pdf),
+            n_payload: int(payload_bytes),
+            "ids_checksum": int(checksum),
+            n_file: len(raw),
+            sha: hashlib.sha256(raw).hexdigest(),
+        }])
+
+    return (assigned.groupBy("shard")
+            .applyInPandas(build,
+                           schema=f"shard int, {n_rec} long, "
+                                  f"{n_payload} long, ids_checksum long, "
+                                  f"{n_file} long, {sha} string"))
+
+
+def _read_container_shards(spark, path: str, ext: str, members):
+    """The one container reader behind the tar and TFRecord loaders:
+    the ``binaryFile`` source lists and splits ``shard-*.{ext}``
+    files across tasks (one task per shard), and a ``mapInPandas``
+    kernel walks each file with ``members(buf)`` — an operator-module
+    function yielding ``(id, content)`` — emitting one (id, shard,
+    content) row per member.  Nothing passes through the driver;
+    path-glob pruning applies before any byte is read."""
+
+    def op(batches):
+        import pandas as _pd
+
+        for pdf in batches:
+            ids, contents, shards = [], [], []
+            for fname, data in zip(pdf["path"], pdf["content"]):
+                base = str(fname).rsplit("/", 1)[-1]
+                shard = int(base.split("-")[1].split(".")[0])
+                for rid, content in members(bytes(data)):
+                    ids.append(rid)
+                    contents.append(content)
+                    shards.append(shard)
+            yield _pd.DataFrame({
+                "id": _pd.Series(ids, dtype="int64"),
+                "shard": _pd.Series(shards, dtype="int32"),
+                "content": contents})
+
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", f"shard-*.{ext}").load(path)
+            .select("path", "content")
+            .mapInPandas(op, schema="id long, shard int, content string"))
+
+
+def _tar_encode(ids, contents) -> tuple[bytes, int]:
+    """USTAR archive of ``{id:012d}.txt`` members with pinned metadata
+    (mtime 0, uid/gid 0, mode 0644, empty uname/gname): byte-identical
+    on every rerun.  Payload bytes = the members' UTF-8 sizes."""
+    import io
+    import tarfile
+
+    buf = io.BytesIO()
+    payload = 0
+    with tarfile.open(fileobj=buf, mode="w",
+                      format=tarfile.USTAR_FORMAT) as tf:
+        for did, content in zip(ids, contents):
+            data = content.encode("utf-8")
+            payload += len(data)
+            info = tarfile.TarInfo(name=f"{int(did):012d}.txt")
+            info.size = len(data)
+            info.mtime = 0
+            info.uid = info.gid = 0
+            info.mode = 0o644
+            info.uname = info.gname = ""
+            tf.addfile(info, io.BytesIO(data))
+    return buf.getvalue(), payload
+
+
+def _tar_members(buf: bytes):
+    """(id, content) per member of one tar shard, in archive order."""
+    import io
+    import tarfile
+
+    with tarfile.open(fileobj=io.BytesIO(buf)) as tf:
+        for m in tf:
+            yield (int(m.name.split(".")[0]),
+                   tf.extractfile(m).read().decode("utf-8"))
 
 
 def write_webdataset_shards(df: DataFrame, path: str, id_col: str,
@@ -267,108 +386,17 @@ def write_webdataset_shards(df: DataFrame, path: str, id_col: str,
     (manifest / cache key; not oracle-comparable, dropped by the
     registry query).
     """
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    os.makedirs(path, exist_ok=True)
-    # Clear stale shards from prior runs: a shard group with zero rows
-    # writes no file, so leftovers from a different n_shards/corpus
-    # would be silently picked up by read_webdataset_shards.
-    import glob as _glob
-    for stale in _glob.glob(os.path.join(path, "shard-*.tar")):
-        os.remove(stale)
-
-    assigned = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(content_col).cast("string").alias("content"),
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"))
-
-    def build(key, pdf):
-        import hashlib
-        import io
-        import tarfile
-
-        import pandas as _pd
-
-        shard = int(key[0])
-        pdf = pdf.sort_values("id")
-        buf = io.BytesIO()
-        with tarfile.open(fileobj=buf, mode="w",
-                          format=tarfile.USTAR_FORMAT) as tf:
-            for did, content in zip(pdf["id"], pdf["content"]):
-                data = ("" if content is None else str(content)) \
-                    .encode("utf-8")
-                info = tarfile.TarInfo(name=f"{int(did):012d}.txt")
-                info.size = len(data)
-                info.mtime = 0
-                info.uid = info.gid = 0
-                info.mode = 0o644
-                info.uname = info.gname = ""
-                tf.addfile(info, io.BytesIO(data))
-        raw = buf.getvalue()
-        out = os.path.join(path, f"shard-{shard:05d}.tar")
-        tmp = out + f".tmp-{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(raw)
-        os.replace(tmp, out)                  # atomic publish
-        sizes = [len(("" if c is None else str(c)).encode("utf-8"))
-                 for c in pdf["content"]]
-        checksum = sum((i + 1) * int(d)
-                       for i, d in enumerate(pdf["id"]))
-        return _pd.DataFrame([{
-            "shard": shard,
-            "n_members": len(pdf),
-            "member_bytes": int(sum(sizes)),
-            "ids_checksum": int(checksum),
-            "tar_bytes": len(raw),
-            "tar_sha": hashlib.sha256(raw).hexdigest(),
-        }])
-
-    return (assigned.groupBy("shard")
-            .applyInPandas(build,
-                           schema="shard int, n_members long, "
-                                  "member_bytes long, ids_checksum long, "
-                                  "tar_bytes long, tar_sha string"))
+    return _write_container_shards(
+        df, path, id_col, content_col, n_shards, "tar", _tar_encode,
+        ("n_members", "member_bytes", "tar_bytes", "tar_sha"))
 
 
 def read_webdataset_shards(spark, path: str):
-    """Ingest WebDataset-style ``.tar`` shards back into (id, content)
-    rows — the loader side of :func:`write_webdataset_shards`, so the
-    export loop is closed inside the engine (write -> read -> verify).
-
-    Scale shape: the ``binaryFile`` source lists and splits shard
-    files across tasks (one task per shard — WebDataset's own reading
-    discipline), and a ``mapInPandas`` kernel untars each shard
-    in-memory, emitting one row per member.  Nothing passes through
-    the driver; predicate/partition pruning on ``path`` glob applies
-    before any byte is read.
-    """
-
-    def op(batches):
-        import io
-        import tarfile
-
-        import pandas as _pd
-
-        for pdf in batches:
-            ids, contents, shards = [], [], []
-            for fname, data in zip(pdf["path"], pdf["content"]):
-                base = str(fname).rsplit("/", 1)[-1]
-                shard = int(base.split("-")[1].split(".")[0])
-                with tarfile.open(fileobj=io.BytesIO(bytes(data))) as tf:
-                    for m in tf:
-                        ids.append(int(m.name.split(".")[0]))
-                        contents.append(
-                            tf.extractfile(m).read().decode("utf-8"))
-                        shards.append(shard)
-            yield _pd.DataFrame({
-                "id": _pd.Series(ids, dtype="int64"),
-                "shard": _pd.Series(shards, dtype="int32"),
-                "content": contents})
-
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "shard-*.tar").load(path)
-            .select("path", "content")
-            .mapInPandas(op, schema="id long, shard int, content string"))
+    """Ingest WebDataset-style ``.tar`` shards back into (id, shard,
+    content) rows — the loader side of :func:`write_webdataset_shards`,
+    so the export loop is closed inside the engine (write -> read ->
+    verify).  One task per shard untars it in memory."""
+    return _read_container_shards(spark, path, "tar", _tar_members)
 
 
 # --- TFRecord shards (r15) --------------------------------------------------
@@ -443,6 +471,23 @@ def tfrecord_unframe(buf: bytes) -> list[bytes]:
     return out
 
 
+def _tfrecord_encode(ids, contents) -> tuple[bytes, int]:
+    """One framed record ``{id:012d}\\t{content}`` per row; payload
+    bytes = the records' data lengths (framing excluded)."""
+    datas = [f"{int(did):012d}\t{content}".encode("utf-8")
+             for did, content in zip(ids, contents)]
+    return (b"".join(tfrecord_frame(d) for d in datas),
+            sum(len(d) for d in datas))
+
+
+def _tfrecord_members(buf: bytes):
+    """(id, content) per record of one TFRecord shard, both crcs
+    verified (:func:`tfrecord_unframe` raises on corruption)."""
+    for rec in tfrecord_unframe(buf):
+        rid, _, content = rec.decode("utf-8").partition("\t")
+        yield int(rid), content
+
+
 def write_tfrecord_shards(df: DataFrame, path: str, id_col: str,
                           content_col: str, n_shards: int):
     """Export ``df`` as TFRecord shards — the other canonical
@@ -458,95 +503,23 @@ def write_tfrecord_shards(df: DataFrame, path: str, id_col: str,
     ``SUM(16 + 13 + octet_length(content))`` — the container FRAMING
     is oracle-checkable just like the tar writer's.
 
-    Same scale/durability shape as write_webdataset_shards: shard =
-    id % n_shards, one applyInPandas task per shard, id-ordered
-    members, stale shards cleared, atomic tmp+rename publish,
-    byte-deterministic output (sha-asserted in tests).  Returns
-    per-shard stats (counts, payload bytes, position-weighted id
-    checksum, file bytes, sha).
+    Same writer as write_webdataset_shards (shard = id % n_shards,
+    one applyInPandas task per shard, id-ordered records, stale
+    shards cleared, atomic tmp+rename publish, byte-deterministic
+    output).  Returns per-shard stats (counts, payload bytes,
+    position-weighted id checksum, file bytes, sha).
     """
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    os.makedirs(path, exist_ok=True)
-    import glob as _glob
-    for stale in _glob.glob(os.path.join(path, "shard-*.tfrecord")):
-        os.remove(stale)
-
-    assigned = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(content_col).cast("string").alias("content"),
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"))
-
-    def build(key, pdf):
-        import hashlib
-
-        import pandas as _pd
-
-        shard = int(key[0])
-        pdf = pdf.sort_values("id")
-        parts = []
-        payload_bytes = 0
-        for did, content in zip(pdf["id"], pdf["content"]):
-            data = (f"{int(did):012d}\t"
-                    + ("" if content is None else str(content))) \
-                .encode("utf-8")
-            payload_bytes += len(data)
-            parts.append(tfrecord_frame(data))
-        raw = b"".join(parts)
-        out = os.path.join(path, f"shard-{shard:05d}.tfrecord")
-        tmp = out + f".tmp-{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            fh.write(raw)
-        os.replace(tmp, out)                  # atomic publish
-        checksum = sum((i + 1) * int(d)
-                       for i, d in enumerate(pdf["id"]))
-        return _pd.DataFrame([{
-            "shard": shard,
-            "n_records": len(pdf),
-            "payload_bytes": int(payload_bytes),
-            "ids_checksum": int(checksum),
-            "file_bytes": len(raw),
-            "file_sha": hashlib.sha256(raw).hexdigest(),
-        }])
-
-    return (assigned.groupBy("shard")
-            .applyInPandas(build,
-                           schema="shard int, n_records long, "
-                                  "payload_bytes long, "
-                                  "ids_checksum long, file_bytes long, "
-                                  "file_sha string"))
+    return _write_container_shards(
+        df, path, id_col, content_col, n_shards, "tfrecord",
+        _tfrecord_encode,
+        ("n_records", "payload_bytes", "file_bytes", "file_sha"))
 
 
 def read_tfrecord_shards(spark, path: str):
     """Ingest TFRecord shards back into (id, shard, content) rows —
     the loader side of :func:`write_tfrecord_shards`, closing the
-    export loop in-engine.  binaryFile source (one task per shard) +
-    mapInPandas unframe with BOTH crcs verified per record; any
-    corruption raises, never silently truncates."""
-
-    def op(batches):
-        import pandas as _pd
-
-        from nosql_join_stream_spark.operators.export_shards import (
-            tfrecord_unframe)
-
-        for pdf in batches:
-            ids, contents, shards = [], [], []
-            for fname, data in zip(pdf["path"], pdf["content"]):
-                base = str(fname).rsplit("/", 1)[-1]
-                shard = int(base.split("-")[1].split(".")[0])
-                for rec in tfrecord_unframe(bytes(data)):
-                    txt = rec.decode("utf-8")
-                    rid, _, content = txt.partition("\t")
-                    ids.append(int(rid))
-                    contents.append(content)
-                    shards.append(shard)
-            yield _pd.DataFrame({
-                "id": _pd.Series(ids, dtype="int64"),
-                "shard": _pd.Series(shards, dtype="int32"),
-                "content": contents})
-
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "shard-*.tfrecord").load(path)
-            .select("path", "content")
-            .mapInPandas(op, schema="id long, shard int, content string"))
+    export loop in-engine.  Same reader as the tar loader, with BOTH
+    crcs verified per record; any corruption raises, never silently
+    truncates."""
+    return _read_container_shards(spark, path, "tfrecord",
+                                  _tfrecord_members)

@@ -221,11 +221,6 @@ def _mulaw_table() -> np.ndarray:
 MULAW_TABLE = _mulaw_table()
 
 
-def mulaw_decode(codes: np.ndarray) -> np.ndarray:
-    """Vectorized G.711 mu-law expansion: uint8 codes -> int16."""
-    return MULAW_TABLE[np.asarray(codes, dtype=np.uint8)]
-
-
 def _alaw_table() -> np.ndarray:
     """G.711 A-law byte -> linear int16 (even-bit inversion 0x55,
     chord/step expansion; bit-identical to audioop.alaw2lin)."""

@@ -8,6 +8,18 @@ oracles.  Probabilistic recall operators (MinHash-LSH, SimHash, LSH
 ANN) are rows-only: their PRECISION is exact (every emitted pair is
 verified), but recall depends on banding, which SQL can't mirror
 bit-for-bit without reimplementing the hash stack.
+
+Kernel pickling rule: every Python kernel a query here ships to the
+executors (``mapInPandas`` / ``applyInPandas`` bodies, plant factories
+like ``_wav_plant_kernel``) is a NESTED closure, returned by a factory
+or defined inside the query, so cloudpickle ships it BY VALUE.  A
+module-level kernel in this module would pickle by reference, and an
+executor importing queries_pipeline directly trips the
+queries<->queries_pipeline registration cycle (a worker-only
+ImportError; the driver never sees it because it imports queries
+first).  Anything a kernel closes over must be an operator-module
+function or a ``functools.partial`` of one — those pickle by
+reference to modules a worker imports cleanly.
 """
 
 from __future__ import annotations
@@ -404,6 +416,17 @@ def _ann_recall_witness(exact: DataFrame, approx: DataFrame,
     return exact.crossJoin(F.broadcast(wit))
 
 
+def _ann_inputs(emb: DataFrame, *extra: str):
+    """(queries, corpus) of the ANN queries: vectors with vec_id < 10
+    as ``q_id`` probe every vector as ``c_id`` (``extra`` columns ride
+    on the corpus side).  ``emb`` may be a stream.  Callers that need
+    it spread the corpus."""
+    queries = (emb.filter(F.col("vec_id") < 10)
+               .select(F.col("vec_id").alias("q_id"), "embedding"))
+    return queries, emb.select(F.col("vec_id").alias("c_id"), "embedding",
+                               *extra)
+
+
 @register(
     "ann_cosine_topk",
     _brute_topk_sql(),
@@ -412,11 +435,9 @@ def _ann_recall_witness(exact: DataFrame, approx: DataFrame,
         "id tie-break for cross-engine determinism.",
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = spread(emb.select(F.col("vec_id").alias("c_id"), "embedding"))
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
+    corpus = spread(corpus)
     return similarity.cosine_topk(queries, corpus, k=5)
 
 
@@ -467,11 +488,8 @@ def _ann_lsh_oracle() -> str:
         "exactly.",
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
     return similarity.ann_lsh_topk(queries, corpus, k=5, n_planes=4, dim=64)
 
 
@@ -491,11 +509,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DuckDB-verifiable.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
     exact = similarity.cosine_topk(queries, corpus, k=5)
     ivf = similarity.ann_ivf_topk(queries, corpus, k=5, n_cells=16, nprobe=4)
     return _ann_recall_witness(exact, ivf, 0.5, "ivf_recall_ok")
@@ -694,6 +709,45 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "media_type", "width", "height", "byte_len"))
 
 
+def _gradient_plant_kernel(encoders):
+    """The gradient-image plant of the decode queries: per doc a
+    ``(doc_id % 32 + 8) x (doc_id % 16 + 8)`` gray raster with
+    pixel(i) = (doc_id*7 + i) % 256, encoded by
+    ``encoders[doc_id % len(encoders)]`` — an ``(encode, media_type)``
+    pair whose encode is a codec-module function or a partial of one.
+    A nested closure (the module docstring's pickling rule)."""
+
+    def plant(batches):
+        import numpy as _np
+        import pandas as _pd
+        for pdf in batches:
+            rows = []
+            for did in pdf["doc_id"]:
+                w, h = int(did) % 32 + 8, int(did) % 16 + 8
+                arr = ((int(did) * 7
+                        + _np.arange(w * h, dtype=_np.int64)) % 256) \
+                    .astype(_np.uint8).reshape(h, w)
+                enc, mt = encoders[int(did) % len(encoders)]
+                rows.append((int(did), enc(arr), mt, w, h, 1))
+            yield _pd.DataFrame(rows, columns=[
+                "doc_id", "payload", "media_type", "width", "height",
+                "n_frames"])
+
+    return plant
+
+
+def _gradient_media(e, encoders) -> DataFrame:
+    """Planted gradient media rows (MEDIA_SCHEMA), one per document.
+    The corpus lands as one parquet file at small sf → one partition,
+    and AQE would coalesce a column-only repartition of 5k rows right
+    back to one task; the Python encode+decode kernels are the cost
+    here and parallelize per row, so ``spread`` forces an explicit
+    task count (AQE honors user-numbered repartitions)."""
+    return (spread(e.table("documents").select("doc_id"))
+            .mapInPandas(_gradient_plant_kernel(encoders),
+                         schema=multimodal.MEDIA_SCHEMA))
+
+
 @register(
     "multimodal_decode_png",
     """
@@ -724,27 +778,10 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "output is version-dependent; decoded pixels are not.",
 )
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    docs = e.table("documents").select("doc_id")
+    from nosql_join_stream_spark.operators import png_codec
 
-    def plant(batches):
-        import numpy as _np
-        import pandas as _pd
-        from nosql_join_stream_spark.operators import png_codec as _pc
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                w, h = int(did) % 32 + 8, int(did) % 16 + 8
-                arr = ((int(did) * 7
-                        + _np.arange(w * h, dtype=_np.int64)) % 256) \
-                    .astype(_np.uint8).reshape(h, w)
-                rows.append((int(did), _pc.encode_gray(arr),
-                             "image/png", w, h, 1))
-            yield _pd.DataFrame(rows, columns=[
-                "doc_id", "payload", "media_type", "width", "height",
-                "n_frames"])
-
-    media = spread(docs).mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
+    media = _gradient_media(_engine(spark, sf_dir),
+                            [(png_codec.encode_gray, "image/png")])
     feats = multimodal.extract_features(media, batch_decode=True)
     return feats.select("doc_id", "width", "height", "mean_luma")
 
@@ -780,31 +817,13 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stubbed behind PIL.",
 )
 def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    docs = e.table("documents").select("doc_id")
+    from nosql_join_stream_spark.operators import png_codec as pc
 
-    def plant(batches):
-        import numpy as _np
-        import pandas as _pd
-        from nosql_join_stream_spark.operators import png_codec as _pc
-        encs = [(_pc.encode_gray, "image/png"),
-                (_pc.encode_gray_bmp, "image/bmp"),
-                (_pc.encode_gray_pgm, "image/x-portable-graymap"),
-                (_pc.encode_gray_gif, "image/gif")]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                w, h = int(did) % 32 + 8, int(did) % 16 + 8
-                arr = ((int(did) * 7
-                        + _np.arange(w * h, dtype=_np.int64)) % 256) \
-                    .astype(_np.uint8).reshape(h, w)
-                enc, mt = encs[int(did) % 4]
-                rows.append((int(did), enc(arr), mt, w, h, 1))
-            yield _pd.DataFrame(rows, columns=[
-                "doc_id", "payload", "media_type", "width", "height",
-                "n_frames"])
-
-    media = spread(docs).mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
+    media = _gradient_media(_engine(spark, sf_dir), [
+        (pc.encode_gray, "image/png"),
+        (pc.encode_gray_bmp, "image/bmp"),
+        (pc.encode_gray_pgm, "image/x-portable-graymap"),
+        (pc.encode_gray_gif, "image/gif")])
     feats = multimodal.extract_features(media, batch_decode=True)
     return feats.select("doc_id", "media_type", "mean_luma")
 
@@ -844,40 +863,20 @@ def multimodal_decode_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and fails the hash.",
 )
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
+    from nosql_join_stream_spark.operators import jpeg_codec as jc
+
     e = _engine(spark, sf_dir)
     docs = e.table("documents").select("doc_id")
-
-    def plant(batches):
-        import numpy as _np
-        import pandas as _pd
-        from nosql_join_stream_spark.operators import jpeg_codec as _jc
-        one = _np.ones((8, 8), dtype=_np.int64)
-        encs = [lambda a: _jc.encode_gray_jpeg(a, quant=one),
-                lambda a: _jc.encode_gray_jpeg(a, quant=one,
-                                               restart_interval=2),
-                lambda a: _jc.encode_gray_jpeg_as_ycbcr420(a, quant=one),
-                lambda a: _jc.encode_gray_jpeg_progressive(
-                    a, quant=one, bands=((1, 5), (6, 63)))]
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                w, h = int(did) % 32 + 8, int(did) % 16 + 8
-                arr = ((int(did) * 7
-                        + _np.arange(w * h, dtype=_np.int64)) % 256) \
-                    .astype(_np.uint8).reshape(h, w)
-                rows.append((int(did), encs[int(did) % 4](arr),
-                             "image/jpeg", w, h, 1))
-            yield _pd.DataFrame(rows, columns=[
-                "doc_id", "payload", "media_type", "width", "height",
-                "n_frames"])
-
-    # the corpus lands as one parquet file at small sf → one partition,
-    # and AQE would coalesce a column-only repartition of 5k rows right
-    # back to one task; the Python encode+decode kernels are the cost
-    # here and parallelize per row, so force an EXPLICIT task count
-    # (AQE honors user-numbered repartitions)
-    media = (spread(docs)
-             .mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA))
+    one = np.ones((8, 8), dtype=np.int64)
+    media = _gradient_media(e, [
+        (partial(jc.encode_gray_jpeg, quant=one), "image/jpeg"),
+        (partial(jc.encode_gray_jpeg, quant=one, restart_interval=2),
+         "image/jpeg"),
+        (partial(jc.encode_gray_jpeg_as_ycbcr420, quant=one), "image/jpeg"),
+        (partial(jc.encode_gray_jpeg_progressive, quant=one,
+                 bands=((1, 5), (6, 63))), "image/jpeg")])
     feats = (multimodal.extract_features(media, batch_decode=True)
              .select("doc_id", F.col("mean_luma").alias("__decoded")))
     src = (docs
@@ -2899,11 +2898,8 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "witness boolean.",
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
     exact = similarity.cosine_topk(queries, corpus, k=5)
     pq = similarity.ann_ivfpq_topk(queries, corpus, k=5)
     return _ann_recall_witness(exact, pq, 0.4, "pq_recall_ok")
@@ -3969,11 +3965,8 @@ def mine_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deterministic).",
 )
 def ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
     # standing-index semantics: build once per process (keyed by sf_dir),
     # every later invocation is a pure pruned probe — the steady state
     # this operator exists to demonstrate
@@ -4003,11 +3996,8 @@ def ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exactness + file-level isolation pinned in tests.",
 )
 def ann_ivf_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
     tag = sf_tag(sf_dir)
     loc = artifact_dir("nsjs_ivf_app", tag)
 
@@ -4101,11 +4091,9 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
         "selection engine-invariant).",
 )
 def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = spread(emb.select(F.col("vec_id").alias("c_id"), "embedding"))
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
+    corpus = spread(corpus)
     return similarity.mmr_topk(queries, corpus, k=5, pool=20, lam=0.7)
 
 
@@ -4127,11 +4115,8 @@ def retrieval_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recall witness.",
 )
 def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding", "label")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"), "label")
     tag = sf_tag(sf_dir)
     loc = artifact_dir("nsjs_ivf_flt", tag)
     ivf = partial(similarity.ann_ivf_partitioned, corpus=corpus, k=5,
@@ -4165,21 +4150,16 @@ def stream_ann_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.streaming.log_stream import (
         EMBEDDINGS_SCHEMA, next_run_id, read_table_stream, stream_ann_probe)
 
-    e = _engine(spark, sf_dir)
-    emb = e.table("embeddings")
-    queries = emb.filter(F.col("vec_id") < 10) \
-                 .select(F.col("vec_id").alias("q_id"), "embedding")
-    corpus = emb.select(F.col("vec_id").alias("c_id"), "embedding")
+    queries, corpus = _ann_inputs(
+        _engine(spark, sf_dir).table("embeddings"))
     tag = sf_tag(sf_dir)
     loc = artifact_dir("nsjs_ivf_strm", tag)
     sinks.standing(loc, lambda: similarity.ann_ivf_partitioned(
         queries.limit(0), corpus, k=5, n_cells=16, nprobe=4, location=loc,
         rebuild=True))
     run_dir = artifact_dir("nsjs_annprobe", str(next_run_id()))
-    qstream = (read_table_stream(spark, table_path(sf_dir, "embeddings"),
-                                 EMBEDDINGS_SCHEMA)
-               .filter(F.col("vec_id") < 10)
-               .select(F.col("vec_id").alias("q_id"), "embedding"))
+    qstream, _ = _ann_inputs(read_table_stream(
+        spark, table_path(sf_dir, "embeddings"), EMBEDDINGS_SCHEMA))
     stream_ann_probe(qstream, loc, os.path.join(run_dir, "out"),
                      os.path.join(run_dir, "ckpt"), k=5, nprobe=4)
     probe = (spark.read.parquet(os.path.join(run_dir, "out"))
@@ -5291,6 +5271,25 @@ def pyds_document_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("source").isin("src3", "src7", "src11"))
 
 
+def _write_json_docs(e, prefix: str, parts: int = 4, **options) -> str:
+    """Write the documents table THROUGH the json_docs writer into a
+    fresh ``artifact_dir(prefix, sf tag)`` as ``parts`` doc_id-range
+    files (disjoint per-file id ranges, so the commit-time sidecar
+    prunes range probes), n_chars packed into the schemaless props;
+    ``options`` go to the writer.  Returns the collection dir."""
+    from nosql_join_stream_spark.pydocsource import register_json_docs
+
+    register_json_docs(e.spark)
+    d = artifact_dir(prefix, sf_tag(e.sf_dir))
+    (e.table("documents")
+     .repartitionByRange(parts, F.col("doc_id"))
+     .select("doc_id", "source", "lang", "text",
+             F.to_json(F.struct("n_chars")).alias("props"))
+     .write.format("json_docs").option("path", d).options(**options)
+     .mode("overwrite").save())
+    return d
+
+
 @register(
     "pyds_roundtrip_write",
     """
@@ -5315,19 +5314,8 @@ def pyds_document_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "range probes with no extra stats pass.",
 )
 def pyds_roundtrip_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nosql_join_stream_spark.pydocsource import register_json_docs
-
     e = _engine(spark, sf_dir)
-    register_json_docs(spark)
-    tag = sf_tag(sf_dir)
-    d = artifact_dir("nsjs_pydsw", tag)
-    (e.table("documents")
-     .repartitionByRange(4, F.col("doc_id"))
-     .select("doc_id", "source", "lang", "text",
-             F.to_json(F.struct("n_chars")).alias("props"))
-     .write.format("json_docs").option("path", d)
-     .mode("overwrite").save())
-    return e.load(d, fmt="json_docs")
+    return e.load(_write_json_docs(e, "nsjs_pydsw"), fmt="json_docs")
 
 
 @register(
@@ -5392,19 +5380,10 @@ def pyds_stream_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "so file pruning survives compaction without a re-stat pass.",
 )
 def pyds_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nosql_join_stream_spark.pydocsource import (compact_json_docs,
-                                                     register_json_docs)
+    from nosql_join_stream_spark.pydocsource import compact_json_docs
 
     e = _engine(spark, sf_dir)
-    register_json_docs(spark)
-    tag = sf_tag(sf_dir)
-    d = artifact_dir("nsjs_pydsc", tag)
-    (e.table("documents")
-     .repartitionByRange(8, F.col("doc_id"))
-     .select("doc_id", "source", "lang", "text",
-             F.to_json(F.struct("n_chars")).alias("props"))
-     .write.format("json_docs").option("path", d)
-     .mode("overwrite").save())
+    d = _write_json_docs(e, "nsjs_pydsc", parts=8)
     res = compact_json_docs(d)
     if res["files_after"] != 1:  # loud: a silent no-op would still
         raise RuntimeError(       # pass the oracle row-for-row
@@ -5443,18 +5422,8 @@ def pyds_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pyds_parse_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from nosql_join_stream_spark.pydocsource import register_json_docs
-
     e = _engine(spark, sf_dir)
-    register_json_docs(spark)
-    tag = sf_tag(sf_dir)
-    d = artifact_dir("nsjs_pydsm", tag)
-    (e.table("documents")
-     .repartitionByRange(4, F.col("doc_id"))
-     .select("doc_id", "source", "lang", "text",
-             F.to_json(F.struct("n_chars")).alias("props"))
-     .write.format("json_docs").option("path", d)
-     .mode("overwrite").save())
+    d = _write_json_docs(e, "nsjs_pydsm")
     # plant the corrupt tail ABOVE every written name (the rolled-log
     # shape: a truncated last file from a crashed producer)
     with open(os.path.join(d, "zzzz-corrupt.jsonl"), "w",
@@ -5485,18 +5454,8 @@ def pyds_parse_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pinned in tests.",
 )
 def pyds_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nosql_join_stream_spark.pydocsource import register_json_docs
-
     e = _engine(spark, sf_dir)
-    register_json_docs(spark)
-    tag = sf_tag(sf_dir)
-    d = artifact_dir("nsjs_pydsg", tag)
-    (e.table("documents")
-     .repartitionByRange(4, F.col("doc_id"))
-     .select("doc_id", "source", "lang", "text",
-             F.to_json(F.struct("n_chars")).alias("props"))
-     .write.format("json_docs").option("path", d)
-     .option("compression", "gzip").mode("overwrite").save())
+    d = _write_json_docs(e, "nsjs_pydsg", compression="gzip")
     return e.load(d, fmt="json_docs")
 
 
@@ -6650,6 +6609,31 @@ def cdc_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "is_current", "n_events"))
 
 
+def _scd2_state_dim(ev: DataFrame) -> DataFrame:
+    """The users' state dimension both point-in-time twins join
+    against: SCD2 history over the non-purchase events, with
+    zero-length intervals (same-ts collapses) filtered so valid_from
+    is unique per key."""
+    dim = sinks.scd2_history(
+        ev.filter(F.col("event_type") != "purchase")
+          .select("user_id", "ts", "event_id", "event_type"),
+        "user_id", ["ts", "event_id"], "event_type")
+    return dim.filter(F.col("valid_to").isNull()
+                      | (F.col("valid_from") < F.col("valid_to")))
+
+
+def _scd2_pit_rows(out: DataFrame) -> DataFrame:
+    """Output projection of the point-in-time twins: matched
+    purchases only (inner semantics), stamped with the state and its
+    start."""
+    return (out.filter(F.col("asof_event_type").isNotNull())
+            .select(F.col("event_id").alias("purchase_id"),
+                    "user_id", "ts",
+                    F.round("value", 2).alias("value"),
+                    F.col("asof_event_type").alias("state_at_purchase"),
+                    F.col("asof_valid_from").alias("state_since")))
+
+
 @register(
     "cdc_scd2_point_in_time",
     """
@@ -6705,25 +6689,13 @@ def cdc_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nosql_join_stream_spark.operators.join import asof_join
 
-    e = _engine(spark, sf_dir)
-    ev = e.table("events")
-    dim = sinks.scd2_history(
-        ev.filter(F.col("event_type") != "purchase")
-          .select("user_id", "ts", "event_id", "event_type"),
-        "user_id", ["ts", "event_id"], "event_type")
-    dim = dim.filter(F.col("valid_to").isNull()
-                     | (F.col("valid_from") < F.col("valid_to")))
+    ev = _engine(spark, sf_dir).table("events")
     fact = (ev.filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts", "value"))
-    out = asof_join(fact, dim, on="user_id", left_ts="ts",
+    out = asof_join(fact, _scd2_state_dim(ev), on="user_id", left_ts="ts",
                     right_ts="valid_from", payload=["event_type"],
                     direction="backward")
-    return (out.filter(F.col("asof_event_type").isNotNull())
-            .select(F.col("event_id").alias("purchase_id"),
-                    "user_id", "ts",
-                    F.round("value", 2).alias("value"),
-                    F.col("asof_event_type").alias("state_at_purchase"),
-                    F.col("asof_valid_from").alias("state_since")))
+    return _scd2_pit_rows(out)
 
 
 def _retrieval_eval_oracle(n_queries: int = 10, k: int = 10,
@@ -6954,14 +6926,7 @@ def stream_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         next_run_id, read_log_stream, stream_scd2_enrich)
 
     run_dir = artifact_dir("nsjs_scd2pit", str(next_run_id()))
-    e = _engine(spark, sf_dir)
-    ev = e.table("events")
-    dim = sinks.scd2_history(
-        ev.filter(F.col("event_type") != "purchase")
-          .select("user_id", "ts", "event_id", "event_type"),
-        "user_id", ["ts", "event_id"], "event_type")
-    dim = dim.filter(F.col("valid_to").isNull()
-                     | (F.col("valid_from") < F.col("valid_to")))
+    dim = _scd2_state_dim(_engine(spark, sf_dir).table("events"))
     fact_stream = (read_log_stream(spark, table_path(sf_dir, "events"))
                    .filter(F.col("event_type") == "purchase")
                    .select("event_id", "user_id", "ts", "value"))
@@ -6969,13 +6934,7 @@ def stream_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
                        os.path.join(run_dir, "ckpt"),
                        on="user_id", left_ts="ts",
                        right_ts="valid_from", payload=["event_type"])
-    back = spark.read.parquet(os.path.join(run_dir, "out"))
-    return (back.filter(F.col("asof_event_type").isNotNull())
-            .select(F.col("event_id").alias("purchase_id"),
-                    "user_id", "ts",
-                    F.round("value", 2).alias("value"),
-                    F.col("asof_event_type").alias("state_at_purchase"),
-                    F.col("asof_valid_from").alias("state_since")))
+    return _scd2_pit_rows(spark.read.parquet(os.path.join(run_dir, "out")))
 
 
 def _hard_negatives_oracle(n_queries: int = 10, k_pos: int = 5,
@@ -7170,7 +7129,9 @@ def _bitext_planted_inputs(e):
     return emb.unionByName(twins), langs
 
 
-def _bitext_attach_langs(pairs, langs):
+def _bitext_attach_langs(pairs, langs, *extra: str):
+    """Cross-language pairs only, each side's lang attached, planted
+    twins flagged; ``extra`` columns ride between sim and is_planted."""
     return (pairs
             .join(langs.select(F.col("doc_id").alias("id1"),
                                F.col("lang").alias("lang1")), "id1")
@@ -7180,8 +7141,8 @@ def _bitext_attach_langs(pairs, langs):
             .withColumn("is_planted",
                         (F.col("id2") == F.col("id1") + F.lit(_BITEXT_OFF))
                         & (F.col("id1") % 17 == 0))
-            .select("id1", "id2", "lang1", "lang2", "sim", "is_planted"))
-
+            .select("id1", "id2", "lang1", "lang2", "sim", *extra,
+                    "is_planted"))
 
 
 @register(
@@ -7444,12 +7405,8 @@ def _wav_plant_kernel():
     """Deterministic WAV plant shared by the audio decode queries:
     mono/stereo by parity, 8-bit every third doc, varying rates,
     extra LIST/INFO chunk every fifth stream (see
-    multimodal_decode_wav's doc).  Returns a NESTED closure so
-    cloudpickle ships it BY VALUE — a module-level kernel in this
-    module would pickle by reference, and an executor importing
-    queries_pipeline directly trips the queries<->queries_pipeline
-    registration cycle (worker-only ImportError; the driver never
-    sees it because it imports queries first)."""
+    multimodal_decode_wav's doc).  A nested closure (the module
+    docstring's pickling rule)."""
 
     def plant(batches):
         import numpy as _np
@@ -7478,6 +7435,37 @@ def _wav_plant_kernel():
             yield _pd.DataFrame(rows, columns=["doc_id", "payload"])
 
     return plant
+
+
+def _wav_decoded(docs: DataFrame) -> DataFrame:
+    """The WAV plant + decode both audio twins run (batch and stream):
+    spread ``docs`` (doc_id), plant one deterministic WAV per row,
+    decode it and emit per-channel integer stats — two mapInPandas
+    passes, the decode kernel a nested closure like the plant."""
+
+    def decode(batches):
+        import pandas as _pd
+        from nosql_join_stream_spark.operators import wav_codec as _wc
+        for pdf in batches:
+            rows = []
+            for did, pay in zip(pdf["doc_id"], pdf["payload"]):
+                arr, rate = _wc.decode_wav(bytes(pay))
+                for st in _wc.waveform_stats(arr):
+                    rows.append((int(did), st["channel"], rate,
+                                 st["n_samples"], st["min_s"],
+                                 st["max_s"], st["sum_s"],
+                                 st["sum_abs"], st["checksum"]))
+            yield _pd.DataFrame(rows, columns=[
+                "doc_id", "channel", "sample_rate", "n_samples",
+                "min_s", "max_s", "sum_s", "sum_abs", "checksum"])
+
+    return (spread(docs)
+            .mapInPandas(_wav_plant_kernel(),
+                         schema="doc_id long, payload binary")
+            .mapInPandas(decode, schema="doc_id long, channel int, "
+                         "sample_rate long, n_samples long, min_s long, "
+                         "max_s long, sum_s long, sum_abs long, "
+                         "checksum long"))
 
 
 _WAV_DECODE_ORACLE = """
@@ -7528,31 +7516,7 @@ _WAV_DECODE_ORACLE = """
 )
 def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    docs = e.table("documents").select("doc_id")
-    plant = _wav_plant_kernel()
-
-    def decode(batches):
-        import pandas as _pd
-        from nosql_join_stream_spark.operators import wav_codec as _wc
-        for pdf in batches:
-            rows = []
-            for did, pay in zip(pdf["doc_id"], pdf["payload"]):
-                arr, rate = _wc.decode_wav(bytes(pay))
-                for st in _wc.waveform_stats(arr):
-                    rows.append((int(did), st["channel"], rate,
-                                 st["n_samples"], st["min_s"],
-                                 st["max_s"], st["sum_s"],
-                                 st["sum_abs"], st["checksum"]))
-            yield _pd.DataFrame(rows, columns=[
-                "doc_id", "channel", "sample_rate", "n_samples",
-                "min_s", "max_s", "sum_s", "sum_abs", "checksum"])
-
-    return (spread(docs)
-            .mapInPandas(plant, schema="doc_id long, payload binary")
-            .mapInPandas(decode, schema="doc_id long, channel int, "
-                         "sample_rate long, n_samples long, min_s long, "
-                         "max_s long, sum_s long, sum_abs long, "
-                         "checksum long"))
+    return _wav_decoded(e.table("documents").select("doc_id"))
 
 
 # --- r14: unigram-LM (SentencePiece-style) token counting ------------------
@@ -8092,31 +8056,8 @@ def stream_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_table_stream(spark, path,
                                spark.read.parquet(path).schema
                                ).select("doc_id")
-    plant = _wav_plant_kernel()
-
-    def decode(batches):
-        import pandas as _pd
-        from nosql_join_stream_spark.operators import wav_codec as _wc
-        for pdf in batches:
-            rows = []
-            for did, pay in zip(pdf["doc_id"], pdf["payload"]):
-                arr, rate = _wc.decode_wav(bytes(pay))
-                for st in _wc.waveform_stats(arr):
-                    rows.append((int(did), st["channel"], rate,
-                                 st["n_samples"], st["min_s"],
-                                 st["max_s"], st["sum_s"],
-                                 st["sum_abs"], st["checksum"]))
-            yield _pd.DataFrame(rows, columns=[
-                "doc_id", "channel", "sample_rate", "n_samples",
-                "min_s", "max_s", "sum_s", "sum_abs", "checksum"])
-
-    dec = (spread(stream)
-           .mapInPandas(plant, schema="doc_id long, payload binary")
-           .mapInPandas(decode, schema="doc_id long, channel int, "
-                        "sample_rate long, n_samples long, min_s long, "
-                        "max_s long, sum_s long, sum_abs long, "
-                        "checksum long"))
-    return run_available_now(dec, "stream_audio_decode", output_mode="append")
+    return run_available_now(_wav_decoded(stream), "stream_audio_decode",
+                             output_mode="append")
 
 
 # --- r14: WebDataset tar shard export --------------------------------------
@@ -8191,6 +8132,27 @@ def export_webdataset_roundtrip(spark: SparkSession,
 
 # --- r14: LM-perplexity quality filtering (CCNet discipline) ----------------
 
+def _ppl_noise_planted(e) -> DataFrame:
+    """documents (doc_id, text) with every 13th doc contaminated by 30
+    UNK-heavy noise tokens — the perplexity twins' planted truth."""
+    return (e.table("documents")
+            .select("doc_id",
+                    F.when(F.col("doc_id") % 13 == 0,
+                           F.concat(F.col("text"),
+                                    F.expr("repeat(' q9z', 30)")))
+                    .otherwise(F.col("text")).alias("text")))
+
+
+def _ppl_keep(t: DataFrame) -> DataFrame:
+    """Per-doc average cost and the keep flag (<= 450 c-nats/token)
+    from a unigram token count, shared by the perplexity twins."""
+    avg = F.expr("total_cost_centinats DIV n_unigram_tokens")
+    return (t.select(F.col("id").alias("doc_id"), "n_unigram_tokens",
+                     avg.alias("avg_cost_centinats"),
+                     (F.col("id") % 13 == 0).alias("is_planted_noise"),
+                     (avg <= 450).alias("keep")))
+
+
 @register(
     "text_quality_unigram_ppl",
     """
@@ -8262,23 +8224,29 @@ def export_webdataset_roundtrip(spark: SparkSession,
 )
 def text_quality_unigram_ppl(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    planted = (e.table("documents")
-               .select("doc_id",
-                       F.when(F.col("doc_id") % 13 == 0,
-                              F.concat(F.col("text"),
-                                       F.expr("repeat(' q9z', 30)")))
-                       .otherwise(F.col("text")).alias("text")))
-    t = text.unigram_token_count(planted, text.UNIGRAM_VOCAB_EN_DEMO,
-                                 "text", "doc_id")
-    avg = F.expr("total_cost_centinats DIV n_unigram_tokens")
-    return (t.select(F.col("id").alias("doc_id"), "n_unigram_tokens",
-                     avg.alias("avg_cost_centinats"),
-                     (F.col("id") % 13 == 0).alias("is_planted_noise"),
-                     (avg <= 450).alias("keep")))
+    planted = _ppl_noise_planted(_engine(spark, sf_dir))
+    return _ppl_keep(text.unigram_token_count(
+        planted, text.UNIGRAM_VOCAB_EN_DEMO, "text", "doc_id"))
 
 
 # --- r14: margin-based bitext mining (ratio-margin criterion) --------------
+
+def _bitext_margin_pairs(pairs: DataFrame, knn: DataFrame) -> DataFrame:
+    """Candidate pairs (id1, id2, sim) whose ratio margin — sim over
+    the mean of both sides' 4-NN cosine sums, ``knn`` (vec_id,
+    knn_sum_micro) in integer micro-units — exceeds 1.5; adds
+    ``margin``."""
+    margin = F.round(
+        F.col("sim") * 8000000 / (F.col("s1") + F.col("s2")), 4)
+    return (pairs
+            .join(knn.select(F.col("vec_id").alias("id1"),
+                             F.col("knn_sum_micro").alias("s1")), "id1")
+            .join(knn.select(F.col("vec_id").alias("id2"),
+                             F.col("knn_sum_micro").alias("s2")), "id2")
+            .withColumn("margin", margin)
+            .filter(F.col("margin") > 1.5)
+            .select("id1", "id2", "sim", "margin"))
+
 
 _BITEXT_MARGIN_ORACLE = f"""
     WITH allv AS (
@@ -8354,30 +8322,8 @@ def mine_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          "embedding", k=4)
     pairs = similarity.embedding_near_dup_pairs_banded(
         allv, "vec_id", "embedding", threshold=0.9)
-    margin = F.round(
-        F.col("sim") * 8000000 / (F.col("s1") + F.col("s2")), 4)
-    scored = (pairs
-              .join(knn.select(F.col("vec_id").alias("id1"),
-                               F.col("knn_sum_micro").alias("s1")),
-                    "id1")
-              .join(knn.select(F.col("vec_id").alias("id2"),
-                               F.col("knn_sum_micro").alias("s2")),
-                    "id2")
-              .withColumn("margin", margin)
-              .filter(F.col("margin") > 1.5)
-              .select("id1", "id2", "sim", "margin"))
-    return (scored
-            .join(langs.select(F.col("doc_id").alias("id1"),
-                               F.col("lang").alias("lang1")), "id1")
-            .join(langs.select(F.col("doc_id").alias("id2"),
-                               F.col("lang").alias("lang2")), "id2")
-            .filter(F.col("lang1") != F.col("lang2"))
-            .withColumn("is_planted",
-                        (F.col("id2") == F.col("id1")
-                         + F.lit(_BITEXT_OFF))
-                        & (F.col("id1") % 17 == 0))
-            .select("id1", "id2", "lang1", "lang2", "sim", "margin",
-                    "is_planted"))
+    return _bitext_attach_langs(_bitext_margin_pairs(pairs, knn), langs,
+                                "margin")
 
 
 # The IVF-denominator variant compares the accepted SET, not margin
@@ -8459,33 +8405,11 @@ def mine_bitext_margin_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, k=4, nprobe=8, location=loc, rebuild=False)
     # integer micro-unit sums — same grain as exact_knn_avg_micro, so
     # the margin arithmetic below is float-order-hazard-free
-    knn = (knn4.groupBy("q_id")
+    knn = (knn4.groupBy(F.col("q_id").alias("vec_id"))
            .agg(F.sum(F.round(F.col("sim") * 1e6, 0).cast("long"))
                 .alias("knn_sum_micro")))
-    margin = F.round(
-        F.col("sim") * 8000000 / (F.col("s1") + F.col("s2")), 4)
-    scored = (pairs
-              .join(knn.select(F.col("q_id").alias("id1"),
-                               F.col("knn_sum_micro").alias("s1")),
-                    "id1")
-              .join(knn.select(F.col("q_id").alias("id2"),
-                               F.col("knn_sum_micro").alias("s2")),
-                    "id2")
-              .withColumn("margin", margin)
-              .filter(F.col("margin") > 1.5)
-              .select("id1", "id2", "sim"))
-    return (scored
-            .join(langs.select(F.col("doc_id").alias("id1"),
-                               F.col("lang").alias("lang1")), "id1")
-            .join(langs.select(F.col("doc_id").alias("id2"),
-                               F.col("lang").alias("lang2")), "id2")
-            .filter(F.col("lang1") != F.col("lang2"))
-            .withColumn("is_planted",
-                        (F.col("id2") == F.col("id1")
-                         + F.lit(_BITEXT_OFF))
-                        & (F.col("id1") % 17 == 0))
-            .select("id1", "id2", "lang1", "lang2", "sim",
-                    "is_planted"))
+    return _bitext_attach_langs(
+        _bitext_margin_pairs(pairs, knn).drop("margin"), langs)
 
 
 @register(
@@ -8812,13 +8736,7 @@ from nosql_join_stream_spark.queries import REGISTRY as _REGISTRY  # noqa: E402
 )
 def text_quality_ppl_standing(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    planted = (e.table("documents")
-               .select("doc_id",
-                       F.when(F.col("doc_id") % 13 == 0,
-                              F.concat(F.col("text"),
-                                       F.expr("repeat(' q9z', 30)")))
-                       .otherwise(F.col("text")).alias("text")))
+    planted = _ppl_noise_planted(_engine(spark, sf_dir))
     loc = artifact_dir("nsjs_ppl_tbl", sf_tag(sf_dir))
     # bootstrap syncs the vocabulary once per (process, sf); every
     # invocation serves in one pass with the coverage guard
@@ -8826,12 +8744,7 @@ def text_quality_ppl_standing(spark: SparkSession,
                     text.UNIGRAM_VOCAB_EN_DEMO, "text", "doc_id",
                     location=loc)
     sinks.standing(loc, lambda: count(sync=True))
-    t = count(sync=False)
-    avg = F.expr("total_cost_centinats DIV n_unigram_tokens")
-    return (t.select(F.col("id").alias("doc_id"), "n_unigram_tokens",
-                     avg.alias("avg_cost_centinats"),
-                     (F.col("id") % 13 == 0).alias("is_planted_noise"),
-                     (avg <= 450).alias("keep")))
+    return _ppl_keep(count(sync=False))
 
 
 # --- r15: Gopher repetition filter, redirect chains, anchor text -----------
@@ -8936,6 +8849,40 @@ _REPETITION_ORACLE = f"""
     """
 
 
+def _repetition_report(docs: DataFrame) -> DataFrame:
+    """Plant the three repetition families into ``docs`` (doc_id,
+    text) and report (the batch and stream repetition filters share
+    this body and _REPETITION_ORACLE): docs %5 re-append their first
+    10-word block on an aligned boundary, %7 stutter their first
+    2-gram x12, %11 repeat their first 5-gram x3."""
+    t = F.trim(F.col("text"))
+    w0 = F.split(t, " ")
+
+    def _first(k: int):
+        return F.array_join(F.slice(w0, 1, k), " ")
+
+    planted = docs.select(
+        "doc_id",
+        F.concat(
+            t,
+            F.when(F.col("doc_id") % 5 == 0,
+                   F.concat(F.expr(
+                       "repeat(' pad', (10 - size(split(trim(text), ' '))"
+                       " % 10) % 10)"),
+                       F.lit(" "), _first(10)))
+             .otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 7 == 0,
+                   F.expr("repeat(' ' || array_join(slice("
+                          "split(trim(text), ' '), 1, 2), ' '), 12)"))
+             .otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 11 == 0,
+                   F.expr("repeat(' ' || array_join(slice("
+                          "split(trim(text), ' '), 1, 5), ' '), 3)"))
+             .otherwise(F.lit(""))).alias("text"))
+    return (text.repetition_report(planted, "text", "doc_id")
+            .withColumnRenamed("id", "doc_id"))
+
+
 @register(
     "text_repetition_filter",
     _REPETITION_ORACLE,
@@ -8958,32 +8905,7 @@ _REPETITION_ORACLE = f"""
 )
 def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _engine(spark, sf_dir)
-    t = F.trim(F.col("text"))
-    w0 = F.split(t, " ")
-
-    def _first(k: int):
-        return F.array_join(F.slice(w0, 1, k), " ")
-
-    planted = spread(e.table("documents")).select(
-        "doc_id",
-        F.concat(
-            t,
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.expr(
-                       "repeat(' pad', (10 - size(split(trim(text), ' '))"
-                       " % 10) % 10)"),
-                       F.lit(" "), _first(10)))
-             .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.expr("repeat(' ' || array_join(slice("
-                          "split(trim(text), ' '), 1, 2), ' '), 12)"))
-             .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0,
-                   F.expr("repeat(' ' || array_join(slice("
-                          "split(trim(text), ' '), 1, 5), ' '), 3)"))
-             .otherwise(F.lit(""))).alias("text"))
-    return (text.repetition_report(planted, "text", "doc_id")
-            .withColumnRenamed("id", "doc_id"))
+    return _repetition_report(spread(e.table("documents")))
 
 
 _REDIRECT_ORACLE = """
@@ -9239,33 +9161,8 @@ def stream_repetition_filter(spark: SparkSession,
     # discipline); the batch operator itself stays Exchange-free
     docs = spread(read_table_stream(spark, table_path(sf_dir, "documents"),
                                     DOCUMENTS_SCHEMA))
-    t = F.trim(F.col("text"))
-    w0 = F.split(t, " ")
-
-    def _first(k: int):
-        return F.array_join(F.slice(w0, 1, k), " ")
-
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            t,
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.expr(
-                       "repeat(' pad', (10 - size(split(trim(text), ' '))"
-                       " % 10) % 10)"),
-                       F.lit(" "), _first(10)))
-             .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.expr("repeat(' ' || array_join(slice("
-                          "split(trim(text), ' '), 1, 2), ' '), 12)"))
-             .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0,
-                   F.expr("repeat(' ' || array_join(slice("
-                          "split(trim(text), ' '), 1, 5), ' '), 3)"))
-             .otherwise(F.lit(""))).alias("text"))
-    out = (text.repetition_report(planted, "text", "doc_id")
-           .withColumnRenamed("id", "doc_id"))
-    return run_available_now(out, "stream_rep", output_mode="append")
+    return run_available_now(_repetition_report(docs), "stream_rep",
+                             output_mode="append")
 
 
 _DHASH_ORACLE = """
@@ -9326,36 +9223,11 @@ _DHASH_ORACLE = """
     """
 
 
-@register(
-    "multimodal_image_dhash",
-    _DHASH_ORACLE,
-    doc="Perceptual image dedup (multimodal.image_dhash): dHash over "
-        "REAL encoded-then-decoded PNG bytes — the visual near-dup "
-        "signature sha256 payload dedup cannot see (re-encodes and "
-        "mild noise keep the hash within a few bits).  Contract is "
-        "integer-exact end to end: block sums onto a 9x8 grid (cell "
-        "= (x*9) DIV w), bits by CROSS-MULTIPLIED sum/area compares "
-        "(no division, no float), packed as two uint32 halves.  "
-        "Plant: per-doc varied-structure gradients (direction / "
-        "frequency / shear from doc_id) + a noisy twin (+10M id) "
-        "for %17 docs with every 97th pixel xor-1 perturbed — twins "
-        "land <=1 bit away, organic hashes spread (median ~31/64; "
-        "structure-identical patterns can still collide — dHash IS "
-        "a structure hash).  "
-        "The oracle recomputes the ENTIRE hash from the closed-form "
-        "pixel formulas, so any bit error in PNG encode, zlib, "
-        "decode, cell mapping, comparison or packing shifts a hash "
-        "and fails the value gate.  One mapInPandas decode+hash "
-        "pass; the base join is id-keyed; at 100 TB exact-hash "
-        "grouping and banded hamming join both run on the 16-byte "
-        "signature, never pixels.",
-)
-def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    # the id table is KB-sized parquet (1-2 scan splits) but the plant
-    # does per-row PNG encode work — spread it across the cores first
-    # (the _planted_link_edges discipline)
-    docs = spread(e.table("documents").select("doc_id"))
+def _dhash_plant_kernel():
+    """The dHash image plant: per-doc varied-structure gradient PNGs
+    plus a noisy twin (+10M id) for every 17th doc (see
+    multimodal_image_dhash's doc).  A nested closure (the module
+    docstring's pickling rule)."""
 
     def plant(batches):
         import numpy as _np
@@ -9390,8 +9262,47 @@ def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "payload", "media_type", "width", "height",
                 "n_frames"])
 
-    media = docs.mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
-    d = multimodal.image_dhash(media)
+    return plant
+
+
+def _dhash_signatures(e) -> DataFrame:
+    """dHash signatures of the planted images, shared by the per-image
+    and pair-mining queries.  The id table is KB-sized parquet (1-2
+    scan splits) but the plant does per-row PNG encode work, so it is
+    spread across the cores first (the _planted_link_edges
+    discipline)."""
+    docs = spread(e.table("documents").select("doc_id"))
+    return multimodal.image_dhash(
+        docs.mapInPandas(_dhash_plant_kernel(),
+                         schema=multimodal.MEDIA_SCHEMA))
+
+
+@register(
+    "multimodal_image_dhash",
+    _DHASH_ORACLE,
+    doc="Perceptual image dedup (multimodal.image_dhash): dHash over "
+        "REAL encoded-then-decoded PNG bytes — the visual near-dup "
+        "signature sha256 payload dedup cannot see (re-encodes and "
+        "mild noise keep the hash within a few bits).  Contract is "
+        "integer-exact end to end: block sums onto a 9x8 grid (cell "
+        "= (x*9) DIV w), bits by CROSS-MULTIPLIED sum/area compares "
+        "(no division, no float), packed as two uint32 halves.  "
+        "Plant: per-doc varied-structure gradients (direction / "
+        "frequency / shear from doc_id) + a noisy twin (+10M id) "
+        "for %17 docs with every 97th pixel xor-1 perturbed — twins "
+        "land <=1 bit away, organic hashes spread (median ~31/64; "
+        "structure-identical patterns can still collide — dHash IS "
+        "a structure hash).  "
+        "The oracle recomputes the ENTIRE hash from the closed-form "
+        "pixel formulas, so any bit error in PNG encode, zlib, "
+        "decode, cell mapping, comparison or packing shifts a hash "
+        "and fails the value gate.  One mapInPandas decode+hash "
+        "pass; the base join is id-keyed; at 100 TB exact-hash "
+        "grouping and banded hamming join both run on the 16-byte "
+        "signature, never pixels.",
+)
+def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = _dhash_signatures(_engine(spark, sf_dir))
     base = d.filter(F.col("doc_id") < 10_000_000).select(
         F.col("doc_id").alias("_b"),
         F.col("hash_hi").alias("_bhi"), F.col("hash_lo").alias("_blo"))
@@ -9441,39 +9352,8 @@ _DHASH_PAIRS_ORACLE = _DHASH_ORACLE.replace(
 )
 def multimodal_image_dhash_pairs(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    e = _engine(spark, sf_dir)
-    docs = spread(e.table("documents").select("doc_id"))
-
-    def plant(batches):
-        import numpy as _np
-        import pandas as _pd
-        from nosql_join_stream_spark.operators import png_codec as _pc
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = did % 32 + 8, did % 16 + 8
-                i = _np.arange(w * h, dtype=_np.int64)
-                x, y = i % w, i // w
-                base = ((did * 7 + 65536
-                         + (1 - 2 * (did % 2)) * x * (did % 13 + 1)
-                         + y * 3 * (did % 11 + 1)
-                         + x * y * (did % 5)) % 256)
-                rows.append((did, _pc.encode_gray(
-                    base.astype(_np.uint8).reshape(h, w)),
-                    "image/png", w, h, 1))
-                if did % 17 == 0:
-                    tw = base ^ (_np.arange(w * h) % 97 == 0)
-                    rows.append((did + 10_000_000, _pc.encode_gray(
-                        tw.astype(_np.uint8).reshape(h, w)),
-                        "image/png", w, h, 1))
-            yield _pd.DataFrame(rows, columns=[
-                "doc_id", "payload", "media_type", "width", "height",
-                "n_frames"])
-
-    media = docs.mapInPandas(plant, schema=multimodal.MEDIA_SCHEMA)
-    d = multimodal.image_dhash(media).localCheckpoint(eager=False)
+    d = _dhash_signatures(_engine(spark, sf_dir)) \
+        .localCheckpoint(eager=False)
     bands = d.select(
         F.col("doc_id").alias("img_id"), "hash_hi", "hash_lo",
         F.explode(F.array(

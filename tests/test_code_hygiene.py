@@ -130,3 +130,34 @@ def test_ivf_decisions_have_one_home():
         {"_probe_kernel"}
     assert _top_level_functions_with(path, 'orderBy(F.col("sim").desc()') \
         == {"_rank_topk", "ann_ivf_probe"}
+
+
+def _duplicate_bodies(root: str, min_lines: int = 8) -> list[list[str]]:
+    """Groups of ``file:line name`` whose function bodies (docstring
+    left out, nested functions included) are AST-identical and span at
+    least ``min_lines`` lines."""
+    seen: dict[str, list[str]] = {}
+    for f in sorted(glob.glob(os.path.join(root, "**", "*.py"),
+                              recursive=True)):
+        for fn in ast.walk(ast.parse(open(f).read(), f)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            body = fn.body
+            if (isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                body = body[1:]
+            if not body or \
+                    body[-1].end_lineno - body[0].lineno + 1 < min_lines:
+                continue
+            key = "\n".join(ast.dump(s) for s in body)
+            seen.setdefault(key, []).append(
+                f"{os.path.relpath(f, root)}:{fn.lineno} {fn.name}")
+    return [v for v in seen.values() if len(v) > 1]
+
+
+def test_no_two_function_bodies_are_identical():
+    """One body per twin: a batch/stream/standing twin calls the shared
+    helper instead of carrying a hand copy of its plant or transform."""
+    dups = _duplicate_bodies(PKG)
+    assert not dups, f"AST-identical function bodies: {dups}"

@@ -246,24 +246,30 @@ def test_webdataset_shards_deterministic_and_readable(spark, tmp_path):
                                 "text", 0)
 
 
-def test_webdataset_stale_shards_cleared(spark, tmp_path):
+@pytest.mark.parametrize("ext", ["tar", "tfrecord"])
+def test_container_stale_shards_cleared(spark, tmp_path, ext):
     """Re-exporting into the same directory with fewer shards must
-    not leave stale shard-*.tar behind (a zero-row group writes no
-    file, so leftovers would corrupt the read side)."""
+    not leave stale shard files behind (a zero-row group writes no
+    file, so leftovers would corrupt the read side) — for both
+    containers, which share one writer."""
     import glob
     import os
 
     from nosql_join_stream_spark.operators.export_shards import (
-        read_webdataset_shards, write_webdataset_shards)
+        read_tfrecord_shards, read_webdataset_shards,
+        write_tfrecord_shards, write_webdataset_shards)
 
+    write, read = {"tar": (write_webdataset_shards, read_webdataset_shards),
+                   "tfrecord": (write_tfrecord_shards,
+                                read_tfrecord_shards)}[ext]
     df = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(12)], "doc_id long, text string")
     d = str(tmp_path / "re")
-    write_webdataset_shards(df, d, "doc_id", "text", 8).collect()
-    assert len(glob.glob(os.path.join(d, "shard-*.tar"))) == 8
-    write_webdataset_shards(df, d, "doc_id", "text", 3).collect()
-    assert len(glob.glob(os.path.join(d, "shard-*.tar"))) == 3
-    back = read_webdataset_shards(spark, d)
+    write(df, d, "doc_id", "text", 8).collect()
+    assert len(glob.glob(os.path.join(d, f"shard-*.{ext}"))) == 8
+    write(df, d, "doc_id", "text", 3).collect()
+    assert len(glob.glob(os.path.join(d, f"shard-*.{ext}"))) == 3
+    back = read(spark, d)
     assert back.count() == 12
 
 
@@ -334,3 +340,25 @@ def test_tfrecord_shards_deterministic_framing_and_roundtrip(
     src = {r.doc_id: r.text for r in df.collect()}
     assert set(rows) == set(src)
     assert all(rows[i] == (i % 2, src[i]) for i in rows)
+
+
+def test_tfrecord_reader_raises_on_flipped_byte(spark, tmp_path):
+    """The shard reader verifies both crcs per record: one flipped
+    payload byte in a written shard fails the collect, never a silent
+    short read."""
+    import os
+
+    from nosql_join_stream_spark.operators.export_shards import (
+        read_tfrecord_shards, write_tfrecord_shards)
+
+    df = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(6)], "doc_id long, text string")
+    out = str(tmp_path / "tfr")
+    write_tfrecord_shards(df, out, "doc_id", "text", n_shards=1).collect()
+    path = os.path.join(out, "shard-00000.tfrecord")
+    raw = bytearray(open(path, "rb").read())
+    raw[12] ^= 0xFF                      # first record's first data byte
+    with open(path, "wb") as fh:
+        fh.write(bytes(raw))
+    with pytest.raises(Exception, match="bad data crc"):
+        read_tfrecord_shards(spark, out).collect()

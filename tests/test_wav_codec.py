@@ -245,8 +245,6 @@ def test_mulaw_table_spec_values():
     assert W.MULAW_TABLE[0x80] == 32124
     assert W.MULAW_TABLE[0xFF] == 0
     assert W.MULAW_TABLE[0x7F] == 0
-    assert W.mulaw_decode(np.array([0, 0x80], dtype=np.uint8)).tolist() \
-        == [-32124, 32124]
 
 
 def test_decode_audio_dispatch_errors():

@@ -58,22 +58,21 @@ def _stage_report(app_id: str, since_ms: float):
     for path in files:
         with open(path) as fh:
             lines.extend(fh)
-    if True:
-        for line in lines:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
+    for line in lines:
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if ev.get("Event") == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sub = si.get("Submission Time")
+            if sub is None or sub < since_ms:
                 continue
-            if ev.get("Event") == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sub = si.get("Submission Time")
-                if sub is None or sub < since_ms:
-                    continue
-                stages[si["Stage ID"]] = {
-                    "name": si["Stage Name"].split("\n")[0][:70],
-                    "tasks": si["Number of Tasks"],
-                    "wall_ms": si.get("Completion Time", sub) - sub,
-                }
+            stages[si["Stage ID"]] = {
+                "name": si["Stage Name"].split("\n")[0][:70],
+                "tasks": si["Number of Tasks"],
+                "wall_ms": si.get("Completion Time", sub) - sub,
+            }
     return sorted(stages.items(), key=lambda kv: -kv[1]["wall_ms"])
 
 
